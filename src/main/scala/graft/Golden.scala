@@ -22,20 +22,36 @@ import graft.pipeline.RawRetailPipeline
 object Golden {
 
   def config(): GoldenFixture.Config =
-    sys.env.get("SPARK_GRAFT_GOLDEN_ROWS").map(_.toInt) match {
-      case None => GoldenFixture.Config()
-      case Some(n) =>
-        val full = GoldenFixture.Config()
-        val s1 = (n.toLong * full.rowsSheet1 / (full.rowsSheet1 + full.rowsSheet2)).toInt
-        GoldenFixture.Config(
-          rowsSheet1 = s1, rowsSheet2 = n - s1,
-          nProducts = math.max(60, n / 200),
-          nCustomers = math.max(50, n / 180))
-    }
+    sys.env.get("SPARK_GRAFT_GOLDEN_ROWS").map(_.toInt)
+      .fold(GoldenFixture.Config())(scaled)
+
+  /** The full workbook's shape scaled down to `n` rows. */
+  def scaled(n: Int): GoldenFixture.Config = {
+    val full = GoldenFixture.Config()
+    val s1 = (n.toLong * full.rowsSheet1 / (full.rowsSheet1 + full.rowsSheet2)).toInt
+    GoldenFixture.Config(
+      rowsSheet1 = s1, rowsSheet2 = n - s1,
+      nProducts = math.max(60, n / 200),
+      nCustomers = math.max(50, n / 180))
+  }
 
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("golden_out")
-    val cfg = config()
+    val spark = graft.engine.Graft.session("graft-golden")
+    val failures = try run(spark, outDir, config()) finally spark.stop()
+    if (failures > 0) {
+      System.err.println(s"[golden] $failures golden(s) FAILED")
+      sys.exit(1)
+    }
+  }
+
+  /** Generate the raw files under `outDir/raw`, build the warehouse in
+    * `outDir/warehouse` (the tables, the materialized view and the
+    * dashboard SVG), check the manifest goldens and write
+    * `outDir/goldens.json`; returns the number of failed goldens.
+    */
+  def run(spark: org.apache.spark.sql.SparkSession, outDir: String,
+          cfg: GoldenFixture.Config): Int = {
     val rawDir = s"$outDir/raw"
     new java.io.File(rawDir).mkdirs()
 
@@ -50,7 +66,6 @@ object Golden {
     System.err.println(f"[golden] raw files generated in $genSecs%.1f s " +
       f"(xlsx ${new java.io.File(xlsx).length() / 1e6}%.1f MB)")
 
-    val spark = graft.engine.Graft.session("graft-golden")
     val t1 = System.nanoTime()
     val cat = RawRetailPipeline.build(spark, xlsx, fxXml, holXls,
       s"$outDir/warehouse")
@@ -147,10 +162,7 @@ object Golden {
     json.append(s""","view_rows":${dims("v_monthly_sales_summary")}}""")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$outDir/goldens.json"),
       (json.toString + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    spark.stop()
-    if (failures.nonEmpty) {
-      System.err.println(s"[golden] ${failures.size} golden(s) FAILED")
-      sys.exit(1)
-    }
+    cat.close()
+    failures.size
   }
 }

@@ -356,7 +356,15 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
       .option("compression", codec)
     (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
       .parquet(s"$warehouse/$name")
-    val back = spark.read.parquet(s"$warehouse/$name")
+    // An unpartitioned table's schema is the frame's own: passing it
+    // skips the one-task footer-inference job a bare read launches per
+    // save, and the file source makes every field nullable either way
+    // (GoldenSpec checks the two schemas are equal). Partitioned
+    // layouts keep inference: it moves the partition columns to the
+    // end and types them from the directory names.
+    val read = spark.read
+    val back = (if (partitionBy.isEmpty) read.schema(df.schema) else read)
+      .parquet(s"$warehouse/$name")
     back.createOrReplaceTempView(name)
     back
   }

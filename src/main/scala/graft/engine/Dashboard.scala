@@ -1,7 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** S9 — the reference's monthly-sales dashboard
   * (`/root/reference/analysis/analyze_monthly_sales.py:52-141`: a 2×2
@@ -39,54 +40,61 @@ object Dashboard {
     if (df.columns.contains("total_revenue_gbp")) "total_revenue_gbp"
     else "total_revenue"
 
+  /** What the four panels draw: per month (label, EUR revenue,
+    * orders) in month order; per country (country, EUR revenue, orders)
+    * by revenue descending, country ascending; and the top-5
+    * countries' monthly rows ((year, month), country, EUR revenue).
+    */
+  private[graft] final case class Panels(
+      byMonth: Seq[(String, Double, Long)],
+      topCountries: Seq[(String, Double, Long)],
+      trendRows: Seq[((Long, Long), String, Double)])
+
   /** Render the 2×2 dashboard SVG from the monthly view; returns the
     * SVG text (also written to `outPath` when given).
+    *
+    * The view has at most month × country rows, so it is collected
+    * once (one pass over the view's plan, however deep) and the panels
+    * are folded on the driver with [[Functions.dsum]]'s semantics.
     */
-  def render(monthlyIn: DataFrame, outPath: Option[String] = None): String = {
-    // One pipeline pass, not one per panel: the view frame may be an
-    // unmaterialized fused plan (monthlySummaryLazy), and the three
-    // panel collects below would otherwise each recompute the whole
-    // 8-stage pipeline. Scratch-materialize rather than persist(): this
-    // repo's measured finding (r3's comment in PipelineQueries) is that
-    // persist() materializes a fused plan at ~2x plain compute cost,
-    // while a parquet round-trip of this month×country-cardinality
-    // frame costs one compute plus a trivial write. A frame that is
-    // ALREADY a bare storage scan (a warehouse table) re-reads cheaply
-    // per panel — skip the redundant round-trip for those.
-    val isBareScan = monthlyIn.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.execution.datasources.LogicalRelation => true
-      case _ => false
-    }
-    val monthly =
-      if (isBareScan) monthlyIn
-      else graft.queries.Scratch.materialize(
-        monthlyIn.sparkSession, "dashboard_monthly", monthlyIn)
-    renderPanels(monthly, outPath)
+  def render(monthly: DataFrame, outPath: Option[String] = None): String =
+    draw(panels(monthly.select(col("year"), col("month"), col("country"),
+      col("total_revenue_eur"), col("total_orders")).collect()), outPath)
+
+  /** [[Functions.dsum]] on the driver: each double cast to
+    * DECIMAL(38,6) (shortest repr, HALF_UP), summed exactly, cast back.
+    */
+  private def dsum(xs: Iterable[Double]): Double =
+    xs.foldLeft(java.math.BigDecimal.ZERO) { (acc, x) =>
+      acc.add(BigDecimal(x).bigDecimal.setScale(6, java.math.RoundingMode.HALF_UP))
+    }.doubleValue
+
+  /** The three panel datasets from the collected view rows
+    * `(year, month, country, total_revenue_eur, total_orders)`, with
+    * the tie-breaks of a Spark `orderBy`: countries compare as UTF-8
+    * bytes, as Spark strings do.
+    */
+  private def panels(rows: Array[Row]): Panels = {
+    val byMonth = rows.groupBy(r => (r.getLong(0), r.getLong(1))).toSeq
+      .sortBy(_._1)
+      .map { case ((y, m), rs) =>
+        (f"$y%d-$m%02d", dsum(rs.map(_.getDouble(3))), rs.map(_.getLong(4)).sum)
+      }
+    val topCountries = rows.groupBy(_.getString(2)).toSeq
+      .map { case (c, rs) => (c, dsum(rs.map(_.getDouble(3))), rs.map(_.getLong(4)).sum) }
+      .sortWith { case ((c1, v1, _), (c2, v2, _)) =>
+        v1 > v2 || (v1 == v2 &&
+          UTF8String.fromString(c1).compareTo(UTF8String.fromString(c2)) < 0) }
+    val top5 = topCountries.take(5).map(_._1).toSet
+    val trendRows = rows.toSeq.filter(r => top5(r.getString(2)))
+      .map(r => ((r.getLong(0), r.getLong(1)), r.getString(2), r.getDouble(3)))
+    Panels(byMonth, topCountries, trendRows)
   }
 
-  private def renderPanels(monthly: DataFrame, outPath: Option[String]): String = {
-    val revEur = "total_revenue_eur"
-
-    // panel datasets — all chart-cardinality collects
-    val byMonth = monthly.groupBy(col("year"), col("month"))
-      .agg(Functions.dsum(col(revEur)).as("m_eur"),
-        sum(col("total_orders")).as("m_orders"))
-      .orderBy("year", "month")
-      .collect()
-      .map(r => (f"${r.getLong(0)}%d-${r.getLong(1)}%02d",
-        r.getDouble(2), r.getLong(3)))
-    val topCountries = monthly.groupBy(col("country"))
-      .agg(Functions.dsum(col(revEur)).as("c_eur"),
-        sum(col("total_orders")).as("c_orders"))
-      .orderBy(desc("c_eur"), asc("country"))
-      .collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
+  /** Draw the four panels; the SVG depends on `p` alone. */
+  private[graft] def draw(data: Panels, outPath: Option[String]): String = {
+    val Panels(byMonth, topCountries, trendRows) = data
     val top5 = topCountries.take(5).map(_._1)
-    val trendRows = monthly
-      .filter(col("country").isin(top5.toSeq: _*))
-      .select(col("year"), col("month"), col("country"), col(revEur))
-      .collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getString(2), r.getDouble(3)))
     val months = byMonth.map(_._1)
     val monthIdx = byMonth.zipWithIndex
       .map { case ((p, _, _), i) => p -> i }.toMap

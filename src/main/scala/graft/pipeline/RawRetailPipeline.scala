@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService,
+  ExecutorService, Executors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -55,89 +57,140 @@ object RawRetailPipeline {
     * dim_product, dim_customer, fct_sales, daily_fx_rates,
     * fct_sales_eur, agg_country_day and the v_monthly_sales_summary
     * view registered.
+    *
+    * The tables form a small DAG, built one dependency level at a time;
+    * the tables inside a level do not read each other and are built
+    * concurrently, so one driver keeps several independent Spark jobs
+    * in flight instead of running them one after another:
+    *  1. raw_retail_data (xlsx parse), raw_fx_rates, raw_uk_holidays;
+    *  2. dim_calendar (after its bounds query), dim_product,
+    *     dim_customer;
+    *  3. fct_sales, and daily_fx_rates over the fct plan's date range;
+    *  4. fct_sales_eur; 5. agg_country_day; then the view.
+    * A failed build closes its catalog (releasing the warehouse claim)
+    * and rethrows the first failure.
     */
   def build(spark: SparkSession, xlsxPath: String, fxXmlPath: String,
             holidaysXlsPath: String, warehouse: String): Catalog = {
-    import spark.implicits._
     val cat = new Catalog(spark, warehouse)
+    val pool = Executors.newFixedThreadPool(LevelWidth)
+    try {
+      buildTables(spark, cat, pool, xlsxPath, fxXmlPath, holidaysXlsPath)
+      cat
+    } catch {
+      case t: Throwable =>
+        try cat.close() catch { case c: Throwable => t.addSuppressed(c) }
+        throw t
+    } finally pool.shutdownNow(): Unit
+  }
 
-    // Phase 1 — ingestion (retail_data.py / fx_data.py / holidays_data.py).
+  /** The widest dependency level of [[build]]. */
+  private val LevelWidth = 3
+
+  /** Run one dependency level: every branch on its own `pool` thread,
+    * then wait for all of them. The first failure (in completion order)
+    * is rethrown as the original exception once every branch has
+    * finished, with any later failures attached as suppressed.
+    */
+  private def level(pool: ExecutorService)(branches: (() => Any)*): Unit = {
+    val done = new ExecutorCompletionService[Any](pool)
+    branches.foreach(b => done.submit(() => b()))
+    val failures = branches.flatMap { _ =>
+      try { done.take().get(); None }
+      catch { case e: ExecutionException => Some(e.getCause) }
+    }
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
+  }
+
+  private def buildTables(spark: SparkSession, cat: Catalog,
+                          pool: ExecutorService, xlsxPath: String,
+                          fxXmlPath: String, holidaysXlsPath: String): Unit = {
+    import spark.implicits._
+
+    // Level 1 — ingestion (retail_data.py / fx_data.py / holidays_data.py).
     // Column renames mirror retail_data.py:44-56; strings arrive trimmed
     // from the readers (the P2 contract).
-    val retail = XlsxSource(xlsxPath, RetailSchema).load(spark)
-      .select(
-        col("Invoice").as("invoice_no"),
-        col("StockCode").as("stock_code"),
-        col("Description").as("description"),
-        col("Quantity").as("qty"),
-        col("InvoiceDate").as("invoice_ts"),
-        col("Price").as("unit_price_gbp"),
-        col("Customer ID").as("customer_id"),
-        col("Country").as("country"),
-        col("source_sheet"))
-    cat.save("raw_retail_data", retail)
+    level(pool)(
+      () => cat.save("raw_retail_data",
+        XlsxSource(xlsxPath, RetailSchema).load(spark)
+          .select(
+            col("Invoice").as("invoice_no"),
+            col("StockCode").as("stock_code"),
+            col("Description").as("description"),
+            col("Quantity").as("qty"),
+            col("InvoiceDate").as("invoice_ts"),
+            col("Price").as("unit_price_gbp"),
+            col("Customer ID").as("customer_id"),
+            col("Country").as("country"),
+            col("source_sheet"))),
+      () => cat.save("raw_fx_rates",
+        XmlFxSource(fxXmlPath).load(spark)
+          .withColumnRenamed("rate", "gbp_per_eur")
+          .orderBy("date")),
+      () => cat.save("raw_uk_holidays",
+        XlsSource(holidaysXlsPath, HolidaysSchema).load(spark)
+          .select(col("UK BANK HOLIDAYS").as("holiday_date"))
+          .filter($"holiday_date".isNotNull)
+          .distinct().orderBy("holiday_date")))
 
-    cat.save("raw_fx_rates",
-      XmlFxSource(fxXmlPath).load(spark)
-        .withColumnRenamed("rate", "gbp_per_eur")
-        .orderBy("date"))
+    // Level 2 — the three dimensions, each over the staged raw tables.
+    level(pool)(
+      // dim_calendar (dimensions.py:27-95): month-extended range of the
+      // raw data, gap-free series, weekend/iso/holiday flags.
+      () => {
+        val b = cat.table("raw_retail_data")
+          .agg(min(to_date($"invoice_ts")), max(to_date($"invoice_ts"))).head()
+        val (lo, hi) = (b.getDate(0).toLocalDate, b.getDate(1).toLocalDate)
+        val calStart = java.sql.Date.valueOf(lo.withDayOfMonth(1))
+        val calEnd = java.sql.Date.valueOf(
+          hi.withDayOfMonth(1).plusMonths(1).minusDays(1))
+        val series = Functions.dateSeries(spark, calStart, calEnd)
+        val holidaysInRange = cat.table("raw_uk_holidays")
+          .filter($"holiday_date".between(calStart, calEnd))
+        val calendar = series.select(
+            $"date",
+            Functions.isWeekend($"date").as("is_weekend"),
+            Functions.isoYear($"date").cast("long").as("iso_year"),
+            Functions.isoWeek($"date").cast("long").as("iso_week"),
+            month($"date").cast("long").as("month"),
+            year($"date").cast("long").as("year"),
+            Functions.dowSun0($"date").cast("long").as("day_of_week"),
+            Functions.dayName($"date").as("day_name"),
+            Functions.monthName($"date").as("month_name"))
+          .join(broadcast(holidaysInRange), $"date" === $"holiday_date", "left")
+          .withColumn("is_uk_holiday", $"holiday_date".isNotNull)
+          .drop("holiday_date")
+        cat.save("dim_calendar", calendar, sortBy = Seq("date"))
+      },
+      // dim_product (dimensions.py:146-171): deterministic mode of
+      // description + first/last seen, bad codes filtered.
+      () => {
+        val goodCode = $"stock_code".isNotNull &&
+          $"stock_code" =!= "" && $"stock_code" =!= "nan"
+        val rawGood = cat.table("raw_retail_data").filter(goodCode)
+        val product = Functions.modeDet(rawGood, Seq("stock_code"),
+            "description", "description")
+          .join(rawGood.groupBy($"stock_code")
+            .agg(min(to_date($"invoice_ts")).as("first_seen"),
+              max(to_date($"invoice_ts")).as("last_seen")), Seq("stock_code"))
+        cat.save("dim_product", product, sortBy = Seq("stock_code"))
+      },
+      // dim_customer (dimensions.py:192-216): coalesce(-1) surrogate,
+      // deterministic mode of country, UNKNOWN for the surrogate row.
+      () => {
+        val withSurrogate = cat.table("raw_retail_data")
+          .withColumn("customer_id", coalesce($"customer_id", lit(-1.0)))
+        val customer = Functions.modeDet(withSurrogate, Seq("customer_id"),
+            "country", "country")
+          .withColumn("country",
+            when($"customer_id" === -1.0, lit("UNKNOWN")).otherwise($"country"))
+        cat.save("dim_customer", customer, sortBy = Seq("customer_id"))
+      })
 
-    cat.save("raw_uk_holidays",
-      XlsSource(holidaysXlsPath, HolidaysSchema).load(spark)
-        .select(col("UK BANK HOLIDAYS").as("holiday_date"))
-        .filter($"holiday_date".isNotNull)
-        .distinct().orderBy("holiday_date"))
-
-    // Phase 2 — dim_calendar (dimensions.py:27-95): month-extended
-    // range of the raw data, gap-free series, weekend/iso/holiday flags.
-    val b = cat.table("raw_retail_data")
-      .agg(min(to_date($"invoice_ts")), max(to_date($"invoice_ts"))).head()
-    val (lo, hi) = (b.getDate(0).toLocalDate, b.getDate(1).toLocalDate)
-    val calStart = java.sql.Date.valueOf(lo.withDayOfMonth(1))
-    val calEnd = java.sql.Date.valueOf(
-      hi.withDayOfMonth(1).plusMonths(1).minusDays(1))
-    val series = Functions.dateSeries(spark, calStart, calEnd)
-    val holidaysInRange = cat.table("raw_uk_holidays")
-      .filter($"holiday_date".between(calStart, calEnd))
-    val calendar = series.select(
-        $"date",
-        Functions.isWeekend($"date").as("is_weekend"),
-        Functions.isoYear($"date").cast("long").as("iso_year"),
-        Functions.isoWeek($"date").cast("long").as("iso_week"),
-        month($"date").cast("long").as("month"),
-        year($"date").cast("long").as("year"),
-        Functions.dowSun0($"date").cast("long").as("day_of_week"),
-        Functions.dayName($"date").as("day_name"),
-        Functions.monthName($"date").as("month_name"))
-      .join(broadcast(holidaysInRange), $"date" === $"holiday_date", "left")
-      .withColumn("is_uk_holiday", $"holiday_date".isNotNull)
-      .drop("holiday_date")
-    cat.save("dim_calendar", calendar, sortBy = Seq("date"))
-
-    // Phase 2 — dim_product (dimensions.py:146-171): deterministic mode
-    // of description + first/last seen, bad codes filtered.
-    val goodCode = $"stock_code".isNotNull &&
-      $"stock_code" =!= "" && $"stock_code" =!= "nan"
-    val rawGood = cat.table("raw_retail_data").filter(goodCode)
-    val product = Functions.modeDet(rawGood, Seq("stock_code"),
-        "description", "description")
-      .join(rawGood.groupBy($"stock_code")
-        .agg(min(to_date($"invoice_ts")).as("first_seen"),
-          max(to_date($"invoice_ts")).as("last_seen")), Seq("stock_code"))
-    cat.save("dim_product", product, sortBy = Seq("stock_code"))
-
-    // Phase 2 — dim_customer (dimensions.py:192-216): coalesce(-1)
-    // surrogate, deterministic mode of country, UNKNOWN for the
-    // surrogate row.
-    val withSurrogate = cat.table("raw_retail_data")
-      .withColumn("customer_id", coalesce($"customer_id", lit(-1.0)))
-    val customer = Functions.modeDet(withSurrogate, Seq("customer_id"),
-        "country", "country")
-      .withColumn("country",
-        when($"customer_id" === -1.0, lit("UNKNOWN")).otherwise($"country"))
-    cat.save("dim_customer", customer, sortBy = Seq("customer_id"))
-
-    // Phase 3 — fct_sales (facts.py:37-57): cleaning filters + inner
+    // Level 3 — fct_sales (facts.py:37-57): cleaning filters + inner
     // dim joins (all three dims broadcast — they are entity-bounded).
     val fct = cat.table("raw_retail_data")
       .filter($"stock_code".isNotNull && $"stock_code" =!= "" &&
@@ -153,21 +206,24 @@ object RawRetailPipeline {
       .withColumn("gross_amount_gbp", $"qty" * $"unit_price_gbp")
       .select("invoice_no", "stock_code", "customer_id", "date", "qty",
         "unit_price_gbp", "gross_amount_gbp")
-    cat.save("fct_sales", fct, sortBy = Seq("date", "invoice_no"))
+    level(pool)(
+      () => cat.save("fct_sales", fct, sortBy = Seq("date", "invoice_no")),
+      // daily_fx_rates (facts.py:153-202): gap-free series over the FCT
+      // date range (taken from the fct plan, so it need not wait for the
+      // fct_sales write), forward-filled, leading-null dates dropped.
+      () => {
+        val fb = fct.agg(min($"date"), max($"date")).head()
+        val rates = Functions.forwardFill(
+            Functions.dateSeries(spark, fb.getDate(0), fb.getDate(1))
+              .join(cat.table("raw_fx_rates")
+                .withColumnRenamed("gbp_per_eur", "rate_raw"), Seq("date"), "left"),
+            "date", "rate_raw", "gbp_per_eur")
+          .select($"date", $"gbp_per_eur")
+          .filter($"gbp_per_eur".isNotNull)
+        cat.save("daily_fx_rates", rates, sortBy = Seq("date"))
+      })
 
-    // Phase 3 — daily_fx_rates (facts.py:153-202): gap-free series over
-    // the FCT date range, forward-filled, leading-null dates dropped.
-    val fb = cat.table("fct_sales").agg(min($"date"), max($"date")).head()
-    val rates = Functions.forwardFill(
-        Functions.dateSeries(spark, fb.getDate(0), fb.getDate(1))
-          .join(cat.table("raw_fx_rates")
-            .withColumnRenamed("gbp_per_eur", "rate_raw"), Seq("date"), "left"),
-        "date", "rate_raw", "gbp_per_eur")
-      .select($"date", $"gbp_per_eur")
-      .filter($"gbp_per_eur".isNotNull)
-    cat.save("daily_fx_rates", rates, sortBy = Seq("date"))
-
-    // Phase 3 — fct_sales_eur (facts.py:258-288): GBP→EUR conversion
+    // Level 4 — fct_sales_eur (facts.py:258-288): GBP→EUR conversion
     // through the daily rate (date-bounded broadcast join).
     val eur = cat.table("fct_sales")
       .join(broadcast(cat.table("daily_fx_rates")), Seq("date"))
@@ -179,7 +235,7 @@ object RawRetailPipeline {
         $"gbp_per_eur".as("fx_rate_used"))
     cat.save("fct_sales_eur", eur, sortBy = Seq("date", "invoice_no"))
 
-    // Phase 4 — agg_country_day (facts.py:349-421): fct ⋈ fct_eur on
+    // Level 5 — agg_country_day (facts.py:349-421): fct ⋈ fct_eur on
     // the composite line key, dims re-attached, per-(date, country)
     // rollup with the calendar context columns.
     val f = cat.table("fct_sales")
@@ -206,10 +262,9 @@ object RawRetailPipeline {
         $"is_uk_holiday", $"iso_week", $"iso_year", $"month", $"year")
     cat.save("agg_country_day", agg, sortBy = Seq("date", "country"))
 
-    // Phase 5 — the monthly view
-    // (/root/reference/sql/views/monthly_sales_summary.sql:5-41).
-    cat.createView("v_monthly_sales_summary", monthlyView(spark, cat))
-    cat
+    // The monthly view (the reference's
+    // sql/views/monthly_sales_summary.sql:5-41).
+    cat.createView("v_monthly_sales_summary", monthlyView(spark, cat)): Unit
   }
 
   /** The reference view, column-for-column (rounded ratio columns

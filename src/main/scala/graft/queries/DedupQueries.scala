@@ -1728,8 +1728,13 @@ object DedupQueries {
     * routes through Lloyd.assignFor: flat for the registered row's
     * k=8, exact in-row argmin (Lloyd.assignInRow / graft_argmin_sq)
     * once k crosses Lloyd.InRowK — N rows through the plan instead of
-    * N×k candidate rows, identical output. MixtureSpec exercises the
-    * dial by doubling the corpus at doubled k.
+    * N×k candidate rows, identical output. The full cost model is
+    * therefore two terms, not one: O(N × k × dim) distance arithmetic
+    * per Lloyd round (flat in BOTH paths — the in-row path removes the
+    * N×k candidate rows, not the arithmetic — so it is quadratic in
+    * the corpus when k ∝ N), plus the O(corpus × cell) drop scan.
+    * MixtureSpec exercises the dial by doubling the corpus at doubled
+    * k.
     */
   private[graft] def semanticDedupTrained(s: SparkSession, d: String,
       k: Int, iters: Int): DataFrame = {

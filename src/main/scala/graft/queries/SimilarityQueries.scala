@@ -200,9 +200,11 @@ object SimilarityQueries {
     /** First-k init centroids (cid, c). k is the SemDeDup scale dial:
       * it grows with the corpus (k ∝ corpus size at a target cell
       * population) so the within-cell quadratic scan stays bounded —
-      * NOTE that the flat [[assign]] then carries its own N×k term
-      * (r19 census: 16.8× per 10× at k ∝ corpus), which is why
-      * large-k callers route through [[assignFor]]'s in-row path.
+      * NOTE that every assignment round then carries its own
+      * O(N × k × dim) distance term, quadratic in the corpus at
+      * k ∝ corpus (r19 census: 16.8× per 10× on the flat [[assign]]).
+      * Large-k callers route through [[assignFor]]'s in-row path,
+      * which drops the N×k candidate rows but not that arithmetic.
       */
     def init(e: DataFrame, k: Int = K): DataFrame =
       e.filter(col("vec_id") < k)

@@ -15,22 +15,7 @@ import graft.pipeline.RawRetailPipeline
   * differential); this spec keeps the path green per-commit.
   */
 class GoldenSpec extends SparkTestBase {
-
-  private val cfg = GoldenFixture.Config(
-    rowsSheet1 = 14800, rowsSheet2 = 15200,
-    nProducts = 150, nCustomers = 160)
-
-  private lazy val built = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_golden_spec")
-      .toString
-    val xlsx = s"$dir/retail.xlsx"
-    val fx = s"$dir/gbp.xml"
-    val hol = s"$dir/holidays.xls"
-    GoldenFixture.writeXlsx(cfg, xlsx)
-    GoldenFixture.writeFxXml(fx)
-    GoldenFixture.writeHolidaysXls(hol)
-    RawRetailPipeline.build(spark, xlsx, fx, hol, s"$dir/warehouse")
-  }
+  import GoldenSpec.{cfg, built}
 
   private lazy val m = GoldenFixture.manifest(cfg)
 
@@ -95,5 +80,57 @@ class GoldenSpec extends SparkTestBase {
     val expected = GoldenFixture.UkHolidays
       .filter(d => d >= "2009-12-01" && d <= "2011-12-31").toSet
     assert(flagged == expected)
+  }
+
+  test("every table the build writes is registered with its parquet schema") {
+    Seq("raw_retail_data", "raw_fx_rates", "raw_uk_holidays",
+      "dim_calendar", "dim_product", "dim_customer", "fct_sales",
+      "daily_fx_rates", "fct_sales_eur", "agg_country_day").foreach { t =>
+      assert(built.table(t).schema ==
+        spark.read.parquet(s"${built.warehouse}/$t").schema, t)
+    }
+  }
+
+  test("a failed build releases the warehouse; a retry on it succeeds") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_golden_retry")
+      .toString
+    val small = Golden.scaled(2000)
+    val (xlsx, fx, hol) = GoldenSpec.writeRaw(small, dir)
+    val corrupt = s"$dir/corrupt.xlsx"
+    java.nio.file.Files.write(java.nio.file.Paths.get(corrupt),
+      "not a zip archive".getBytes("UTF-8"))
+    val wh = s"$dir/warehouse"
+    assertThrows[java.util.zip.ZipException](
+      RawRetailPipeline.build(spark, corrupt, fx, hol, wh))
+    val cat = RawRetailPipeline.build(spark, xlsx, fx, hol, wh)
+    try assert(cat.table("fct_sales").count() ==
+      GoldenFixture.manifest(small).fctRows)
+    finally cat.close()
+  }
+}
+
+/** The smoke-scale golden build, shared by every suite that reads it
+  * (suites run in one JVM, so it is built once).
+  */
+object GoldenSpec {
+  val cfg: GoldenFixture.Config = GoldenFixture.Config(
+    rowsSheet1 = 14800, rowsSheet2 = 15200,
+    nProducts = 150, nCustomers = 160)
+
+  /** Write the three raw files for `c` under `dir`. */
+  def writeRaw(c: GoldenFixture.Config, dir: String): (String, String, String) = {
+    val (xlsx, fx, hol) = (s"$dir/retail.xlsx", s"$dir/gbp.xml", s"$dir/holidays.xls")
+    GoldenFixture.writeXlsx(c, xlsx)
+    GoldenFixture.writeFxXml(fx)
+    GoldenFixture.writeHolidaysXls(hol)
+    (xlsx, fx, hol)
+  }
+
+  lazy val built: graft.engine.Catalog = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_golden_spec")
+      .toString
+    val (xlsx, fx, hol) = writeRaw(cfg, dir)
+    RawRetailPipeline.build(SparkTestSession.spark, xlsx, fx, hol,
+      s"$dir/warehouse")
   }
 }

@@ -318,6 +318,13 @@ def main():
     for name, pub, got in readme_rows:
         lines.append(f"| {name} | {pub} | {got} |")
     lines.append("")
+    lines.append("Build levels (tables in one level are built concurrently): "
+                 "raw_retail_data, raw_fx_rates, raw_uk_holidays → "
+                 "dim_calendar, dim_product, dim_customer → "
+                 "fct_sales, daily_fx_rates → fct_sales_eur → "
+                 "agg_country_day → view, its materialization and the "
+                 "dashboard.")
+    lines.append("")
     lines.append(f"Build: {goldens.get('build_secs', '?')} s; generation: "
                  f"{goldens.get('gen_secs', '?')} s; agg rows: "
                  f"{goldens.get('agg_rows', '?')}; view rows: "
