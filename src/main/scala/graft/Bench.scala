@@ -1,218 +1,115 @@
 package graft
+
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.{broadcast, col, count, lit, row_number, sum}
+import graft.engine.Graft
+import graft.queries.Registry
+
+/** Times every registered query at one scale factor and prints one JSON
+  * line. Each row is timed to its full result — every column, every row
+  * and the final sort, the plan `Verify` writes — after the warm-ups and
+  * after the ingest artifacts its rows declare have been built outside
+  * the timers.
+  */
 object Bench {
+
+  /** Run `df` to its full result: a `noop` write of the whole frame,
+    * counted on the way through by an [[Observation]]. Unlike `count()`,
+    * this leaves Catalyst no projection, aggregate or sort to prune.
+    * Returns the row count.
+    */
+  def fullResult(df: DataFrame): Long = {
+    val obs = Observation()
+    df.observe(obs, count(lit(1)).as("n"))
+      .write.format("noop").mode("overwrite").save()
+    obs.get("n").asInstanceOf[Long]
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Optional comma-separated query-name filter for isolation runs
     // (fresh-session timings of a subset, e.g. regression triage).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = graft.engine.Graft.session("graft-bench", defaultCpus = "4")
-    // Warmup: pay session/codegen init and every table's parquet footer
-    // read outside the timers, so the first query to touch a given
-    // table isn't charged its open cost (map-order is arbitrary).
-    graft.engine.Graft.TableNames.foreach { n =>
-      try { graft.engine.Graft.table(spark, sfDir, n).count(): Unit }
-      catch { case _: Throwable => () }
-    }
-    // Warmup 2: one composite mini-query paying the session's
-    // first-use infrastructure — Janino/codegen framework load, first
-    // ShuffleExchange, BroadcastExchange, WindowExec, sort. Without
-    // this the alphabetically-first timed queries (the ANN a*-series)
-    // are billed ~1.7 s of fixed session init that every later query
-    // gets for free, skewing cross-round comparisons.
+    val spark = Graft.session("graft-bench", defaultCpus = "4")
     try {
-      import org.apache.spark.sql.functions._
+      // Warm-ups: pay every table's parquet footer read and the session's
+      // first-use infrastructure (codegen framework load, first shuffle,
+      // broadcast, window, sort) outside the timers, so the first timed
+      // rows are not billed fixed session costs the later ones get free.
+      // A failure here fails the run.
+      Graft.TableNames.foreach(n => Graft.table(spark, sfDir, n).count(): Unit)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("n_regionkey").orderBy("n_nationkey")
-      graft.engine.Graft.table(spark, sfDir, "nation")
-        .join(broadcast(graft.engine.Graft.table(spark, sfDir, "region")),
+      fullResult(Graft.table(spark, sfDir, "nation")
+        .join(broadcast(Graft.table(spark, sfDir, "region")),
           col("n_regionkey") === col("r_regionkey"))
         .withColumn("rn", row_number().over(w))
-        .groupBy("r_name").agg(sum("rn")).count(): Unit
-    } catch { case _: Throwable => () }
-    // Ingest-time artifact build, timed SEPARATELY: j6b's bucketed
-    // fact tables are a one-time ingest cost (production writes them
-    // at ingest, every query-time consumer reads co-located files).
-    // Billing the build to the first j6b run conflated the two — the
-    // r12 10x census read 10.3x for j6b when ~all of it was the
-    // bucketBy write. The build is memoized per (session, corpus), so
-    // paying it here makes every timed j6b run measure the
-    // zero-Exchange JOIN alone; the build cost stays visible as its
-    // own field in the JSON line.
-    // The same split generalized to every per-corpus derived INDEX the
-    // suite maintains (r13): fingerprint / gram / shingle / term-
-    // frequency / tokenized-corpus tables are warehouse artifacts a
-    // production deployment writes once per corpus at ingest (exactly
-    // like j6b's bucketed facts and t17b's postings), then every
-    // query-time consumer reads. Billing the build to whichever
-    // consumer happens to run first (alphabetical order) made census
-    // slopes measure the INDEX WRITE, not the query. Each build stays
-    // visible as its own ingest_artifacts field. Deliberately NOT
-    // here: candidate-pair tables and cluster labels (lsh_cand,
-    // emb_pairs, simhash_pairs, cc_labels) — those are the dedup
-    // queries' own work product; moving them to warmup would leave
-    // the rows measuring nothing.
-    val artifactBuilders: Seq[(String, Set[String], () => Unit)] = Seq(
-      ("j6b_bucket_build", Set("j6b_fact_variants_bucketed"),
-        () => graft.queries.PipelineQueries.j6bBucketedFacts(spark, sfDir)),
-      ("t17b_index_build", Set("t17b_bm25_maintained"),
-        () => graft.queries.TextQueries.t17bIndex(spark, sfDir)),
-      // o6's two-batch IncrementalNearDup drive: production pays the
-      // fold once per arriving batch; the o6 row then measures the
-      // maintained-corpus read alone (was the suite's slowest row at
-      // 4.0 s, ~all of it this drive).
-      ("o6_ingest_drive", Set("o6_incremental_neardup"),
-        () => graft.queries.PipelineQueries.o6Warehouse(spark, sfDir): Unit),
-      // o11's three-fold MinMergeStats demonstration drive (including
-      // the deliberate redelivery): ingest-shaped work, same split —
-      // the o11 row measures the registry probe + rewrite read path.
-      // NOTE (r15 reclassification): r14 and earlier billed this drive
-      // to the o11 row (3.25 s in-suite), so round-over-round o11 and
-      // suite-total comparisons across r14->r15 are a measurement-
-      // boundary change, not a speedup of the read path.
-      ("o11_registry_drive", Set("o11_incremental_segments"),
-        () => graft.queries.PipelineQueries.o11Warehouse(spark, sfDir): Unit),
-      // o12's four-fold IncrementalCc drive (incl. the deliberate
-      // redelivery): ingest-shaped label maintenance — the row
-      // measures the maintained-table read (the d10 consumer shape).
-      ("o12_cc_drive", Set("o12_incremental_cc"),
-        () => graft.queries.PipelineQueries.o12Warehouse(spark, sfDir): Unit),
-      // o12s's 3-micro-batch CcLabelStream drive: ingest-shaped label
-      // maintenance by the streaming engine — the row measures the
-      // maintained-table consumer read (the d10 shape).
-      ("o12s_stream_drive", Set("o12s_cc_label_stream"),
-        () => graft.queries.PipelineQueries.o12sWarehouse(spark, sfDir): Unit),
-      // o12b's fold+compact+retire drive: the takedown is ingest-shaped
-      // work too — the row measures the post-takedown consumer read.
-      ("o12b_retire_drive", Set("o12b_cc_retire"),
-        () => graft.queries.PipelineQueries.o12bWarehouse(spark, sfDir): Unit),
-      // o11s's 4-micro-batch SegmentRegistryStream drive (+ drive-end
-      // compaction): the row measures the registry probe + rewrite.
-      // r17: the in-row drive variant was measured and REJECTED — the
-      // drive-end compaction writes the whole dictionary, costing
-      // in-row what the r16 merge-on-read probe cost (SCALE.md r17).
-      ("o11s_stream_drive", Set("o11s_segment_stream"),
-        () => graft.queries.PipelineQueries.o11sWarehouse(spark, sfDir): Unit),
-      // o11b's fold+compact+rebuild takedown drive, same boundary.
-      ("o11b_retire_drive", Set("o11b_segment_retire"),
-        () => graft.queries.PipelineQueries.o11bWarehouse(spark, sfDir): Unit),
-      ("winnow_fp_index_build",
-        Set("d6_winnowing_decontam", "d8_split_decontam",
-          "d13_source_overlap"),
-        () => graft.queries.DedupQueries.corpusWinnowPruned(spark, sfDir): Unit),
-      ("eval_gram_index_build",
-        Set("d14_eval_ngram_overlap", "c11_split_repair",
-          "pipe_corpus_release", "d16_bloom_decontam",
-          "d16s_decontam_stream"),
-        () => graft.queries.DedupQueries.evalGramIndex(spark, sfDir): Unit),
-      // d16/d16s's static eval-side Bloom artifacts (sized bit count,
-      // set-bit table, literal confirm table): fixed per corpus — the
-      // eval benchmark is a registered artifact, its filter is built
-      // when the set is registered, not per query / per train batch.
-      // r19 boundary move, both totals in OPTIMIZATION_r19.md.
-      ("bloom_bits_build",
-        Set("d16_bloom_decontam", "d16s_decontam_stream"),
-        () => graft.queries.DedupQueries.bloomStatics(spark, sfDir): Unit),
-      ("shingle_index_build",
-        Set("d2_ngram_jaccard", "d2b_minhash_jaccard_diff",
-          "d3_minhash_lsh"),
-        () => graft.queries.DedupQueries.corpusShingles(spark, sfDir): Unit),
-      ("bm25_tf_index_build",
-        Set("t17_bm25_topk", "t19_hybrid_rrf", "t19b_hybrid_rrf_indexed"),
-        () => graft.queries.TextQueries.bm25TfIndex(spark, sfDir): Unit),
-      ("bpe_token_corpus_build",
-        Set("t16_bpe_encode", "c9b_token_budget_bpe"),
-        () => graft.queries.TextQueries.bpeDocTokens(spark, sfDir): Unit),
-      // The reference's own precedent: agg_country_day is materialized
-      // as a TABLE at ingest (facts.py CREATE TABLE ... AS), and five
-      // registered queries read it. Billed alphabetically it landed on
-      // g11 (15 s of its 15.4 s at the 10x census was this build).
-      ("daily_rollup_build",
-        Set("g5_daily_country_rollup", "g6_monthly_summary",
-          "g9_topk_revenue", "g11_mom_growth", "s7_view_from_sql"),
-        () => graft.queries.CoreQueries
-          .dailyCountryRollupShared(spark, sfDir): Unit))
-    val artifactSecs: Seq[(String, Double)] = artifactBuilders.flatMap {
-      case (artifact, consumers, build) =>
-        if (only.forall(o => consumers.exists(o.contains))) {
-          val t0 = System.nanoTime()
-          try { build(); Some(artifact -> (System.nanoTime() - t0) / 1e9) }
-          catch { case _: Throwable => None }
-        } else None
-    }
-    // A query that crashes is recorded with a NULL timing and listed
-    // under "failed" — a regression must never masquerade as a fast run,
-    // and consumers summing/trending the queries map never silently mix
-    // failed-run timings into history.
-    // Sorted name order: Map iteration order is arbitrary and shifts
-    // when the query set changes, which made timings incomparable
-    // across rounds (a query billed its predecessor's page-cache state).
-    val queryList = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    def oneRun(): Seq[(String, Option[Double])] = queryList
-      .map { case (name, fn) =>
-        // Settle between queries: drop any cached relations the previous
-        // query pinned and let the driver heap recover before the timer
-        // starts. Round-7 isolation runs showed the full-bench numbers
-        // for the pipe→t3 block inflated 5-13x (r1 10.1 s vs 1.2 s
-        // isolated) by predecessor state — GC pauses from pipe's large
-        // fused plan and s1/s3's driver-side workbook generation billed
-        // to whatever ran next. Durable scratch (parquet) is unaffected.
+        .groupBy("r_name").agg(sum("rn")).orderBy("r_name")): Unit
+
+      // Sorted name order: timings stay comparable when the query set
+      // changes (a row is never billed a new predecessor's state).
+      val rows = Registry.all.sortBy(_.name)
+        .filter(q => only.forall(_.contains(q.name)))
+      // The ingest artifacts the selected rows declare, each built once
+      // and timed as its own field; a failed build fails the run, so its
+      // cost can never land on the first row that reads it.
+      val artifactSecs = rows.flatMap(_.artifacts).distinct.map { a =>
+        val t0 = System.nanoTime()
+        a.build(spark, sfDir)
+        a.name -> (System.nanoTime() - t0) / 1e9
+      }
+
+      // One run: each row's seconds, or its failure as class and message
+      // (a failed row never contributes a timing).
+      def oneRun(): Map[String, Either[String, Double]] = rows.map { q =>
+        // Settle between rows: drop cached relations the previous row
+        // pinned and let the driver heap recover before the timer starts
+        // (round 7 measured predecessor GC billed to the next row).
         spark.catalog.clearCache()
         System.gc()
         Thread.sleep(200)
         System.gc()
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case _: Throwable => false }
-        val secs = (System.nanoTime() - t0) / 1e9
-        name -> (if (ok) Some(secs) else None)
+        val r = try { fullResult(q.run(spark, sfDir)); Right((System.nanoTime() - t0) / 1e9) }
+                catch { case NonFatal(e) => Left(s"${e.getClass.getName}: ${e.getMessage}") }
+        q.name -> r
+      }.toMap
+      // >= 3 runs by default; the record carries every run's total and
+      // each row's median across runs.
+      val nRuns = sys.env.get("SPARK_GRAFT_RUNS").flatMap(_.toIntOption)
+        .getOrElse(3).max(1)
+      val runs = (1 to nRuns).map(_ => oneRun())
+      def median(xs: Seq[Double]): Double = {
+        val s = xs.sorted
+        if (s.size % 2 == 1) s(s.size / 2)
+        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
       }
-    // ≥3 repeat runs by default: this host shows ±19-40% run-to-run
-    // swings on identical builds (SCALE.md's weather log), so a single
-    // draw is noise — the committed record carries every run's total
-    // and the PER-QUERY MEDIAN across runs, and round-over-round
-    // comparison gates on the median, not a draw.
-    val nRuns = sys.env.get("SPARK_GRAFT_RUNS").flatMap(_.toIntOption)
-      .getOrElse(3).max(1)
-    val runs = (1 to nRuns).map(_ => oneRun())
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    val qMedian: Seq[(String, Option[Double])] = queryList.map { case (name, _) =>
-      val ts = runs.flatMap(_.collectFirst { case (`name`, Some(t)) => t })
-      name -> (if (ts.isEmpty) None else Some(median(ts)))
-    }
-    val qs = qMedian
-      .map { case (k, v) => s"\"" + k + "\":" + v.map(_.toString).getOrElse("null") }
-      .mkString("{", ",", "}")
-    // failed = zero successful runs; flaky = failed in some run only
-    val failed = qMedian.collect { case (k, None) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val flaky = queryList.map(_._1).filter { name =>
-      val states = runs.map(_.collectFirst { case (`name`, t) => t.isDefined }.getOrElse(false))
-      states.contains(false) && states.contains(true)
-    }.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val runTotals = runs.map(r => r.flatMap(_._2).sum)
-    val total = median(runTotals)
-    val runsJson = runTotals.mkString("[", ",", "]")
-    val ingestParts =
-      artifactSecs.map { case (n, s) => s""""$n":$s""" }
-    val ingest =
-      if (ingestParts.isEmpty) ""
-      else s""","ingest_artifacts":{${ingestParts.mkString(",")}}"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","runs":$runsJson,"queries":$qs,"failed":$failed,"flaky":$flaky$ingest,"sf":"$sfDir"}"""
-    println(line)
-    // Also persist the line: the driver captures stdout via a log tail
-    // that has truncated the record before (BENCH_r04 lost `total` and 7
-    // timings) — the file is the durable copy.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
-    catch { case e: Throwable =>
-      System.err.println(s"[Bench] could not write $outPath: $e") }
-    spark.stop()
+      def js(s: String) = Verify.quote(s)
+      val secs = rows.map(_.name).map(n => n -> runs.flatMap(_(n).toOption))
+      val qs = secs.map { case (n, ts) =>
+          js(n) + ":" + (if (ts.isEmpty) "null" else median(ts).toString) }
+        .mkString("{", ",", "}")
+      // failed = no successful run (with the last run's error);
+      // flaky = failed in some runs only
+      val failed = secs.collect { case (n, ts) if ts.isEmpty =>
+          s"""{"query":${js(n)},"error":${js(runs.last(n).swap.getOrElse(""))}}""" }
+        .mkString("[", ",", "]")
+      val flaky = secs.collect { case (n, ts) if ts.nonEmpty && ts.size < nRuns => js(n) }
+        .mkString("[", ",", "]")
+      val runTotals = runs.map(_.values.flatMap(_.toOption).sum)
+      val ingest = artifactSecs.map { case (n, s) => s"${js(n)}:$s" }
+        .mkString("{", ",", "}")
+      val line = s"""{"metric":"total","value":${median(runTotals)},"unit":"sec",""" +
+        s""""runs":${runTotals.mkString("[", ",", "]")},""" +
+        s""""queries":$qs,"failed":$failed,"flaky":$flaky,""" +
+        s""""ingest_artifacts":$ingest,"sf":${js(sfDir)}}"""
+      println(line)
+      // The file is the durable copy: a log tail has truncated the
+      // stdout record before (BENCH_r04 lost `total` and 7 timings).
+      val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), line + "\n"): Unit
+    } finally spark.stop()
   }
 }

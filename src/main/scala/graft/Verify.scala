@@ -42,20 +42,8 @@ object Verify {
       }
       name -> (System.nanoTime() - t0) / 1e9
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Per-query wall seconds of this correctness run — at 130+ queries
     // the gate's own cost is material; this makes it visible per round
@@ -64,8 +52,22 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/query_secs.json"),
       secs.toSeq.sortBy(_._1)
         .map { case (k, v) =>
-          s"${q(k)}: ${"%.3f".formatLocal(java.util.Locale.ROOT, v)}" }
+          s"${quote(k)}: ${"%.3f".formatLocal(java.util.Locale.ROOT, v)}" }
         .mkString("{", ",", "}"))
     spark.stop()
   }
+
+  /** JSON string literal: escapes backslash, quote and ALL control chars
+    * (< 0x20) — a tab or CR in a query's oracle SQL would otherwise make
+    * the JSON unreadable and silently void the whole oracle check.
+    */
+  def quote(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

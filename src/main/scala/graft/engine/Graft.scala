@@ -17,27 +17,20 @@ object Graft {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** THE session builder — every main (Run/Verify/Bench/Plans) goes
+  /** THE session builder — every main (Run/Verify/Bench/Golden) goes
     * through here so the config contract can't drift between entry
     * points (a missing `nanosAsLong` in one main once broke only the
-    * paths that read `events`). `extraConf` is for per-main additions
-    * (e.g. Plans disables size-based auto-broadcast).
+    * paths that read `events`). `extraConf` is for per-caller additions
+    * (the `perfbench` harness points the local and warehouse dirs into
+    * its work dir). Shuffle partitions equal the thread count.
     */
   def session(appName: String = "graft", defaultCpus: String = "32",
               extraConf: Map[String, String] = Map.empty): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
-    // Shuffle partitions default to the thread count, but are
-    // independently overridable: at 100 TB partitions scale with DATA
-    // (keep per-partition shuffle mass inside execution memory) while
-    // threads scale with hardware — the census legs exercise exactly
-    // this dial (SCALE.md r17: the frozen 32-partition regime is the
-    // named suspect for d12's above-linear sixth decade).
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.extensions", "graft.engine.GraftExtensions")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")

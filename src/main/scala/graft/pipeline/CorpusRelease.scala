@@ -166,21 +166,15 @@ object CorpusRelease {
     * — the one frame both the funnel census and the release read.
     */
   private def flaggedFrame(s: SparkSession, d: String): DataFrame = {
-    def tick(n: String): Unit =
-      if (sys.env.contains("SPARK_GRAFT_REL_DEBUG"))
-        System.err.println(f"[rel] $n t=${System.nanoTime() / 1e9}%.1f")
     val base = featured(s, d)
       .select(col("doc_id"), col("lang"), col("source"),
         col("ws_tokens"), col("wsum"), col("split"), col("fp"))
       .withColumn("k1", col("wsum") >= 0L)
     val canon = base.filter(col("k1"))
       .groupBy(col("fp")).agg(min(col("doc_id")).as("keeper"))
-    tick("base")
     val labels = relCcLabels(s, d)
       .select(col("v").as("doc_id"), col("l").as("cl"))
-    tick("labels")
     val dirty = dirtyTrainIds(s, d).withColumn("is_dirty", lit(true))
-    tick("dirty")
     // Materialize the pre-mixture flags once: the mixture rates need a
     // census over k5 survivors, and recomputing the gram/CC joins for
     // that second consumer would double the chain's heavy passes.
@@ -195,7 +189,6 @@ object CorpusRelease {
       .withColumn("k5", col("k4") && col("is_dirty").isNull)
       .select(col("doc_id"), col("lang"), col("source"), col("ws_tokens"),
         col("k1"), col("k2"), col("k3"), col("k4"), col("k5")))
-    tick("pre")
     // c7's temperature mixture over the decontaminated train counts:
     // exact integer census -> correctly-rounded sqrt rate, broadcast
     // back (domain cardinality, never doc mass).
@@ -241,15 +234,9 @@ object CorpusRelease {
     * integers.
     */
   def report(s: SparkSession, d: String): DataFrame = {
-    def tick(n: String): Unit =
-      if (sys.env.contains("SPARK_GRAFT_REL_DEBUG"))
-        System.err.println(f"[rel] $n t=${System.nanoTime() / 1e9}%.1f")
-    tick("start")
     val fl = flaggedFrame(s, d)
-    tick("flagged")
     val cat = new Catalog(s, Scratch.fresh(s, "rel_wh"))
     val v = cat.saveVersioned("corpus_release", releaseRows(fl))
-    tick("saved")
     val stored = cat.tableAt("corpus_release", v)
 
     val stageFlags = Seq(

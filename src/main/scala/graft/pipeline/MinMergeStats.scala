@@ -112,24 +112,12 @@ object MinMergeStats {
     * stream folding forever rewrites each bucket once per this many
     * folds (amortized O(bucket/threshold) per fold) and readers merge
     * at most this many candidate rows per key in between.
-    * Env-overridable (`SPARK_GRAFT_COMPACT_DELTAS`) so the census can
-    * price the dial with paired sweeps instead of asserting the
-    * default (12 — the measured sweet spot of the r18 50-fold soak:
-    * 4/12/32 → 116/98/160 s). Validated loudly (r18 advisor): 0 would
-    * make the hot rule and backstop fire on EVERY fold — the exact
-    * per-fold full-rewrite pathology the delta log exists to avoid —
-    * and a silently-defaulted typo would void a census sweep's
-    * pairing, so both non-positive and unparseable values throw.
+    * 12 is the measured sweet spot of the r18 50-fold soak (4/12/32 →
+    * 116/98/160 s). It must stay >= 1: 0 would make the hot rule and
+    * backstop fire on EVERY fold — the exact per-fold full-rewrite
+    * pathology the delta log exists to avoid.
     */
-  val AutoCompactDeltas: Int = sys.env.get("SPARK_GRAFT_COMPACT_DELTAS")
-    .map { raw =>
-      val v = raw.toIntOption.getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_COMPACT_DELTAS='$raw' is not an integer"))
-      require(v >= 1,
-        s"SPARK_GRAFT_COMPACT_DELTAS=$v: must be >= 1 (0 degenerates " +
-          "to a full table rewrite per fold)")
-      v
-    }.getOrElse(12)
+  val AutoCompactDeltas: Int = 12
 
   private val store: DeltaStore = LocalDeltaStore
 

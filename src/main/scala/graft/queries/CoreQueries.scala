@@ -68,6 +68,12 @@ object CoreQueries {
     graft.queries.Scratch.memoized(spark, s"daily_rollup:$dir",
       "daily_rollup", dailyCountryRollup(spark, dir))
 
+  /** The daily rollup as an ingest artifact: the reference materializes
+    * `agg_country_day` as a TABLE at ingest (facts.py `CREATE TABLE ... AS`).
+    */
+  val DailyRollup: Artifact = Artifact("daily_rollup_build",
+    (s, d) => dailyCountryRollupShared(s, d): Unit)
+
   private val DailySql: String =
     """SELECT CAST(o.o_orderdate AS DATE) AS date, n.n_name AS country,
       |  COUNT(DISTINCT CASE WHEN o.o_orderstatus NOT LIKE 'F%' THEN o.o_orderkey END) AS orders,
@@ -150,7 +156,8 @@ object CoreQueries {
       "G6/P8/P14/D2/D6 — monthly re-aggregation of the daily rollup " +
         "(v_monthly_sales_summary analog)",
       (s, d) => monthlySummary(s, d),
-      Some(MonthlySql)),
+      Some(MonthlySql),
+      artifacts = Seq(DailyRollup)),
 
     Q("s7_view_from_sql",
       "S7 (SQL-text path) — the monthly view created by executing a " +
@@ -184,7 +191,8 @@ object CoreQueries {
               "v_monthly_sales_summary" -> "s7_monthly_sales_summary"))
         view.orderBy($"year", $"month", $"country")
       },
-      Some(MonthlySql)),
+      Some(MonthlySql),
+      artifacts = Seq(DailyRollup)),
 
     Q("r1_top_products_by_revenue",
       "README 'Top Products by Revenue' analog " +
@@ -264,7 +272,8 @@ object CoreQueries {
         val r = dailyCountryRollupShared(s, d)
         r.orderBy(r("date"), r("country"))
       },
-      Some(s"""SELECT * FROM ($DailySql) daily ORDER BY date, country""")),
+      Some(s"""SELECT * FROM ($DailySql) daily ORDER BY date, country"""),
+      artifacts = Seq(DailyRollup)),
 
     Q("g1_mode_deterministic",
       "G1/G2 — deterministic MODE (count desc, value asc) per group " +
@@ -479,7 +488,8 @@ object CoreQueries {
       Some(
         s"""SELECT country, CAST(SUM(CAST(net_revenue AS DECIMAL(38,6))) AS DOUBLE) AS revenue
            |FROM ($DailySql) daily
-           |GROUP BY country ORDER BY revenue DESC, country LIMIT 5""".stripMargin)),
+           |GROUP BY country ORDER BY revenue DESC, country LIMIT 5""".stripMargin),
+      artifacts = Seq(DailyRollup)),
 
     Q("g11_mom_growth",
       "G11/W2(partitioned) — month-over-month revenue growth per " +
@@ -511,7 +521,8 @@ object CoreQueries {
            |SELECT year, month, country, total_revenue, prev_revenue,
            |  (total_revenue - prev_revenue) / prev_revenue * 100 AS growth_pct
            |FROM lagged WHERE prev_revenue IS NOT NULL
-           |ORDER BY country, year, month""".stripMargin)),
+           |ORDER BY country, year, month""".stripMargin),
+      artifacts = Seq(DailyRollup)),
 
     Q("w3_ranking",
       "Ranking windows — rank, dense_rank, ntile, cume_dist, lead over " +

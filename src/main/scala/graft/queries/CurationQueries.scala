@@ -480,7 +480,8 @@ object CurationQueries {
            |  CAST(CAST(floor(10000000.0 * (sqrt(CAST(n_tokens AS DOUBLE))
            |      / z.z)) AS BIGINT) AS DOUBLE) / CAST(n_tokens AS DOUBLE)
            |    AS epochs
-           |FROM counts, z ORDER BY source""".stripMargin)),
+           |FROM counts, z ORDER BY source""".stripMargin),
+      artifacts = Seq(TextQueries.BpeTokens)),
 
     Q("c8_corpus_shuffle",
       "Deterministic epoch shuffle + sharding — the training-order " +
@@ -624,7 +625,8 @@ object CurationQueries {
            |    AS BIGINT) AS kept_docid_sum
            |FROM sp s LEFT JOIN dirty d
            |  ON s.doc_id = d.doc_id AND s.split = d.split
-           |WHERE s.split != 'train' GROUP BY 1 ORDER BY s.split""".stripMargin)),
+           |WHERE s.split != 'train' GROUP BY 1 ORDER BY s.split""".stripMargin),
+      artifacts = Seq(DedupQueries.EvalGrams)),
 
     Q("c13_stratified_eval",
       "Stratified eval-set sampling — up to 5 docs per (lang, " +

@@ -213,6 +213,12 @@ object DedupQueries {
         .withColumn("h", expr("graft_strhash(gram)")))
   }
 
+  /** The 13-gram index, read by d14, c11, d16, d16s and the corpus
+    * release.
+    */
+  val EvalGrams: Artifact = Artifact("eval_gram_index_build",
+    (s, d) => evalGramIndex(s, d): Unit)
+
   /** The d16/d16s exact-twin Bloom filter, shared by the batch row and
     * its streaming twin so the two engines compute the IDENTICAL bit
     * set: k=3 integer hash functions over the gram's poly digest (pure
@@ -271,6 +277,13 @@ object DedupQueries {
         .select(col("h"), col("gram")).distinct())
     (m, bits, evG)
   }
+
+  /** d16/d16s's eval-side Bloom artifacts (bit count, set bits, literal
+    * confirm table), built from [[EvalGrams]].
+    */
+  val BloomBits: Artifact = Artifact("bloom_bits_build",
+    (s, d) => bloomStatics(s, d): Unit)
+
   private val bloomMemoM =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
@@ -589,6 +602,10 @@ object DedupQueries {
     Scratch.memoized(s, s"shingles:$d", "shingles",
       hashedShingles(Graft.table(s, d, "documents")))
 
+  /** The hashed-shingle index, read by d2, d2b and d3. */
+  val Shingles: Artifact = Artifact("shingle_index_build",
+    (s, d) => corpusShingles(s, d): Unit)
+
   /** Per-corpus memoized LSH candidate pairs (shared by d2 and d3). */
   private def corpusCandidates(s: SparkSession, d: String): DataFrame =
     Scratch.memoized(s, s"lsh_cand:$d", "lsh_cand",
@@ -688,7 +705,8 @@ object DedupQueries {
            |FROM inter i JOIN sizes sa ON i.doc_a = sa.doc_id
            |             JOIN sizes sb ON i.doc_b = sb.doc_id
            |WHERE CAST(i.i AS DOUBLE) / (sa.n + sb.n - i.i) >= 0.5
-           |ORDER BY doc_a, doc_b""".stripMargin)),
+           |ORDER BY doc_a, doc_b""".stripMargin),
+      artifacts = Seq(Shingles)),
 
     Q("d2b_minhash_jaccard_diff",
       "MinHash-estimated vs exact Jaccard DIFFERENTIAL over the LSH " +
@@ -781,7 +799,8 @@ object DedupQueries {
            |JOIN mh ma ON c.doc_a = ma.doc_id
            |JOIN mh mb ON c.doc_b = mb.doc_id
            |ORDER BY c.doc_a, c.doc_b""".stripMargin
-      }),
+      },
+      artifacts = Seq(Shingles)),
 
     Q("d3_minhash_lsh",
       "MinHash+LSH near-dup candidates — one compiled digest per " +
@@ -793,7 +812,8 @@ object DedupQueries {
       Some(
         s"""WITH hs AS ($HashedShinglesSql)
            |SELECT * FROM (${LshCandidatesSql("hs")}) c
-           |ORDER BY doc_a, doc_b""".stripMargin)),
+           |ORDER BY doc_a, doc_b""".stripMargin),
+      artifacts = Seq(Shingles)),
 
     Q("d4_simhash",
       "SimHash near-dup — 64-bit simhash from compiled poly-hash token " +
@@ -873,7 +893,8 @@ object DedupQueries {
            |  COUNT(*) AS n_shared
            |FROM pruned a JOIN pruned b ON a.fp = b.fp AND a.doc_id < b.doc_id
            |GROUP BY 1, 2 HAVING COUNT(*) >= 3
-           |ORDER BY doc_a, doc_b""".stripMargin)),
+           |ORDER BY doc_a, doc_b""".stripMargin),
+      artifacts = Seq(WinnowFps)),
 
     Q("d8_split_decontam",
       "Train-vs-eval split decontamination — the composition the two " +
@@ -920,7 +941,8 @@ object DedupQueries {
            |  COUNT(DISTINCT doc_a) AS n_contaminating_train_docs,
            |  COUNT(*) AS n_pairs
            |FROM pairs GROUP BY 1 ORDER BY split""".stripMargin
-      }),
+      },
+      artifacts = Seq(WinnowFps)),
 
     Q("d5_embedding_neardup",
       "Embedding-cosine near-dup — pairs blocked by the deterministic " +
@@ -1099,7 +1121,8 @@ object DedupQueries {
            |  COUNT(DISTINCT doc_a) AS n_docs_a,
            |  COUNT(DISTINCT doc_b) AS n_docs_b,
            |  CAST(SUM(n_shared) AS BIGINT) AS shared_fp_mass
-           |FROM dp GROUP BY 1, 2 ORDER BY source_a, source_b""".stripMargin)),
+           |FROM dp GROUP BY 1, 2 ORDER BY source_a, source_b""".stripMargin),
+      artifacts = Seq(WinnowFps)),
 
     Q("d11c_semantic_cluster_stats",
       "SemDeDup cell-population report — the OBSERVABLE form of the " +
@@ -1318,7 +1341,8 @@ object DedupQueries {
            |  COUNT(DISTINCT h.gram) AS n_dirty_grams
            |FROM sp s LEFT JOIN hits h
            |  ON s.doc_id = h.doc_id AND s.split = h.split
-           |WHERE s.split != 'train' GROUP BY 1 ORDER BY s.split""".stripMargin)),
+           |WHERE s.split != 'train' GROUP BY 1 ORDER BY s.split""".stripMargin),
+      artifacts = Seq(EvalGrams)),
 
     Q("d15_segment_dedup_rewrite",
       "C4-style sub-document dedup that EMITS THE REWRITTEN CORPUS — " +
@@ -1452,7 +1476,8 @@ object DedupQueries {
                 (col("n_train_docs") - col("n_dirty_exact")).cast("double"))
               .as("fp_rate"))
       },
-      Some(BloomDecontamOracleSql)),
+      Some(BloomDecontamOracleSql),
+      artifacts = Seq(EvalGrams, BloomBits)),
 
     Q("d16s_decontam_stream",
       "§2.12 driver-visible streaming row #9 — d16's Bloom-prefiltered " +
@@ -1476,9 +1501,10 @@ object DedupQueries {
         "dial for a stateless filter, whose per-batch fixed costs " +
         "(static-side re-reads, sink commits) amortize over batch " +
         "mass; SCALE.md r17 measures both ends on the 10x census " +
-        "corpus via the SPARK_GRAFT_D16S_MAX_FILES instrument.",
+        "corpus.",
       (s, d) => graft.streaming.DecontamStream.decontamOneShot(s, d),
-      Some(BloomDecontamOracleSql)),
+      Some(BloomDecontamOracleSql),
+      artifacts = Seq(EvalGrams, BloomBits)),
 
     Q("d7_dedup_clusters",
       "Near-dup cluster formation — pair lists are not enough to dedup: " +
@@ -1978,6 +2004,10 @@ object DedupQueries {
     Scratch.memoized(s, s"winnow_fps:$d", "winnow_fps",
       winnowPruned(Graft.table(s, d, "documents")))
 
+  /** The pruned winnowing-fingerprint index, read by d6, d8 and d13. */
+  val WinnowFps: Artifact = Artifact("winnow_fp_index_build",
+    (s, d) => corpusWinnowPruned(s, d): Unit)
+
   /** DuckDB twin of [[winnowPruned]] — CTE chain ending in `pruned`. */
   private val WinnowPrunedSql: String = {
     val fold = "list_reduce(list_prepend(CAST(0 AS BIGINT), " +
@@ -2110,9 +2140,6 @@ object DedupQueries {
       if (prevCkpt ne null) { prevCkpt.unpersist(); prevCkpt = null }
       if (rounds % 4 != 0) prevCkpt = next
       labels = next
-      if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $rounds sum=$sumL done=$done " +
-          s"t=${System.nanoTime() / 1e9}")
     }
     labels
   }

@@ -245,7 +245,8 @@ object PipelineQueries {
           |JOIN orders o ON g.l_orderkey = o.o_orderkey
           |JOIN customer c ON o.o_custkey = c.c_custkey
           |JOIN nation n ON c.c_nationkey = n.n_nationkey
-          |GROUP BY 1 ORDER BY country""".stripMargin)),
+          |GROUP BY 1 ORDER BY country""".stripMargin),
+      artifacts = Seq(J6bBuckets)),
 
     Q("j9_coverage_anti",
       "J9/J8 — coverage anti-join: ship dates with no order placed that " +
@@ -509,7 +510,8 @@ object PipelineQueries {
            |    (SELECT COUNT(*) FROM sh2),
            |    (SELECT COUNT(*) FROM kept2),
            |    (SELECT CAST(COALESCE(SUM(doc_id), 0) AS BIGINT) FROM kept2)
-           |) ORDER BY batch""".stripMargin)),
+           |) ORDER BY batch""".stripMargin),
+      artifacts = Seq(O6Drive)),
 
     Q("w1p_forward_fill_partitioned",
       "W1(partitioned)/J4 — per-event-type daily series forward-fill " +
@@ -701,7 +703,8 @@ object PipelineQueries {
           .select(probe("doc_id"), probe("start"))
         DedupQueries.rewriteFromKept(toks, kept)
       },
-      Some(DedupQueries.SegRewriteOracleSql)),
+      Some(DedupQueries.SegRewriteOracleSql),
+      artifacts = Seq(O11Drive)),
 
     Q("o11b_segment_retire",
       "Takedown on the min-merge registry — the path MinMergeStats' " +
@@ -746,7 +749,8 @@ object PipelineQueries {
         DedupQueries.rewriteFromKept(toks, kept)
       },
       Some(DedupQueries.segRewriteOracleSqlOver(
-        "(SELECT * FROM documents WHERE doc_id % 2 = 0)"))),
+        "(SELECT * FROM documents WHERE doc_id % 2 = 0)")),
+      artifacts = Seq(O11bDrive)),
 
     Q("o11s_segment_stream",
       "§2.12 driver-visible streaming row #8: the min-merge segment " +
@@ -803,7 +807,8 @@ object PipelineQueries {
           .select(probe("doc_id"), probe("start"))
         DedupQueries.rewriteFromKept(toks, kept)
       },
-      Some(DedupQueries.SegRewriteOracleSql)),
+      Some(DedupQueries.SegRewriteOracleSql),
+      artifacts = Seq(O11sDrive)),
 
     Q("o12_incremental_cc",
       "Incremental near-dup LABEL maintenance — the FOURTH merge " +
@@ -849,7 +854,8 @@ object PipelineQueries {
             (col("l").isNull || col("doc_id") === col("l")).as("kept"))
           .orderBy("doc_id")
       },
-      Some(DedupQueries.CcVerdictOracleSql)),
+      Some(DedupQueries.CcVerdictOracleSql),
+      artifacts = Seq(O12Drive)),
 
     Q("o12s_cc_label_stream",
       "§2.12 driver-visible streaming row #10: the near-dup CC label " +
@@ -889,7 +895,8 @@ object PipelineQueries {
             (col("l").isNull || col("doc_id") === col("l")).as("kept"))
           .orderBy("doc_id")
       },
-      Some(DedupQueries.CcVerdictOracleSql)),
+      Some(DedupQueries.CcVerdictOracleSql),
+      artifacts = Seq(O12sDrive)),
 
     Q("o12b_cc_retire",
       "Takedown on the maintained CC label table — the graph-level " +
@@ -935,7 +942,8 @@ object PipelineQueries {
           .orderBy("doc_id")
       },
       Some(DedupQueries.ccVerdictOracleSqlOver(
-        "(SELECT * FROM documents WHERE doc_id % 3 != 1)"))),
+        "(SELECT * FROM documents WHERE doc_id % 3 != 1)")),
+      artifacts = Seq(O12bDrive)),
 
     Q("o7_scd2_dims",
       "Slowly-changing dimension TYPE 2 — the warehouse dimension-" +
@@ -1686,7 +1694,8 @@ object PipelineQueries {
         "conventions, null handling); piecewise per-operator oracles " +
         "cannot see them.",
       (s, d) => graft.pipeline.CorpusRelease.report(s, d),
-      Some(graft.pipeline.CorpusRelease.ReportOracleSql)),
+      Some(graft.pipeline.CorpusRelease.ReportOracleSql),
+      artifacts = Seq(DedupQueries.EvalGrams)),
 
     Q("r3_dashboard_insights",
       "S9 — the reference dashboard's KEY INSIGHTS block " +
@@ -1877,6 +1886,12 @@ object PipelineQueries {
     (s.table(names._1), s.table(names._2))
   }
 
+  /** j6b's bucketed fact variants, written once at ingest: the row times
+    * the zero-Exchange join alone.
+    */
+  val J6bBuckets: Artifact = Artifact("j6b_bucket_build",
+    (s, d) => j6bBucketedFacts(s, d): Unit)
+
   /** Just the bucketed fact⋈fact join — package-visible so PlanSpec
     * can assert the plan carries no Exchange at all.
     */
@@ -1935,6 +1950,12 @@ object PipelineQueries {
     }
   }
 
+  /** o11's three-fold MinMergeStats drive, redelivery included: the row
+    * times the registry probe + rewrite read path.
+    */
+  val O11Drive: Artifact = Artifact("o11_registry_drive",
+    (s, d) => o11Warehouse(s, d): Unit)
+
   private val o12Memo =
     new java.util.concurrent.ConcurrentHashMap[String, graft.engine.Catalog]()
 
@@ -1978,6 +1999,12 @@ object PipelineQueries {
     }
   }
 
+  /** o12's four-fold IncrementalCc drive, redelivery included: the row
+    * times the maintained-table read.
+    */
+  val O12Drive: Artifact = Artifact("o12_cc_drive",
+    (s, d) => o12Warehouse(s, d): Unit)
+
   private val o12sMemo =
     new java.util.concurrent.ConcurrentHashMap[String, graft.engine.Catalog]()
 
@@ -2017,6 +2044,12 @@ object PipelineQueries {
     }
   }
 
+  /** o12s's three-micro-batch CcLabelStream drive: the row times the
+    * maintained-table read.
+    */
+  val O12sDrive: Artifact = Artifact("o12s_stream_drive",
+    (s, d) => o12sWarehouse(s, d): Unit)
+
   private val o11sMemo =
     new java.util.concurrent.ConcurrentHashMap[String, graft.engine.Catalog]()
 
@@ -2052,6 +2085,12 @@ object PipelineQueries {
       }
     }
   }
+
+  /** o11s's four-micro-batch SegmentRegistryStream drive and its
+    * drive-end compaction: the row times the registry probe + rewrite.
+    */
+  val O11sDrive: Artifact = Artifact("o11s_stream_drive",
+    (s, d) => o11sWarehouse(s, d): Unit)
 
   private val o11bMemo =
     new java.util.concurrent.ConcurrentHashMap[String, graft.engine.Catalog]()
@@ -2098,6 +2137,12 @@ object PipelineQueries {
     }
   }
 
+  /** o11b's fold + compact + rebuild takedown drive: the row times the
+    * post-takedown read.
+    */
+  val O11bDrive: Artifact = Artifact("o11b_retire_drive",
+    (s, d) => o11bWarehouse(s, d): Unit)
+
   private val o12bMemo =
     new java.util.concurrent.ConcurrentHashMap[String, graft.engine.Catalog]()
 
@@ -2139,6 +2184,12 @@ object PipelineQueries {
     }
   }
 
+  /** o12b's fold + compact + retire drive: the row times the
+    * post-takedown read.
+    */
+  val O12bDrive: Artifact = Artifact("o12b_retire_drive",
+    (s, d) => o12bWarehouse(s, d): Unit)
+
   private val o6Memo =
     new java.util.concurrent.ConcurrentHashMap[String, graft.engine.Catalog]()
 
@@ -2176,4 +2227,10 @@ object PipelineQueries {
       }
     }
   }
+
+  /** o6's two-batch IncrementalNearDup drive: production pays the fold
+    * once per arriving batch; the row times the maintained-corpus read.
+    */
+  val O6Drive: Artifact = Artifact("o6_ingest_drive",
+    (s, d) => o6Warehouse(s, d): Unit)
 }

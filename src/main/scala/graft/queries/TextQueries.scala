@@ -104,6 +104,10 @@ object TextQueries {
     Scratch.memoized(s, s"bpe_doc_tokens:$d", "bpe_doc_tokens",
       bpeDocTokensPlan(s, d))
 
+  /** The BPE-encoded corpus, read by t16 and c9b. */
+  val BpeTokens: Artifact = Artifact("bpe_token_corpus_build",
+    (s, d) => bpeDocTokens(s, d): Unit)
+
   /** The un-memoized computation (separate so PlanSpec can assert the
     * plan shape BEFORE materialization hides it behind a parquet scan).
     */
@@ -706,7 +710,8 @@ object TextQueries {
       Some(
         s"""WITH $BpeDocTokCteSql
            |SELECT doc_id, n_words, n_base_tokens, n_bpe_tokens
-           |FROM doctok ORDER BY doc_id""".stripMargin)),
+           |FROM doctok ORDER BY doc_id""".stripMargin),
+      artifacts = Seq(BpeTokens)),
 
     Q("t14_perplexity_buckets",
       "CCNet-style perplexity bucketing — the corpus-partitioning step " +
@@ -1027,7 +1032,8 @@ object TextQueries {
         "query terms survive into the join; top-k is one window per " +
         "query id over that tiny candidate set.",
       (s, d) => bm25SessionTopK(s, d),
-      Some(Bm25OracleSql)),
+      Some(Bm25OracleSql),
+      artifacts = Seq(Bm25Tf)),
 
     Q("t17b_bm25_maintained",
       "t17's BM25 scoring run from MAINTAINED corpus statistics — the " +
@@ -1054,7 +1060,8 @@ object TextQueries {
         bm25TopK(bm25Scored(
           cat.table("postings_list"), df_, cat.table("doc_len"), st))
       },
-      Some(Bm25OracleSql)),
+      Some(Bm25OracleSql),
+      artifacts = Seq(T17bIndex)),
 
     Q("t19_hybrid_rrf",
       "Hybrid retrieval — BM25 and dense-vector candidate lists fused " +
@@ -1095,7 +1102,8 @@ object TextQueries {
           .select(col("qid"), col("doc_id"), col("vrnk").cast("long").as("vrnk"))
         rrfFuse(bm25, vtop)
       },
-      Some(HybridRrfOracleSql)),
+      Some(HybridRrfOracleSql),
+      artifacts = Seq(Bm25Tf)),
 
     Q("t19b_hybrid_rrf_indexed",
       "t19's hybrid fusion with the dense arm swapped ONTO THE ANN " +
@@ -1136,7 +1144,8 @@ object TextQueries {
             col("vrnk").cast("long").as("vrnk"))
         rrfFuse(bm25, vtop)
       },
-      Some(HybridRrfIndexedOracleSql))
+      Some(HybridRrfIndexedOracleSql),
+      artifacts = Seq(Bm25Tf))
   )
 
   /** Rank-only RRF fusion of two per-query candidate lists: full-outer
@@ -1206,6 +1215,10 @@ object TextQueries {
     }
   }
 
+  /** t17b's maintained BM25 postings. */
+  val T17bIndex: Artifact = Artifact("t17b_index_build",
+    (s, d) => t17bIndex(s, d): Unit)
+
   /** t17's full session-computed BM25 pipeline (tokenize → tf/df/dl →
     * score → per-query top-5), shared with t19's BM25 arm so both rows
     * run the identical Column expressions.
@@ -1226,6 +1239,10 @@ object TextQueries {
           explode(split(trim(col("text")), "\\s+")).as("tk"))
         .groupBy(col("doc_id"), col("tk"))
         .agg(count(lit(1)).as("tf")))
+
+  /** The BM25 term-frequency index, read by t17, t19 and t19b. */
+  val Bm25Tf: Artifact = Artifact("bm25_tf_index_build",
+    (s, d) => bm25TfIndex(s, d): Unit)
 
   private[graft] def bm25SessionTopK(s: SparkSession, d: String): DataFrame = {
     val tf = bm25TfIndex(s, d)

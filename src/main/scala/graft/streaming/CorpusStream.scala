@@ -35,26 +35,21 @@ object CorpusStream {
   // character class keeps the string a glob — the file-stream source
   // rejects a bare file path (basePath must be a directory or glob) —
   // while matching only the literal name.
-  /** `maxFilesPerTrigger` is the micro-batch SIZING dial (r16 verdict
-    * #5): unset, Trigger.AvailableNow packs every available file into
-    * one maximal batch — the MEASURED right default for the stateless
-    * decontam/curation filters. The r17 paired legs on the 8-file 10x
-    * census staging (SCALE.md r17, "d16s micro-batch sizing dial")
-    * priced the two ends: 1 maximal batch = 12.3 s vs 8 per-file
-    * batches = 40.4 s, i.e. ~4.0 s FIXED cost per extra micro-batch
-    * (stream-static join static-side re-read, file-sink commit,
-    * per-batch planning — all amortized over batch mass, none over
-    * batch count), with no state-size or latency term pulling the
-    * other way for a stateless filter. Set it only to buy freshness
-    * under a latency SLO, at that ~4 s/batch price on this corpus
-    * shape.
+  /** No `maxFilesPerTrigger`: Trigger.AvailableNow packs every
+    * available file into one maximal batch — the MEASURED right
+    * micro-batch size for the stateless decontam/curation filters
+    * (r16 verdict #5). The r17 paired legs on the 8-file 10x census
+    * staging (SCALE.md r17, "d16s micro-batch sizing dial") priced the
+    * two ends: 1 maximal batch = 12.3 s vs 8 per-file batches = 40.4 s,
+    * i.e. ~4.0 s FIXED cost per extra micro-batch (stream-static join
+    * static-side re-read, file-sink commit, per-batch planning — all
+    * amortized over batch mass, none over batch count), with no
+    * state-size or latency term pulling the other way for a stateless
+    * filter.
     */
-  def source(spark: SparkSession, dir: String,
-             maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r = spark.readStream.schema(DocumentsSchema)
-    maxFilesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n.toString))
+  def source(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(DocumentsSchema)
       .parquet(s"$dir/documents.parque[t]")
-  }
 
   /** The c1-style per-row curation: t2 quality score, language
     * allowlist, c2 deterministic mixture predicate. Pure projection +

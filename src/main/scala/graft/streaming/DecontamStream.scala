@@ -52,12 +52,9 @@ object DecontamStream {
     val (m, bits, evG) = DedupQueries.bloomStatics(spark, dir)
     // STREAM side: train docs with >= N tokens (the docs d16's gram
     // index gives rows to — the split and the token floor are pure
-    // per-row functions). Micro-batch sizing: default = one maximal
-    // AvailableNow batch (see CorpusStream.source); the env dial is
-    // the census instrument for measuring the other end.
-    val mft = sys.env.get("SPARK_GRAFT_D16S_MAX_FILES")
-      .flatMap(_.toIntOption)
-    val docs = CorpusStream.source(spark, dir, mft)
+    // per-row functions). Micro-batch sizing: one maximal AvailableNow
+    // batch (see CorpusStream.source).
+    val docs = CorpusStream.source(spark, dir)
       .filter(Splits.splitCol === "train")
       .withColumn("w", split(trim(col("text")), "\\s+"))
       .filter(size(col("w")) >= N)

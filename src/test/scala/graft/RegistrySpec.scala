@@ -50,6 +50,24 @@ class RegistrySpec extends SparkTestBase {
         s"BIGINT/DOUBLE before emitting):\n  ${offenders.mkString("\n  ")}")
   }
 
+  test("each artifact name is declared by exactly one Artifact value, " +
+      "and the five daily-rollup readers declare it") {
+    val declared = Registry.all.flatMap(_.artifacts)
+    assert(!declared.contains(null), "an artifact read before its declaration")
+    val clashes = declared.groupBy(_.name).collect {
+      case (n, as) if as.distinct.size > 1 => n
+    }
+    assert(clashes.isEmpty,
+      s"artifact names declared with different builders: ${clashes.mkString(", ")}")
+    val rollupReaders = Registry.all
+      .filter(_.artifacts.contains(graft.queries.CoreQueries.DailyRollup))
+      .map(_.name).toSet
+    val missing = Set("g5_daily_country_rollup", "g6_monthly_summary",
+      "g9_topk_revenue", "g11_mom_growth", "s7_view_from_sql") -- rollupReaders
+    assert(missing.isEmpty, s"rows reading the daily rollup without " +
+      s"declaring it: ${missing.mkString(", ")}")
+  }
+
   test("registered query names are unique") {
     val dupes = Registry.all.groupBy(_.name).filter(_._2.size > 1).keys
     assert(dupes.isEmpty, s"duplicate registry names: ${dupes.mkString(", ")}")

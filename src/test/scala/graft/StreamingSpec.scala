@@ -562,9 +562,8 @@ class StreamingSpec extends SparkTestBase {
     assert(perBucket.values.max <= MinMergeStats.AutoCompactDeltas,
       s"reader merge width exceeded the dial: max per-bucket delta " +
         s"count ${perBucket.values.max} > ${MinMergeStats.AutoCompactDeltas}")
-    // census hook (SPARK_GRAFT_COMPACT_DELTAS sweep): the dial's two
-    // sides in one line — dirs = read amplification, soak wall = the
-    // write-amortization cost paid by the stream
+    // the dial's two sides in one line — dirs = read amplification,
+    // soak wall = the write-amortization cost paid by the stream
     info(s"soak: dial=${MinMergeStats.AutoCompactDeltas} " +
       s"deltaDirs=${deltas.size} maxPerBucket=${perBucket.values.max}")
     // content: the 50-fold soak must equal the one-shot batch fold
