@@ -211,7 +211,11 @@ object Catalog {
   }
 }
 
-final class Catalog(val spark: SparkSession, val warehouse: String) {
+final class Catalog private[graft] (val spark: SparkSession,
+    val warehouse: String, private[graft] val store: Store) {
+
+  def this(spark: SparkSession, warehouse: String) =
+    this(spark, warehouse, LocalStore)
 
   // a warehouse is mutable by definition — make Scratch.memoized's
   // immutability guard aware of it (user-supplied paths included)
@@ -229,21 +233,19 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
   // session) and is stolen. Release with [[close]] when handing the
   // warehouse to another session.
   private val canonicalRoot = new java.io.File(warehouse).getCanonicalPath
+  private val lockFile = s"$warehouse/_LOCK"
   if (!Catalog.claimRoot(canonicalRoot))
     throw new IllegalStateException(
       s"Catalog: warehouse '$warehouse' is already open in this process — " +
         "warehouses are single-writer (compact/saveVersioned/incremental " +
         "ingest assume exclusive ownership); close() the other Catalog first")
   try {
-    val root = new java.io.File(warehouse)
-    root.mkdirs(): Unit
-    val lock = new java.io.File(root, "_LOCK")
     val selfPid = ProcessHandle.current().pid()
     def startOf(h: ProcessHandle): Long =
       h.info().startInstant()
         .map[java.lang.Long](i => java.lang.Long.valueOf(i.toEpochMilli))
         .orElse(java.lang.Long.valueOf(0L)).longValue()
-    if (lock.exists()) {
+    if (store.exists(lockFile)) {
       // Lock format `pid:startEpochMillis` — the start time pins the
       // holder's IDENTITY, not just its number: pids recycle, and a
       // lock whose dead holder's pid was reassigned to an unrelated
@@ -253,9 +255,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
       // is a recycled pid ⇒ the lock is stale and stolen. Legacy
       // pid-only locks (no start recorded) keep the conservative
       // pid-alive check.
-      val txt = scala.util.Try(new String(
-        java.nio.file.Files.readAllBytes(lock.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).trim).getOrElse("")
+      val txt = scala.util.Try(store.read(lockFile)).getOrElse("")
       // Mixed-version hazard (accepted, documented): a build that
       // predates the `pid:start` format parses this whole file with
       // trim.toLong, throws, reads holder=None, and steals a lock a
@@ -283,12 +283,10 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
       if (liveForeign)
         throw new IllegalStateException(
           s"Catalog: warehouse '$warehouse' is locked by live process " +
-            s"${holder.get} (${lock.getPath}) — warehouses are " +
+            s"${holder.get} ($lockFile) — warehouses are " +
             "single-writer; close() it there or wait for that session")
     }
-    java.nio.file.Files.write(lock.toPath,
-      s"$selfPid:${startOf(ProcessHandle.current())}".getBytes(
-        java.nio.charset.StandardCharsets.UTF_8)): Unit
+    store.putAtomic(lockFile, s"$selfPid:${startOf(ProcessHandle.current())}")
   } catch {
     case t: Throwable => Catalog.releaseRoot(canonicalRoot); throw t
   }
@@ -318,22 +316,12 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
   def close(): Unit = synchronized {
     if (!released) {
       released = true
-      val lock = new java.io.File(warehouse, "_LOCK")
-      val txt = scala.util.Try(new String(
-        java.nio.file.Files.readAllBytes(lock.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).trim).getOrElse("")
-      if (txt == selfLockText) lock.delete(): Unit
-      Catalog.releaseRoot(canonicalRoot)
+      try {
+        if (scala.util.Try(store.read(lockFile)).toOption.contains(selfLockText))
+          store.delete(lockFile)
+      } finally Catalog.releaseRoot(canonicalRoot)
     }
   }
-
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-    f.delete(): Unit
-  }
-  private def du(f: java.io.File): Long =
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(du).sum
-    else f.length()
 
   /** Order-independent checksum of a warehouse table (see [[Checksum]]). */
   def checksum(name: String, cols: Seq[(String, Checksum.Kind)]): DataFrame =
@@ -407,74 +395,99 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     back
   }
 
-  /** In-progress marker for [[compact]]'s non-atomic swap: created
-    * before the live dir moves aside, removed only after the swap fully
-    * completes — so any crash that can leave `.__compact_old` debris
-    * (root or leaf, at any partition depth) also leaves the marker.
-    * Read paths gate the O(partition dirs) heal walk on this single
-    * stat instead of walking every partition on every [[table]] call.
-    */
-  private def compactMarker(tableRoot: String): java.io.File =
-    new java.io.File(s"$warehouse/$tableRoot.__compacting")
+  // ---- compaction swap -----------------------------------------------
+  // [[compact]], [[compactPartitions]] and [[saveStaged]] replace a live
+  // directory X (the table root or a partition leaf) by a staged copy:
+  //   1. write the in-progress marker `<table>.__compacting`
+  //   2. write the replacement to `.X.__compact_tmp`
+  //   3. rename X → `.X.__compact_old`, then `.X.__compact_tmp` → X
+  //   4. delete `.X.__compact_old`, then the marker
+  // Staged and moved-aside copies carry a leading '.', which Spark's
+  // file index skips, so partition discovery never reads them as
+  // partition values. The marker is written before anything else and
+  // removed last, so every crash state carries it, and the first
+  // operator to touch the table after a crash ([[table]], [[exists]],
+  // or a compaction entry point) gates the heal on that one stat.
 
-  /** Cheap read-path heal gate: two stats (the [[compactMarker]] and a
-    * root-level moved-aside dir) decide whether the full
-    * [[healInterruptedCompact]] walk runs. Keeps hot readers (e.g.
-    * IncrementalRollup's per-batch `table()` calls) O(1) while the
-    * crashed-compact repair stays reachable through the FIRST operator
-    * to touch the table after the crash.
+  private val Staged = ".__compact_tmp"
+  private val MovedAside = ".__compact_old"
+
+  private def compactMarker(name: String): String =
+    s"$warehouse/${name.split('/').head}.__compacting"
+
+  /** `dir`'s hidden sibling `.<base><suffix>`. */
+  private def aside(dir: String, suffix: String): String = {
+    val i = dir.lastIndexOf('/')
+    s"${dir.substring(0, i)}/.${dir.substring(i + 1)}$suffix"
+  }
+
+  /** Heal a crashed swap of `name`'s table if its marker is present:
+    * at every level of the table's tree (the warehouse entry and each
+    * partition directory), a staged copy is deleted, and a moved-aside
+    * copy is deleted when its live directory exists (the swap
+    * completed) or renamed back when it does not (roll back to the
+    * pre-swap table). Then the marker goes.
     */
   private def healIfMarked(name: String): Unit = {
-    val root = name.split('/').head
-    if (compactMarker(root).exists() ||
-        new java.io.File(s"$warehouse/$root.__compact_old").exists()) {
-      healInterruptedCompact(name)
-      compactMarker(root).delete(): Unit
+    val marker = compactMarker(name)
+    if (store.exists(marker)) {
+      val root = name.split('/').head
+      // the live names left in `parent` after resolving its debris
+      def heal(parent: String, names: Seq[String]): Seq[String] = {
+        def debris(suffix: String) =
+          names.filter(n => n.startsWith(".") && n.endsWith(suffix))
+        debris(Staged).foreach(n => store.delete(s"$parent/$n"))
+        val restored = debris(MovedAside).flatMap { n =>
+          val live = n.substring(1, n.length - MovedAside.length)
+          if (names.contains(live)) { store.delete(s"$parent/$n"); None }
+          else { store.rename(s"$parent/$n", s"$parent/$live"); Some(live) }
+        }
+        names.filterNot(_.startsWith(".")) ++ restored
+      }
+      def walk(dir: String): Unit =
+        heal(dir, store.listDirs(dir)).filter(_.contains("="))
+          .foreach(n => walk(s"$dir/$n"))
+      heal(warehouse, store.listDirs(warehouse).filter(n =>
+          n == root || n == s".$root$Staged" || n == s".$root$MovedAside"))
+        .foreach(n => walk(s"$warehouse/$n"))
+      store.delete(marker)
     }
   }
 
-  /** Heal a [[compact]] that crashed between its two renames: the live
-    * dir is missing but the moved-aside copy is intact. Run in full by
-    * the compaction entry points (compact / compactPartitions) and by
-    * any read that sees the [[compactMarker]] or root debris
-    * ([[healIfMarked]]), so the repair is reachable through the FIRST
-    * operator to touch the table after the crash, not only through a
-    * retry of the operator that crashed. Covers both the root swap and
-    * LEAF swaps inside a partitioned tree — without the leaf walk,
-    * partition discovery would misread a leftover `X.__compact_old` as
-    * the partition value 'X.__compact_old' and report the real X
-    * missing.
+  /** Run `body` (swaps of directories inside `name`'s table) under the
+    * table's in-progress marker. No `finally`: a failed body leaves the
+    * marker, exactly as a crash would, and the next toucher heals.
     */
-  private def healInterruptedCompact(name: String): Unit = {
-    val dir = new java.io.File(s"$warehouse/$name")
-    val old = new java.io.File(s"$warehouse/$name.__compact_old")
-    if (!dir.exists() && old.exists())
-      require(old.renameTo(dir),
-        s"compact($name): could not restore $old after an interrupted swap")
-    healLeafCompacts(dir)
+  private def marked(name: String)(body: => Unit): Unit = {
+    store.putAtomic(compactMarker(name), "")
+    body
+    store.delete(compactMarker(name))
   }
 
-  private def healLeafCompacts(dir: java.io.File): Unit = {
-    Option(dir.listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.endsWith(".__compact_old"))
-      .foreach { o =>
-        val live = new java.io.File(dir,
-          o.getName.stripSuffix(".__compact_old"))
-        if (!live.exists())
-          require(o.renameTo(live),
-            s"compact: could not restore $o after an interrupted leaf swap")
-      }
-    // re-list so a just-healed dir is walked for nested partitions too
-    Option(dir.listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.contains("=") &&
-        !f.getName.contains(".__compact"))
-      .foreach(healLeafCompacts)
+  /** Steps 2-4 of the swap for `name` (caller holds the marker):
+    * `write` receives the staging path.
+    */
+  private def swap(name: String)(write: String => Unit): Unit = {
+    val dir = s"$warehouse/$name"
+    write(aside(dir, Staged))
+    store.rename(dir, aside(dir, MovedAside))
+    store.rename(aside(dir, Staged), dir)
+    store.delete(aside(dir, MovedAside))
+  }
+
+  /** Read `name` back and (re-)register it — partition directories
+    * ('table/part=value') are not table names and stay unregistered.
+    */
+  private def reread(name: String): DataFrame = {
+    val back = spark.read.parquet(s"$warehouse/$name")
+    if (!name.exists(c => c == '/' || c == '=')) back.createOrReplaceTempView(name)
+    back
   }
 
   /** Whether `name` has ever been materialized in this warehouse. */
   def exists(name: String): Boolean = {
     healIfMarked(name)
-    new java.io.File(s"$warehouse/$name").exists()
+    store.exists(s"$warehouse/$name")
   }
 
   /** Small-file compaction — the warehouse-hygiene operator every
@@ -485,26 +498,28 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     * (listing, footer reads, task scheduling). Rewrites the table into
     * `ceil(bytes / targetBytes)` files (preserving `sortBy` clustering
     * when given). The swap is two renames, so it is not atomic — but it
-    * IS self-healing: the crash window (live dir moved aside, new dir
-    * not yet in place) is repaired on the next compact() call by
-    * restoring the `.__compact_old` copy, and a failed second rename
-    * rolls back in-process. Content-invariance is the caller-visible
-    * contract — [[Checksum]] before == after (proven in PipelineSpec).
+    * IS self-healing: every crash state carries the in-progress marker,
+    * and the next reader or writer of the table restores the pre- or
+    * the post-compaction directory (see the swap notes above; every
+    * crash point is enumerated by CrashPointSpec). Content-invariance
+    * is the caller-visible contract — [[Checksum]] before == after.
     */
   def compact(name: String, targetBytes: Long = 128L * 1024 * 1024,
               sortBy: Seq[String] = Nil): DataFrame = {
-    val dir = s"$warehouse/$name"
-    val old = new java.io.File(s"$dir.__compact_old")
-    healInterruptedCompact(name)
+    healIfMarked(name)
     // A partition-keyed table must be compacted per partition directory
     // (pass 'table/part=value' as the name): rewriting the root would
     // silently flatten the partition layout and downstream scans would
     // lose partition pruning.
-    require(!Option(new java.io.File(dir).listFiles()).toSeq.flatten
-        .exists(f => f.isDirectory && f.getName.contains("=")),
+    require(!store.listDirs(s"$warehouse/$name").exists(_.contains("=")),
       s"compact($name): partitioned table — compact one partition dir at a time")
-    val bytes = du(new java.io.File(dir))
-    val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+    marked(name)(rewrite(name, targetBytes, sortBy))
+    reread(name)
+  }
+
+  private def rewrite(name: String, targetBytes: Long, sortBy: Seq[String]): Unit = {
+    val dir = s"$warehouse/$name"
+    val nFiles = math.max(1, math.ceil(store.size(dir).toDouble / targetBytes).toInt)
     val df = spark.read.parquet(dir)
     val shaped =
       if (sortBy.nonEmpty)
@@ -513,42 +528,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
           .sortWithinPartitions(sortBy.map(
             org.apache.spark.sql.functions.col): _*)
       else df.repartition(nFiles)
-    val tmp = s"$dir.__compact_tmp"
-    shaped.write.mode("overwrite").parquet(tmp)
-    swapIn(name, "compact")
-  }
-
-  /** The two-rename swap shared by [[compact]] and [[saveStaged]]:
-    * promotes `<name>.__compact_tmp` (already fully written) to the
-    * live directory. Marker BEFORE the first rename, removed only
-    * after the swap is fully done — a crash anywhere inside the window
-    * leaves the marker, which is what lets plain readers gate the heal
-    * walk on one stat.
-    */
-  private def swapIn(name: String, op: String): DataFrame = {
-    val dir = s"$warehouse/$name"
-    val old = new java.io.File(s"$dir.__compact_old")
-    val marker = compactMarker(name.split('/').head)
-    marker.createNewFile(): Unit
-    rm(old) // stale leftovers from an interrupted previous swap
-    require(new java.io.File(dir).renameTo(old),
-      s"$op($name): could not move the live table aside")
-    if (!new java.io.File(s"$dir.__compact_tmp")
-        .renameTo(new java.io.File(dir))) {
-      // roll back so readers keep the previous live table
-      old.renameTo(new java.io.File(dir)): Unit
-      marker.delete(): Unit
-      throw new IllegalStateException(
-        s"$op($name): swap failed, original restored")
-    }
-    rm(old)
-    marker.delete(): Unit
-    val back = spark.read.parquet(dir)
-    // a partition directory ('table/part=value') is not a table name —
-    // only plain identifiers get (re-)registered as views
-    if (!name.exists(c => c == '/' || c == '='))
-      back.createOrReplaceTempView(name)
-    back
+    swap(name)(tmp => store.writeParquet(shaped.write.mode("overwrite"), tmp))
   }
 
   /** Overwrite an EXISTING table with a frame that reads it — the
@@ -565,8 +545,9 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
   def saveStaged(name: String, df: DataFrame): DataFrame = {
     require(exists(name),
       s"saveStaged($name): table does not exist — use save()")
-    df.write.mode("overwrite").parquet(s"$warehouse/$name.__compact_tmp")
-    swapIn(name, "saveStaged")
+    marked(name)(swap(name)(tmp =>
+      store.writeParquet(df.write.mode("overwrite"), tmp)))
+    reread(name)
   }
 
   /** Per-partition compaction of a partitioned table — the one-call
@@ -574,32 +555,25 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     * partition tree to its leaf directories (multi-level layouts
     * included) and compacts each leaf independently, so the partition
     * layout — and downstream partition pruning — is preserved
-    * byte-for-byte in structure. Each leaf reuses [[compact]]'s
-    * two-rename swap and its crash healing. At cluster scale the leaf
+    * byte-for-byte in structure. Each leaf uses [[compact]]'s
+    * two-rename swap, all under one marker. At cluster scale the leaf
     * compactions are independent jobs; here they run sequentially,
     * which is the same I/O either way on one machine.
     */
   def compactPartitions(name: String, targetBytes: Long = 128L * 1024 * 1024,
                         sortBy: Seq[String] = Nil): DataFrame = {
-    healInterruptedCompact(name)
-    val root = new java.io.File(s"$warehouse/$name")
-    require(root.isDirectory, s"compactPartitions($name): no such table")
-    // leaf-crash healing already ran in healInterruptedCompact above
+    healIfMarked(name)
+    require(store.exists(s"$warehouse/$name"), s"compactPartitions($name): no such table")
     def leaves(rel: String): Seq[String] = {
-      val parts = Option(new java.io.File(s"$warehouse/$rel").listFiles())
-        .toSeq.flatten
-        .filter(f => f.isDirectory && f.getName.contains("=") &&
-          !f.getName.contains(".__compact"))
+      val parts = store.listDirs(s"$warehouse/$rel").filter(_.contains("="))
       if (parts.isEmpty) Seq(rel)
-      else parts.flatMap(p => leaves(s"$rel/${p.getName}"))
+      else parts.flatMap(p => leaves(s"$rel/$p"))
     }
     val leafDirs = leaves(name)
     require(leafDirs != Seq(name),
       s"compactPartitions($name): not partitioned — use compact()")
-    leafDirs.foreach(compact(_, targetBytes, sortBy): Unit)
-    val back = spark.read.parquet(s"$warehouse/$name")
-    back.createOrReplaceTempView(name)
-    back
+    marked(name)(leafDirs.foreach(rewrite(_, targetBytes, sortBy)))
+    reread(name)
   }
 
   /** Bucketed CTAS: co-locates rows by `bucketCols` so joins and
@@ -631,15 +605,17 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
   // Old versions stay readable (and checksum-stable) until vacuumed.
 
   private def versionDir(name: String, v: Int) = s"$warehouse/$name/_v=$v"
-  private def pointerFile(name: String) =
-    java.nio.file.Paths.get(s"$warehouse/$name/_LATEST")
+  private def pointerFile(name: String) = s"$warehouse/$name/_LATEST"
 
   /** Latest committed version of a versioned table, if any. */
   def latestVersion(name: String): Option[Int] =
-    if (java.nio.file.Files.exists(pointerFile(name)))
-      new String(java.nio.file.Files.readAllBytes(pointerFile(name)),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toIntOption
+    if (store.exists(pointerFile(name))) store.read(pointerFile(name)).toIntOption
     else None
+
+  /** Version numbers of every `_v=` directory, committed or orphan. */
+  private def versionDirs(name: String): Seq[Int] =
+    store.listDirs(s"$warehouse/$name").filter(_.startsWith("_v="))
+      .flatMap(_.stripPrefix("_v=").toIntOption)
 
   /** All committed versions of a versioned table, ascending — the
     * discoverability half of the retention contract: a training run
@@ -650,26 +626,19 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     */
   def versions(name: String): Seq[Int] = {
     val latest = latestVersion(name).getOrElse(return Nil)
-    Option(new java.io.File(s"$warehouse/$name").listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("_v="))
-      .flatMap(_.getName.stripPrefix("_v=").toIntOption)
-      .filter(_ <= latest)
-      .sorted
+    versionDirs(name).filter(_ <= latest).sorted
   }
 
   /** Write `df` as the next version and commit it via an atomic
-    * pointer flip. Returns the committed version number.
+    * pointer flip. Returns the committed version number. A caller that
+    * crashed inside this call re-runs it when [[latestVersion]] still
+    * names the version it started from (the orphan, if any, is
+    * overwritten: versions are assigned from the pointer).
     */
   def saveVersioned(name: String, df: DataFrame): Int = {
     val next = latestVersion(name).getOrElse(0) + 1
-    df.write.mode("overwrite").parquet(versionDir(name, next))
-    val tmp = java.nio.file.Files.createTempFile(
-      java.nio.file.Paths.get(s"$warehouse/$name"), "_LATEST.", ".tmp")
-    java.nio.file.Files.write(tmp, next.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, pointerFile(name),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    store.writeParquet(df.write.mode("overwrite"), versionDir(name, next))
+    store.putAtomic(pointerFile(name), next.toString)
     next
   }
 
@@ -690,11 +659,8 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
   def vacuumVersions(name: String, keep: Int): Unit = {
     require(keep >= 1, "must keep at least the latest version")
     val latest = latestVersion(name).getOrElse(return)
-    Option(new java.io.File(s"$warehouse/$name").listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("_v="))
-      .map(f => f -> f.getName.stripPrefix("_v=").toInt)
-      .filter { case (_, v) => v <= latest - keep || v > latest }
-      .foreach { case (f, _) => rm(f) }
+    versionDirs(name).filter(v => v <= latest - keep || v > latest)
+      .foreach(v => store.delete(versionDir(name, v)))
   }
 
   // Views registered through THIS catalog — tables() reports them
@@ -758,9 +724,9 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     * database's and whose backing files may be gone.
     */
   def tables(): Seq[String] = {
-    val dirs = Option(new java.io.File(warehouse).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && !f.getName.contains(".__compact"))
-      .map(_.getName)
+    // '.'-prefixed entries are a crashed compaction's staged or
+    // moved-aside copies, not tables
+    val dirs = store.listDirs(warehouse).filterNot(_.startsWith("."))
     (dirs ++ viewNames).distinct.sorted
   }
 
@@ -770,8 +736,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
 
   /** S11: database-file lifecycle — drop the warehouse directory. */
   def dropWarehouse(): Unit = synchronized {
-    val root = new java.io.File(warehouse)
-    if (root.exists()) rm(root)
+    store.delete(warehouse)
     // Dropping the warehouse ends this instance's ownership: release
     // the single-writer claim (the _LOCK file went with the dir) so a
     // successor Catalog can rebuild on the same path — the `Run

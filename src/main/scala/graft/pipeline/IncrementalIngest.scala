@@ -38,7 +38,8 @@ import graft.engine.Catalog
   *  - crash after both: fully committed, replay is a no-op.
   * Invariant making `_last_batch` safe to overwrite: recover() runs
   * before the overwrite, so the previous batch is fully committed by
-  * the time its recovery source is destroyed.
+  * the time its recovery source is destroyed. CrashPointSpec crashes
+  * [[ingest]] after each of its storage calls and replays it.
   */
 object IncrementalIngest {
 
@@ -50,26 +51,24 @@ object IncrementalIngest {
 
   /** Commit test: Hadoop's FileOutputCommitter drops `_SUCCESS` only
     * after every task file is in place (at scale: the same marker on
-    * the object store). Shared with [[IncrementalRollup]] — one
-    * definition of "committed" for every `__batch_id=` layout.
+    * the object store) — one definition of "committed" for every
+    * `__batch_id=` layout.
     */
-  private[pipeline] def committed(dir: String): Boolean =
-    new java.io.File(dir, "_SUCCESS").exists()
+  private def committed(cat: Catalog, dir: String): Boolean =
+    cat.store.exists(s"$dir/_SUCCESS")
 
   /** All `__batch_id=` partition ids present under the row table,
     * committed or partial (one LIST of top-level prefixes). Shared
     * with [[IncrementalRollup]].
     */
-  private[pipeline] def batchIds(cat: Catalog, table: String): Seq[Long] = {
-    val root = new java.io.File(s"${cat.warehouse}/$table")
-    Option(root.listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("__batch_id="))
-      .map(_.getName.stripPrefix("__batch_id=").toLong)
-  }
+  private[pipeline] def batchIds(cat: Catalog, table: String): Seq[Long] =
+    cat.store.listDirs(s"${cat.warehouse}/$table")
+      .filter(_.startsWith("__batch_id="))
+      .map(_.stripPrefix("__batch_id=").toLong)
 
   /** Batch ids whose row partition is fully committed. */
   private def committedBatches(cat: Catalog, table: String): Seq[Long] =
-    batchIds(cat, table).filter(id => committed(rowsDir(cat, table, id)))
+    batchIds(cat, table).filter(id => committed(cat, rowsDir(cat, table, id)))
 
   /** Shared recovery step for every per-batch writer (rollup facts,
     * near-dup corpus + signature index): purge uncommitted
@@ -88,25 +87,22 @@ object IncrementalIngest {
     * rather than assumes.
     */
   private[pipeline] def purgePartialBatches(cat: Catalog, table: String): Unit = {
-    val root = new java.io.File(s"${cat.warehouse}/$table")
-    Option(root.listFiles()).toSeq.flatten
-      // `_`-prefixed entries OTHER than the batch dirs are table
-      // metadata (Spark's own hidden-file convention: _SUCCESS, and the
-      // sigs tables' _SIG_BUCKETS layout record) — never purged
-      .filterNot(f => f.getName.startsWith("_") &&
-        !f.getName.startsWith("__batch_id="))
-      .foreach { f =>
-        require(f.isDirectory && f.getName.startsWith("__batch_id="),
-          s"$table: entry '${f.getName}' is not a __batch_id= directory — " +
-            "this table uses the per-batch layout (a flat pre-existing " +
-            "table must be re-ingested as one batch)")
-        if (!committed(f.getPath)) rmDir(f)
+    val root = s"${cat.warehouse}/$table"
+    // a flat table's own job marker: the per-batch layout commits each
+    // batch directory, never the root
+    val foreign = "this table uses the per-batch __batch_id= layout (a " +
+      "flat pre-existing table must be re-ingested as one batch)"
+    require(!cat.store.exists(s"$root/_SUCCESS"),
+      s"$table: a _SUCCESS at the table root — $foreign")
+    cat.store.listDirs(root)
+      // `_`-prefixed directories OTHER than the batch dirs are table
+      // metadata (Spark's own hidden-file convention) — never purged
+      .filterNot(n => n.startsWith("_") && !n.startsWith("__batch_id="))
+      .foreach { n =>
+        require(n.startsWith("__batch_id="),
+          s"$table: entry '$n' is not a batch directory — $foreign")
+        if (!committed(cat, s"$root/$n")) cat.store.delete(s"$root/$n")
       }
-  }
-
-  private def rmDir(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmDir)
-    f.delete(): Unit
   }
 
   /** Close the crash windows: if the newest row batch (committed or
@@ -119,14 +115,15 @@ object IncrementalIngest {
     batchIds(cat, table).sorted.lastOption.foreach { last =>
       val rows = rowsDir(cat, table, last)
       val digs = digestsDir(cat, table, last)
-      if (!committed(rows) || !committed(digs)) {
+      val (rowsDone, digsDone) = (committed(cat, rows), committed(cat, digs))
+      if (!rowsDone || !digsDone) {
         val lb = cat.spark.read
           .parquet(s"${cat.warehouse}/${table}_last_batch")
-        if (!committed(rows))
-          lb.drop("__fp").write.mode("overwrite").parquet(rows)
-        if (!committed(digs))
-          lb.select(col("__fp").as("fp"))
-            .write.mode("overwrite").parquet(digs)
+        if (!rowsDone)
+          cat.store.writeParquet(lb.drop("__fp").write.mode("overwrite"), rows)
+        if (!digsDone)
+          cat.store.writeParquet(
+            lb.select(col("__fp").as("fp")).write.mode("overwrite"), digs)
       }
     }
 
@@ -156,12 +153,12 @@ object IncrementalIngest {
     // empty (self-invalidation). The `<table>_last_batch` artifact
     // doubles as the recovery source and the ingest audit trail.
     val freshDir = s"${cat.warehouse}/${table}_last_batch"
-    fresh.write.mode("overwrite").parquet(freshDir)
+    cat.store.writeParquet(fresh.write.mode("overwrite"), freshDir)
     val freshBack = cat.spark.read.parquet(freshDir)
-    freshBack.drop("__fp")
-      .write.mode("overwrite").parquet(rowsDir(cat, table, batchId))
-    freshBack.select(col("__fp").as("fp"))
-      .write.mode("overwrite").parquet(digestsDir(cat, table, batchId))
+    cat.store.writeParquet(freshBack.drop("__fp").write.mode("overwrite"),
+      rowsDir(cat, table, batchId))
+    cat.store.writeParquet(freshBack.select(col("__fp").as("fp"))
+      .write.mode("overwrite"), digestsDir(cat, table, batchId))
     // Re-register both views over the partitioned roots, shedding the
     // partition-discovery `__batch_id` column: batch placement is a
     // storage detail, not part of the table's column contract.

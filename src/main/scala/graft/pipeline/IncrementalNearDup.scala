@@ -78,6 +78,9 @@ object IncrementalNearDup {
     */
   private[graft] val SigBucketsMeta = "_SIG_BUCKETS"
 
+  private def sigBucketsFile(cat: Catalog, sigsTable: String): String =
+    s"${cat.warehouse}/$sigsTable/$SigBucketsMeta"
+
   /** The bucket count governing `sigsTable`'s on-disk layout: the
     * `_SIG_BUCKETS` meta file if present; else inferred from the
     * existing `sb=` partition dirs (legacy index written before the
@@ -86,33 +89,21 @@ object IncrementalNearDup {
     * back; else [[SigBuckets]] for a brand-new index.
     */
   private[graft] def storedSigBuckets(cat: Catalog, sigsTable: String): Int = {
-    val root = new java.io.File(s"${cat.warehouse}/$sigsTable")
-    val meta = new java.io.File(root, SigBucketsMeta)
-    if (meta.exists()) {
-      new String(java.nio.file.Files.readAllBytes(meta.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toInt
-    } else {
-      val sbDirs = Option(root.listFiles()).toSeq.flatten
-        .filter(f => f.isDirectory && f.getName.startsWith("__batch_id="))
-        .flatMap(b => Option(b.listFiles()).toSeq.flatten)
-        .filter(f => f.isDirectory && f.getName.startsWith("k="))
-        .flatMap(k => Option(k.listFiles()).toSeq.flatten)
-        .filter(f => f.isDirectory && f.getName.startsWith("sb="))
-        .map(_.getName.stripPrefix("sb=").toInt)
+    val meta = sigBucketsFile(cat, sigsTable)
+    if (cat.store.exists(meta)) cat.store.read(meta).toInt
+    else {
+      val root = s"${cat.warehouse}/$sigsTable"
+      val sbDirs = for {
+        b <- cat.store.listDirs(root) if b.startsWith("__batch_id=")
+        k <- cat.store.listDirs(s"$root/$b") if k.startsWith("k=")
+        sb <- cat.store.listDirs(s"$root/$b/$k") if sb.startsWith("sb=")
+      } yield sb.stripPrefix("sb=").toInt
       if (sbDirs.nonEmpty) {
         val nb = sbDirs.max + 1
-        writeSigBuckets(cat, sigsTable, nb)
+        cat.store.putAtomic(meta, nb.toString)
         nb
       } else SigBuckets
     }
-  }
-
-  private def writeSigBuckets(cat: Catalog, sigsTable: String, nb: Int): Unit = {
-    val root = new java.io.File(s"${cat.warehouse}/$sigsTable")
-    root.mkdirs(): Unit
-    java.nio.file.Files.write(
-      new java.io.File(root, SigBucketsMeta).toPath,
-      nb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
   }
 
   /** 4×16-bit band explosion of a `(doc_id, simhash)` frame. */
@@ -221,17 +212,20 @@ object IncrementalNearDup {
     try {
       if (kept.isEmpty) kept
       else {
-        kept.write.mode("overwrite")
-          .parquet(s"${cat.warehouse}/$table/__batch_id=$id")
+        cat.store.writeParquet(kept.write.mode("overwrite"),
+          s"${cat.warehouse}/$table/__batch_id=$id")
         // meta BEFORE sigs: a crash in between leaves a recorded
         // layout with no rows (harmless); the reverse would leave an
-        // un-annotated index a retuned constant could mis-probe
-        writeSigBuckets(cat, sigsTable, nb)
-        banded(bs.join(dropIds, Seq("doc_id"), "left_anti"))
-          .withColumn("sb", pmod(col("band"), lit(nb.toLong)))
-          .repartition(col("k"), col("sb"))
-          .write.mode("overwrite").partitionBy("k", "sb")
-          .parquet(s"${cat.warehouse}/$sigsTable/__batch_id=$id")
+        // un-annotated index a retuned constant could mis-probe. The
+        // layout never changes once recorded, so it is written once.
+        val meta = sigBucketsFile(cat, sigsTable)
+        if (!cat.store.exists(meta)) cat.store.putAtomic(meta, nb.toString)
+        cat.store.writeParquet(
+          banded(bs.join(dropIds, Seq("doc_id"), "left_anti"))
+            .withColumn("sb", pmod(col("band"), lit(nb.toLong)))
+            .repartition(col("k"), col("sb"))
+            .write.mode("overwrite").partitionBy("k", "sb"),
+          s"${cat.warehouse}/$sigsTable/__batch_id=$id")
         cat.spark.read.parquet(s"${cat.warehouse}/$table/__batch_id=$id")
       }
     } finally { kept.unpersist(false); dropIds.unpersist(false); () }

@@ -82,11 +82,10 @@ object IncrementalRollup {
       // file per touched partition instead of one per task per
       // partition (rollup rows are partition-value cardinality, so one
       // task per value is never a bottleneck)
-      out.repartition(col(partCol)).write
+      cat.store.writeParquet(out.repartition(col(partCol)).write
         .mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partCol)
-        .parquet(s"${cat.warehouse}/$rollup")
+        .partitionBy(partCol), s"${cat.warehouse}/$rollup")
     } else require(cat.exists(rollup),
       s"refresh($rollup): a rollup that does not exist yet needs a " +
         "non-empty batch (no schema to create an empty table from)")
@@ -136,9 +135,9 @@ object IncrementalRollup {
         // down. If one partition's batch volume ever exceeds a task,
         // salt the repartition (files per partition > 1) rather than
         // dropping it.
-        b.repartition(col(partCol))
-          .write.mode("overwrite").partitionBy(partCol)
-          .parquet(s"${cat.warehouse}/$fact/__batch_id=$id")
+        cat.store.writeParquet(b.repartition(col(partCol))
+          .write.mode("overwrite").partitionBy(partCol),
+          s"${cat.warehouse}/$fact/__batch_id=$id")
       }
       // recovery already ran at this ingest's entry, and the only new
       // directory since is the committed batch just written

@@ -91,11 +91,12 @@ import graft.engine.Catalog
   * forward (new delta committed: finish the sweep) or back (not
   * committed: drop the partial delta, old state intact).
   *
-  * 100 TB port seam: every filesystem touch goes through
-  * [[DeltaStore]] (six primitives, Hadoop-`FileSystem`-shaped,
-  * deliberately rename-free — see its scaladoc); the sandbox binds
-  * [[LocalDeltaStore]], the object-store deployment slots a Hadoop
-  * implementation behind the same trait.
+  * 100 TB port seam: every filesystem touch goes through the
+  * Catalog's [[graft.engine.Store]] (Hadoop-`FileSystem`-shaped; this
+  * protocol never uses its local-only `rename` — see its scaladoc);
+  * the object-store deployment slots a Hadoop implementation behind
+  * the same trait. Every crash point of [[fold]] and [[rebuild]] is
+  * enumerated by CrashPointSpec.
   */
 object MinMergeStats {
 
@@ -119,24 +120,22 @@ object MinMergeStats {
     */
   val AutoCompactDeltas: Int = 12
 
-  private val store: DeltaStore = LocalDeltaStore
-
   private def root(cat: Catalog, table: String): String =
     s"${cat.warehouse}/$table"
 
   private def bucketCol(keys: Seq[String], n: Int): Column =
     pmod(xxhash64(keys.map(col): _*), lit(n.toLong)).cast("int")
 
-  private def committed(dir: String): Boolean =
-    store.exists(s"$dir/_SUCCESS")
+  private def committed(cat: Catalog, dir: String): Boolean =
+    cat.store.exists(s"$dir/_SUCCESS")
 
-  private def hasBuckets(dir: String): Boolean =
-    store.listDirs(dir).exists(_.startsWith("__bucket="))
+  private def hasBuckets(cat: Catalog, dir: String): Boolean =
+    cat.store.listDirs(dir).exists(_.startsWith("__bucket="))
 
   /** Paths of the table's `__delta=N` directories (any state). */
   private def deltaDirs(cat: Catalog, table: String): Seq[String] = {
     val r = root(cat, table)
-    store.listDirs(r).filter(_.startsWith("__delta=")).map(n => s"$r/$n")
+    cat.store.listDirs(r).filter(_.startsWith("__delta=")).map(n => s"$r/$n")
   }
 
   private def deltaId(path: String): Long =
@@ -149,16 +148,16 @@ object MinMergeStats {
     s"${root(cat, table)}/_SCHEMA"
 
   /** The `_REBUILD` marker's target delta id, if a marker is present.
-    * Markers are written atomically ([[DeltaStore.putAtomic]]), so an
+    * Markers are written atomically ([[graft.engine.Store.putAtomic]]), so an
     * unparseable one is external corruption, not a crash window —
     * guessing an id could roll forward against the WRONG delta and
     * delete live data, so both readers and writers REFUSE loudly.
     */
   private def markerId(cat: Catalog, table: String): Option[Long] = {
     val marker = rebuildMarker(cat, table)
-    if (!store.exists(marker)) None
+    if (!cat.store.exists(marker)) None
     else {
-      val raw = store.read(marker)
+      val raw = cat.store.read(marker)
       Some(raw.toLongOption.getOrElse(throw new IllegalStateException(
         s"$table: _REBUILD marker holds '$raw', not a delta id — " +
           s"markers are written atomically so this is external " +
@@ -185,9 +184,9 @@ object MinMergeStats {
     */
   private def effectiveDeltas(cat: Catalog, table: String): Seq[String] = {
     val raw = deltaDirs(cat, table)
-    val dirs = raw.filter(d => committed(d) && hasBuckets(d))
+    val dirs = raw.filter(d => committed(cat, d) && hasBuckets(cat, d))
     markerId(cat, table) match {
-      case Some(j) if raw.exists(d => deltaId(d) == j && committed(d)) =>
+      case Some(j) if raw.exists(d => deltaId(d) == j && committed(cat, d)) =>
         dirs.filter(deltaId(_) >= j)
       case _ => dirs
     }
@@ -210,16 +209,17 @@ object MinMergeStats {
     markerId(cat, table).foreach { j =>
       val dirs = deltaDirs(cat, table)
       val target = dirs.find(deltaId(_) == j)
-      if (target.exists(committed))
+      if (target.exists(committed(cat, _)))
         // roll forward: the rebuilt table committed; finish the sweep
-        dirs.filter(deltaId(_) < j).foreach(store.delete)
+        dirs.filter(deltaId(_) < j).foreach(cat.store.delete)
       else
         // roll back: rebuild crashed mid-write; old state is intact
-        target.foreach(store.delete)
-      store.delete(rebuildMarker(cat, table))
+        target.foreach(cat.store.delete)
+      cat.store.delete(rebuildMarker(cat, table))
     }
     deltaDirs(cat, table)
-      .filter(d => !committed(d) || !hasBuckets(d)).foreach(store.delete)
+      .filter(d => !committed(cat, d) || !hasBuckets(cat, d))
+      .foreach(cat.store.delete)
   }
 
   /** Whether `table` holds at least one effective delta. Pure read —
@@ -236,14 +236,13 @@ object MinMergeStats {
     * throwing (r17 advisor).
     */
   private def servable(cat: Catalog, table: String): Boolean =
-    exists(cat, table) || store.exists(schemaFile(cat, table))
+    exists(cat, table) || cat.store.exists(schemaFile(cat, table))
 
   private def nBucketsOf(cat: Catalog, table: String, requested: Int): Int = {
     val f = s"${root(cat, table)}/_NBUCKETS"
-    if (store.exists(f)) store.read(f).toInt
+    if (cat.store.exists(f)) cat.store.read(f).toInt
     else {
-      store.mkdirs(root(cat, table))
-      store.putAtomic(f, requested.toString)
+      cat.store.putAtomic(f, requested.toString)
       requested
     }
   }
@@ -287,9 +286,9 @@ object MinMergeStats {
         // on a duplicate-free corpus) — serve the empty registry in
         // the schema the first fold persisted, instead of throwing
         val sf = schemaFile(cat, table)
-        require(store.exists(sf), s"$table: no committed deltas to read")
+        require(cat.store.exists(sf), s"$table: no committed deltas to read")
         val schema = org.apache.spark.sql.types.DataType
-          .fromJson(store.read(sf))
+          .fromJson(cat.store.read(sf))
           .asInstanceOf[org.apache.spark.sql.types.StructType]
         cat.spark.createDataFrame(
           cat.spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -367,16 +366,16 @@ object MinMergeStats {
     // first fold persists the batch schema so a table whose every fold
     // appends nothing (duplicate-free corpus) stays servable by view
     val sf = schemaFile(cat, table)
-    if (!store.exists(sf)) store.putAtomic(sf, base.schema.json)
+    if (!cat.store.exists(sf)) cat.store.putAtomic(sf, base.schema.json)
     val delta = base.withColumn("__bucket", bucketCol(keys, n))
     val existing = deltaDirs(cat, table)
     val id = existing.map(deltaId).foldLeft(-1L)(math.max) + 1
     val dir = s"${root(cat, table)}/__delta=$id"
-    delta.write.mode("overwrite").partitionBy("__bucket").parquet(dir)
+    cat.store.writeParquet(delta.write.mode("overwrite").partitionBy("__bucket"), dir)
     // an empty batch writes no bucket directories — drop the empty
     // delta so a no-op fold is a physical no-op (view then serves the
     // merged survivors, or the _SCHEMA empty frame if nothing exists)
-    if (!hasBuckets(dir)) store.delete(dir)
+    if (!hasBuckets(cat, dir)) cat.store.delete(dir)
     else {
       val hot = bucketsOver(cat, table, AutoCompactDeltas)
       if (hot.nonEmpty) compactBuckets(cat, table, hot, keys, ord)
@@ -410,7 +409,7 @@ object MinMergeStats {
                           limit: Int): Seq[Int] = {
     val counts = scala.collection.mutable.Map.empty[Int, Int]
     effectiveDeltas(cat, table).foreach { d =>
-      store.listDirs(d).filter(_.startsWith("__bucket=")).foreach { b =>
+      cat.store.listDirs(d).filter(_.startsWith("__bucket=")).foreach { b =>
         val k = b.stripPrefix("__bucket=").toInt
         counts(k) = counts.getOrElse(k, 0) + 1
       }
@@ -443,7 +442,7 @@ object MinMergeStats {
                              buckets: Seq[Int], keys: Seq[String],
                              ord: Seq[String]): Unit = {
     if (buckets.isEmpty) return
-    val before = deltaDirs(cat, table).filter(committed)
+    val before = deltaDirs(cat, table).filter(committed(cat, _))
     if (before.size <= 1) return
     val id = before.map(deltaId).max + 1
     val dir = s"${root(cat, table)}/__delta=$id"
@@ -452,15 +451,14 @@ object MinMergeStats {
       .option("basePath", root(cat, table))
       .parquet(before: _*)
       .filter(col("__bucket").isInCollection(buckets))
-    reduced(src, keys, ord, Seq("__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket").parquet(dir)
+    cat.store.writeParquet(reduced(src, keys, ord, Seq("__bucket"))
+      .write.mode("overwrite").partitionBy("__bucket"), dir)
     before.foreach { d =>
       buckets.foreach { k =>
-        val b = s"$d/__bucket=$k"
-        if (store.exists(b)) store.delete(b)
+        cat.store.delete(s"$d/__bucket=$k")
       }
       // a delta whose buckets are all swept carries no rows — drop it
-      if (!hasBuckets(d)) store.delete(d)
+      if (!hasBuckets(cat, d)) cat.store.delete(d)
     }
   }
 
@@ -537,15 +535,15 @@ object MinMergeStats {
     // persisted schema — guarantee one exists even for a table whose
     // life began before _SCHEMA persistence
     val sf = schemaFile(cat, table)
-    if (!store.exists(sf))
-      store.putAtomic(sf,
+    if (!cat.store.exists(sf))
+      cat.store.putAtomic(sf,
         next.select((keys ++ ord).map(col): _*).schema.json)
     val id = deltaDirs(cat, table).map(deltaId).foldLeft(-1L)(math.max) + 1
-    store.putAtomic(rebuildMarker(cat, table), id.toString)
-    withB.write.mode("overwrite").partitionBy("__bucket")
-      .parquet(s"${root(cat, table)}/__delta=$id")
-    deltaDirs(cat, table).filter(deltaId(_) < id).foreach(store.delete)
-    store.delete(rebuildMarker(cat, table))
+    cat.store.putAtomic(rebuildMarker(cat, table), id.toString)
+    cat.store.writeParquet(withB.write.mode("overwrite").partitionBy("__bucket"),
+      s"${root(cat, table)}/__delta=$id")
+    deltaDirs(cat, table).filter(deltaId(_) < id).foreach(cat.store.delete)
+    cat.store.delete(rebuildMarker(cat, table))
     view(cat, table, keys, ord)
   }
 }

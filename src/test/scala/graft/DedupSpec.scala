@@ -543,74 +543,6 @@ class DedupSpec extends SparkTestBase {
     cat.dropWarehouse()
   }
 
-  test("incremental ingest recovers from a crash between the two appends") {
-    import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-inc-crash").toString
-    val cat = new graft.engine.Catalog(spark, wh)
-    val b1 = Seq((1L, "alpha doc"), (2L, "beta doc")).toDF("doc_id", "text")
-    assert(graft.pipeline.IncrementalIngest
-      .ingest(cat, b1, "text", "corpus").count() === 2)
-    val b2 = Seq((3L, "gamma doc"), (4L, "alpha doc")).toDF("doc_id", "text")
-    assert(graft.pipeline.IncrementalIngest
-      .ingest(cat, b2, "text", "corpus").count() === 1)
-    // Simulate the crash window: batch 2's rows committed but the
-    // digest append lost (rows-then-digests order; the window is after
-    // the row write) by deleting its digest partition.
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(s"$wh/corpus_digests/__batch_id=2"))
-    // A replay of batch 2 must NOT re-ingest gamma (recover() completes
-    // the digest append from _last_batch before the anti-join runs).
-    val replay = graft.pipeline.IncrementalIngest
-      .ingest(cat, b2, "text", "corpus")
-    assert(replay.count() === 0, "recovered digests must dedup the replay")
-    assert(cat.table("corpus").count() === 3)
-    assert(cat.table("corpus_digests").select("fp").distinct().count() === 3)
-    // and a genuinely new batch still ingests normally afterwards
-    val b3 = Seq((5L, "delta doc")).toDF("doc_id", "text")
-    assert(graft.pipeline.IncrementalIngest
-      .ingest(cat, b3, "text", "corpus").count() === 1)
-    assert(cat.table("corpus").count() === 4)
-    cat.dropWarehouse()
-  }
-
-  test("incremental ingest recovers a partial (crashed) row append") {
-    import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-inc-part").toString
-    val cat = new graft.engine.Catalog(spark, wh)
-    val b1 = Seq((1L, "alpha doc"), (2L, "beta doc")).toDF("doc_id", "text")
-    assert(graft.pipeline.IncrementalIngest
-      .ingest(cat, b1, "text", "corpus").count() === 2)
-    val b2 = Seq((3L, "gamma doc"), (4L, "alpha doc")).toDF("doc_id", "text")
-    assert(graft.pipeline.IncrementalIngest
-      .ingest(cat, b2, "text", "corpus").count() === 1)
-    // Simulate a crash DURING batch 2's row append: the partition dir
-    // exists but is partial — no _SUCCESS, data files incomplete — and
-    // the digest append never started. Directory existence must NOT
-    // count as commit, or gamma's rows are permanently lost (recover()
-    // would record its digest and every replay would anti-join it away).
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-      f.delete(): Unit
-    }
-    val rows2 = new java.io.File(s"$wh/corpus/__batch_id=2")
-    new java.io.File(rows2, "_SUCCESS").delete()
-    rows2.listFiles().filter(_.getName.endsWith(".parquet")).foreach(rm)
-    rm(new java.io.File(s"$wh/corpus_digests/__batch_id=2"))
-    assert(cat.spark.read.parquet(s"$wh/corpus").count() === 2,
-      "precondition: gamma's row really is gone from storage")
-    // The replay must restore the batch from _last_batch (rows AND
-    // digests), then dedup the replay to empty.
-    val replay = graft.pipeline.IncrementalIngest
-      .ingest(cat, b2, "text", "corpus")
-    assert(replay.count() === 0, "recovered digests must dedup the replay")
-    assert(cat.table("corpus").count() === 3, "gamma's row is restored")
-    assert(cat.table("corpus_digests").select("fp").distinct().count() === 3)
-    cat.dropWarehouse()
-  }
-
   test("incrementally ingested views keep the data-column contract") {
     import spark.implicits._
     val wh = java.nio.file.Files.createTempDirectory("graft-inc-schema").toString

@@ -5,9 +5,9 @@ import graft.engine.Catalog
 import graft.pipeline.IncrementalNearDup
 
 /** IncrementalNearDup: batch-vs-index and within-batch suppression on
-  * planted fixtures, replay idempotency, and crash recovery of the
-  * signature index — the invariants that make incremental fuzzy dedup
-  * safe at 100 TB.
+  * planted fixtures, replay idempotency and index pruning — the
+  * invariants that make incremental fuzzy dedup safe at 100 TB (crash
+  * recovery is enumerated by CrashPointSpec).
   */
 class NearDupIngestSpec extends SparkTestBase {
   import spark.implicits._
@@ -58,25 +58,6 @@ class NearDupIngestSpec extends SparkTestBase {
       docs(2L -> txt("b2"), 3L -> txt("c3")), "c", Some(2L))
     assert(IncrementalNearDup.corpus(cat, "c").count() == rows)
     assert(spark.read.parquet(s"${cat.warehouse}/c_sigs").count() == sigs)
-  }
-
-  test("a partial (crashed) signature batch is purged and rebuilt by the replay") {
-    val cat = freshCat("nd_d")
-    IncrementalNearDup.ingest(cat, docs(1L -> txt("x")), "c", Some(1L))
-    // simulate a crash between the row write and the sig write of
-    // batch 2: rows committed, sigs partial (no _SUCCESS)
-    IncrementalNearDup.ingest(cat, docs(2L -> txt("y")), "c", Some(2L))
-    val sigDir = new java.io.File(s"${cat.warehouse}/c_sigs/__batch_id=2")
-    assert(new java.io.File(sigDir, "_SUCCESS").delete())
-    // replay of batch 2: the partial sig dir is purged at entry and
-    // both dirs rewritten — doc 2 ends up exactly once, with its sig
-    IncrementalNearDup.ingest(cat, docs(2L -> txt("y")), "c", Some(2L))
-    assert(new java.io.File(sigDir, "_SUCCESS").exists())
-    assert(IncrementalNearDup.corpus(cat, "c")
-      .select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
-    // and the rebuilt index suppresses a later near-dup of doc 2
-    val k3 = IncrementalNearDup.ingest(cat, docs(9L -> txt("y")), "c", Some(3L))
-    assert(k3.isEmpty)
   }
 
   test("replaying a committed batch returns the SAME survivor set, not empty") {

@@ -257,35 +257,6 @@ class PipelineSpec extends SparkTestBase {
     assert(after.getDouble(1) == before.getDouble(1))
   }
 
-  test("a crashed LEAF compact is healed by the next plain reader") {
-    val cat = new graft.engine.Catalog(spark,
-      graft.queries.Scratch.fresh(spark, "healleaf_wh"))
-    cat.save("lt", graft.engine.Graft.table(spark, sfDir, "orders")
-      .select("o_orderkey", "o_orderstatus"),
-      partitionBy = Seq("o_orderstatus"))
-    val n = cat.table("lt").count()
-    val vals = cat.table("lt").select("o_orderstatus").distinct()
-      .collect().map(_.getString(0)).toSet
-    val leaf = Option(new java.io.File(s"${cat.warehouse}/lt").listFiles())
-      .toSeq.flatten.filter(_.getName.contains("=")).head
-    assert(leaf.renameTo(
-      new java.io.File(leaf.getParent, leaf.getName + ".__compact_old")))
-    // a real crash leaves compact()'s in-progress marker too (written
-    // before the first rename) — readers gate the heal walk on it
-    assert(new java.io.File(s"${cat.warehouse}/lt.__compacting")
-      .createNewFile())
-    // an ordinary read — NOT a compaction call — must restore the leaf;
-    // without the heal, discovery reports the partition under the
-    // bogus value 'X.__compact_old' and the real X missing
-    val back = cat.table("lt")
-    assert(back.count() == n)
-    assert(back.select("o_orderstatus").distinct()
-      .collect().map(_.getString(0)).toSet == vals)
-    assert(leaf.exists(), "live leaf dir must be restored")
-    assert(!new java.io.File(s"${cat.warehouse}/lt.__compacting").exists(),
-      "the heal must consume the in-progress marker")
-  }
-
   test("warehouse is single-writer: a second Catalog on the same root refuses") {
     val wh = graft.queries.Scratch.fresh(spark, "lock_wh")
     val cat = new graft.engine.Catalog(spark, wh)
@@ -402,33 +373,6 @@ class PipelineSpec extends SparkTestBase {
     assert(e.getMessage.contains("locked by live process"), e.getMessage)
   }
 
-  test("compactPartitions heals a leaf compact that crashed mid-swap") {
-    import graft.engine.Checksum
-    val cat = new graft.engine.Catalog(spark,
-      graft.queries.Scratch.fresh(spark, "healp_wh"))
-    cat.save("pt", graft.engine.Graft.table(spark, sfDir, "orders")
-      .select("o_orderkey", "o_orderstatus").repartition(4),
-      partitionBy = Seq("o_orderstatus"))
-    val cols = Seq("o_orderkey" -> Checksum.IntLike,
-      "o_orderstatus" -> Checksum.Str)
-    val before = Checksum.of(cat.table("pt"), cols).head()
-    // simulate a leaf compact crash between its two renames: the live
-    // partition dir is gone, only the moved-aside copy remains
-    val leaf = Option(new java.io.File(s"${cat.warehouse}/pt").listFiles())
-      .toSeq.flatten.filter(_.getName.contains("=")).head
-    assert(leaf.renameTo(
-      new java.io.File(leaf.getParent, leaf.getName + ".__compact_old")))
-    val compacted = cat.compactPartitions("pt", targetBytes = Long.MaxValue)
-    // healed: the partition value is back, no bogus '.__compact_old'
-    // partition value leaked into discovery, content intact
-    val partVals = compacted.select("o_orderstatus").distinct()
-      .collect().map(_.getString(0)).toSet
-    assert(!partVals.exists(_.contains("__compact")), partVals)
-    val after = Checksum.of(compacted, cols).head()
-    assert(after.getLong(0) == before.getLong(0))
-    assert(after.getDouble(1) == before.getDouble(1))
-  }
-
   test("ORC export/import round-trip is checksum-invariant") {
     import graft.engine.Checksum
     val cat = new graft.engine.Catalog(spark,
@@ -449,23 +393,6 @@ class PipelineSpec extends SparkTestBase {
     assert(after.getLong(0) == before.getLong(0))
     assert(after.getDouble(1) == before.getDouble(1),
       "ORC round-trip changed table content")
-  }
-
-  test("a crashed compact swap is healed by the next reader, not only the next compact") {
-    val cat = new graft.engine.Catalog(spark,
-      graft.queries.Scratch.fresh(spark, "heal_wh"))
-    cat.save("t", graft.engine.Graft.table(spark, sfDir, "region"))
-    val n = cat.table("t").count()
-    // simulate a crash between compact()'s two renames: live dir moved
-    // aside, replacement never arrived
-    val dir = new java.io.File(s"${cat.warehouse}/t")
-    assert(dir.renameTo(new java.io.File(s"${cat.warehouse}/t.__compact_old")))
-    assert(cat.exists("t"), "exists() must heal the interrupted swap")
-    assert(cat.table("t").count() == n)
-    // and again via table() as the first toucher
-    assert(dir.renameTo(new java.io.File(s"${cat.warehouse}/t.__compact_old")))
-    assert(cat.table("t").count() == n)
-    assert(!new java.io.File(s"${cat.warehouse}/t.__compact_old").exists())
   }
 
   test("mergeSchema read reconciles batches whose schema drifted") {

@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.engine.{Catalog, Checksum}
 
 /** Versioned tables: the reproducibility contract — committed versions
   * are immutable and individually addressable, the pointer flip is the
-  * only commit, and crashes before the flip are invisible to readers.
+  * only commit (its crash points are enumerated by CrashPointSpec).
   */
 class VersionSpec extends SparkTestBase {
   import spark.implicits._
@@ -27,21 +26,6 @@ class VersionSpec extends SparkTestBase {
     val again = Checksum.of(cat.tableAt("corpus", v1), cols).head()
     assert(again.getLong(0) == sum1.getLong(0))
     assert(again.getDouble(1) == sum1.getDouble(1))
-  }
-
-  test("a crashed save (no pointer flip) is invisible to readers") {
-    val cat = freshCat("ver_b")
-    cat.saveVersioned("corpus", Seq((1L, "a")).toDF("k", "s"))
-    // simulate the crash: a complete orphan version dir, pointer not flipped
-    Seq((9L, "x")).toDF("k", "s").write
-      .parquet(s"${cat.warehouse}/corpus/_v=2")
-    assert(cat.latestVersion("corpus").contains(1))
-    assert(cat.tableLatest("corpus").select(sum($"k")).head().getLong(0) == 1L)
-    // the next successful save claims the orphan's slot... versions are
-    // assigned from the POINTER, so the orphan is overwritten, not skipped
-    val v = cat.saveVersioned("corpus", Seq((2L, "y")).toDF("k", "s"))
-    assert(v == 2)
-    assert(cat.tableLatest("corpus").select(sum($"k")).head().getLong(0) == 2L)
   }
 
   test("versions() lists committed versions only — orphans and vacuumed excluded") {
