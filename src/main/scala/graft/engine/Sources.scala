@@ -1,8 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Pluggable raw-data sources (SURVEY.md §2.1 S1-S5).
   *
@@ -10,15 +10,19 @@ import org.apache.spark.sql.types.StructType
   * (multi-sheet Excel via pandas, ECB SDMX XML via ElementTree, legacy
   * XLS) and registers each as a staged table
   * (the reference's src/ingestion modules). All three are real
-  * byte-level ingestion with no external codec: [[XlsxSource]] (zip +
-  * OOXML parse), [[XlsSource]] (OLE2 container + BIFF8 records), and
-  * the XML path via scala-xml (driver-side — the file is tiny in the
-  * reference: 739 observations). [[MultiSheetCsvSource]] remains the
-  * CSV staging path for pre-extracted sheets.
+  * byte-level ingestion with no external codec:
+  *  - [[XlsxSource]] (zip + OOXML): the driver reads the workbook's
+  *    catalog and each sheet's header; one Spark task per sheet
+  *    streams that sheet's rows;
+  *  - [[XlsSource]] (OLE2 container + BIFF8 records) and the SDMX XML
+  *    path via scala-xml, both parsed on the driver: the files are
+  *    tiny in the reference (about 100 holidays, 739 observations).
+  * [[MultiSheetCsvSource]] remains the CSV staging path for
+  * pre-extracted sheets.
   */
 trait Source {
-  /** Load this source as a DataFrame (driver-side parse allowed for
-    * small files; everything routed through Spark after staging).
+  /** Load this source as a DataFrame (a driver-side parse is allowed
+    * for small files; everything is routed through Spark after it).
     */
   def load(spark: SparkSession): DataFrame
 }
@@ -123,24 +127,34 @@ final case class JsonlSource(
   }
 }
 
+
 /** S1 (byte-level): genuine multi-sheet `.xlsx` ingestion with NO
-  * external codec — an .xlsx file is a zip of OOXML XML parts, so this
-  * reads the workbook's sheet catalog, relationship map, shared-string
-  * table, and each sheet's cell grid with `java.util.zip` + scala-xml,
-  * driver-side (raw spreadsheets are small — the reference's full
-  * retail workbook is ~1M rows in a few tens of MB; at 100 TB raw data
-  * lands as CSV/parquet and this path is the compatibility shim, like
-  * the reference's own pandas read).
+  * external codec. An .xlsx file is a zip of OOXML XML parts, read here
+  * with `java.util.zip` and StAX, split between the driver and one
+  * Spark task per sheet:
+  *  - at [[load]] the driver reads the small catalog parts (the sheet
+  *    list, the relationship map, styles.xml and the `date1904` flag)
+  *    and each sheet's header row. A zip without a workbook part, a
+  *    sheet with no header row and a header missing a schema column
+  *    fail here, before any action;
+  *  - task i opens the zip itself and streams sheet i through StAX, one
+  *    row at a time, resolving shared strings as its cells reach them.
+  *    Nothing is converted to text and read back, and nothing is
+  *    written to disk.
+  * Like any Spark file source the frame is lazy over the file: the
+  * workbook is read when an action runs, so it must stay in place, and
+  * readable by the executors, until then.
   *
   * Mirrors `pd.read_excel(sheet_name=None)` semantics
   * (`/root/reference/src/ingestion/retail_data.py:27-38`): every sheet
-  * is read in workbook order, tagged with `source_sheet`, and
-  * vertically unioned; row 1 is the header; string cells are trimmed
-  * and empty/missing cells are NULL (the engine's documented
-  * NULL-not-'nan' contract, SURVEY.md §7.4). Cells are decoded per the
-  * OOXML `t` attribute: `s` (shared string), `inlineStr`, `str`
-  * (formula result), `b` (boolean), default numeric. Values surface as
-  * strings and are cast to the caller's schema by column name.
+  * is read in workbook order (task i scans sheet i), tagged with
+  * `source_sheet`, and vertically unioned; row 1 is the header; string
+  * cells are trimmed and missing cells are NULL (the engine's
+  * documented NULL-not-'nan' contract, SURVEY.md §7.4). Cells are
+  * decoded per the OOXML `t` attribute: `s` (shared string),
+  * `inlineStr`, `str` (formula result), `b` (boolean), default numeric.
+  * Values surface as strings and are cast once, at the edge, to the
+  * caller's schema by column name with Spark's own `Cast`.
   *
   * Date cells stored as Excel serial numbers are decoded via
   * styles.xml number-format resolution (what pd.read_excel does
@@ -154,7 +168,7 @@ final case class XlsxSource(path: String, schema: StructType) extends Source {
 
   def load(spark: SparkSession): DataFrame = {
     val zip = new java.util.zip.ZipFile(path)
-    try {
+    val (sheets, styleIsDate, date1904) = try {
       def part(name: String): Option[scala.xml.Elem] =
         Option(zip.getEntry(name)).map(e =>
           scala.xml.XML.load(zip.getInputStream(e)))
@@ -167,13 +181,6 @@ final case class XlsxSource(path: String, schema: StructType) extends Source {
         .flatMap(_ \ "Relationship")
         .map(r => (r \@ "Id") -> (r \@ "Target").stripPrefix("/xl/"))
         .toMap
-      // Shared strings + sheet grids are parsed with StAX, not DOM: the
-      // production workbook shape is ~1M rows (~150 MB of sheet XML and
-      // a 60K+-entry SST), where a DOM would cost GBs of heap and
-      // minutes of driver time. Small catalog parts stay DOM.
-      val shared = Option(zip.getEntry("xl/sharedStrings.xml"))
-        .map(e => XlsxStax.sharedStrings(zip.getInputStream(e)))
-        .getOrElse(IndexedSeq.empty)
       // styles: cell style index -> (isDate, hasTime) via numFmt lookup
       val styles = part("xl/styles.xml")
       val customFmts = styles.toSeq.flatMap(_ \ "numFmts" \ "numFmt")
@@ -185,67 +192,60 @@ final case class XlsxSource(path: String, schema: StructType) extends Source {
           val fmtId = (xf \@ "numFmtId").toIntOption.getOrElse(0)
           ExcelCells.dateStyle(fmtId, customFmts.get(fmtId))
         }.toIndexedSeq
-      val sheets = (workbook \ "sheets" \ "sheet").map { s =>
+      val named = (workbook \ "sheets" \ "sheet").map { s =>
         val rid = s.attributes.iterator
           .collectFirst { case a if a.key == "id" && a.isPrefixed => a.value.text }
           .getOrElse("")
         (s \@ "name") -> rels.getOrElse(rid, "")
       }.filter(_._2.nonEmpty)
-      require(sheets.nonEmpty, s"no sheets found in $path")
+      require(named.nonEmpty, s"no sheets found in $path")
       // Mac-origin workbooks flag the 1904 date system on workbookPr;
       // serials then count from 1904-01-01 with no phantom leap day.
       val date1904 = (workbook \ "workbookPr").headOption
         .map(_ \@ "date1904").exists(v => v == "1" || v == "true")
-
-      // Parse-once-at-the-edge, stage-columnar: each sheet streams
-      // through StAX into a JSONL spill file (bounded driver memory —
-      // one row in flight), then Spark reads the spills with an explicit
-      // schema so the cast/trim/tag path is distributed.
-      val spillRoot = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-        "graft_xlsx_spill_")
-      // JVM-exit cleanup: the frames read the spills lazily, so eager
-      // deletion is impossible — but a session that loads workbooks
-      // repeatedly must not leak a sheet-sized JSONL per load forever.
-      spillRoot.toFile.deleteOnExit()
-      val frames = sheets.zipWithIndex.map { case ((sheetName, target), si) =>
+      val shared = new XlsxStax.SharedStrings(zip)
+      val sheets = named.map { case (sheetName, target) =>
         val entry = Option(zip.getEntry(s"xl/$target")).getOrElse(
           throw new IllegalArgumentException(s"missing part xl/$target"))
-        // named by POSITION: distinct sheet names can share a hashCode
-        // ("Aa"/"BB"), and a colliding name would truncate the first
-        // sheet's spill before its lazy frame ever read it.
-        val spill = spillRoot.resolve(s"sheet_$si.jsonl")
-        val header = XlsxStax.sheetToJsonl(zip.getInputStream(entry), shared,
-          styleIsDate, spill, date1904)
-        spill.toFile.deleteOnExit()
+        val header = new XlsxStax.SheetRows(zip.getInputStream(entry),
+            shared, styleIsDate, date1904).nextOption()
+          .getOrElse(throw new IllegalArgumentException(
+            s"$path sheet '$sheetName' is empty (no header row)"))
         // A schema column absent from the sheet header is a caller
-        // error, not an all-NULL column: the JSON read with an explicit
-        // schema would silently null it, where the former DOM path's
-        // select threw — keep the loud contract.
-        val missing = schema.fieldNames.filterNot(header.contains)
+        // error, not an all-NULL column: keep the loud contract.
+        val names = header.map(_._2)
+        val missing = schema.fieldNames.filterNot(names.contains)
         require(missing.isEmpty,
           s"$path sheet '$sheetName': header is missing schema column(s) " +
-            s"${missing.mkString(", ")} (header: ${header.mkString(", ")})")
-        val allString = StructType(schema.fields.map(f =>
-          org.apache.spark.sql.types.StructField(f.name,
-            org.apache.spark.sql.types.StringType)))
-        spark.read.schema(allString).json(spill.toString)
-          .select(schema.fields.toSeq.map(f =>
-            col(f.name).cast(f.dataType).as(f.name)): _*)
-          .withColumn("source_sheet", lit(sheetName))
+            s"${missing.mkString(", ")} (header: ${names.mkString(", ")})")
+        val fields = Array.fill(header.map(_._1 + 1).maxOption.getOrElse(0))(-1)
+        header.foreach { case (c, name) => fields(c) = schema.fieldNames.indexOf(name) }
+        XlsxStax.Sheet(sheetName, s"xl/$target", fields)
       }
-      frames.reduce(_ unionByName _)
+      (sheets, styleIsDate, date1904)
     } finally zip.close()
+
+    val width = schema.size
+    val rows = spark.sparkContext.parallelize(sheets, sheets.size)
+      .mapPartitions(_.flatMap(XlsxStax.scan(path, _, width, styleIsDate, date1904)))
+    val allString = StructType(schema.fields.map(f =>
+      StructField(f.name, StringType)) :+
+      StructField("source_sheet", StringType, nullable = false))
+    spark.createDataFrame(rows, allString)
+      .select(schema.fields.toSeq.map(f =>
+        col(f.name).cast(f.dataType).as(f.name)) :+ col("source_sheet"): _*)
   }
 }
 
-/** StAX (streaming) parsers for the two big xlsx parts. Cell semantics
-  * are identical to the former DOM path (oracle-gated by s1/u2 and
-  * XlsxSpec): `t`-attribute dispatch (shared string / inlineStr / bool /
-  * formula-str / numeric), date-styled serials decoded to ISO via
-  * [[ExcelCells]], values trimmed, missing cells NULL, row 1 = header.
+/** StAX (streaming) readers for the two big xlsx parts, and the task
+  * that scans one sheet. Cell semantics are oracle-gated by s1/u2 and
+  * XlsxSpec: `t`-attribute dispatch (shared string / inlineStr / bool /
+  * formula-str / error / numeric), date-styled serials decoded to ISO
+  * and E-notation written out via [[ExcelCells]], values trimmed,
+  * missing cells NULL, an empty string kept as "", row 1 = header.
   */
 private[engine] object XlsxStax {
+  import javax.xml.stream.XMLStreamConstants.{CDATA, CHARACTERS, END_ELEMENT, START_ELEMENT}
 
   private def factory: javax.xml.stream.XMLInputFactory = {
     val f = javax.xml.stream.XMLInputFactory.newInstance()
@@ -254,185 +254,184 @@ private[engine] object XlsxStax {
     f
   }
 
-  /** sharedStrings.xml → SST table: every `t` descendant of an `si`
-    * concatenated (rich-text runs), same as the former DOM
-    * `(si \\ "t").map(_.text).mkString`.
+  /** One sheet of a scan: its workbook name, its zip part, and for each
+    * column index the schema position its header names (-1: none).
     */
-  def sharedStrings(in: java.io.InputStream): IndexedSeq[String] = {
-    val out = scala.collection.immutable.IndexedSeq.newBuilder[String]
-    val r = factory.createXMLStreamReader(in)
-    val sb = new java.lang.StringBuilder
-    var inSi = false
-    var inT = false
-    try {
-      while (r.hasNext) {
+  final case class Sheet(name: String, part: String, fields: Array[Int])
+
+  /** The rows of `sheet` below its header, as one string per schema
+    * field (NULL where the row has no cell) plus the sheet name. Runs
+    * inside a Spark task, which opens the workbook itself and closes it
+    * when the task completes.
+    */
+  def scan(path: String, sheet: Sheet, width: Int,
+           styleIsDate: IndexedSeq[(Boolean, Boolean)],
+           date1904: Boolean): Iterator[Row] = {
+    val zip = new java.util.zip.ZipFile(path)
+    org.apache.spark.TaskContext.get()
+      .addTaskCompletionListener[Unit](_ => zip.close())
+    val rows = new SheetRows(zip.getInputStream(zip.getEntry(sheet.part)),
+      new SharedStrings(zip), styleIsDate, date1904)
+    rows.next() // the header, checked at load
+    rows.map { cells =>
+      val out = new Array[Any](width + 1)
+      cells.foreach { case (c, v) =>
+        if (c < sheet.fields.length && sheet.fields(c) >= 0) out(sheet.fields(c)) = v
+      }
+      out(width) = sheet.name
+      Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(out))
+    }
+  }
+
+  /** The shared-string table (sharedStrings.xml; absent = empty),
+    * parsed only as far as the largest index asked for so far: the
+    * driver's header read stops within the first entries, a task's
+    * scan reads on as its cells need. An entry is every `t` descendant
+    * of its `si` concatenated (rich-text runs).
+    */
+  final class SharedStrings(zip: java.util.zip.ZipFile) {
+    private val r = Option(zip.getEntry("xl/sharedStrings.xml"))
+      .map(e => factory.createXMLStreamReader(zip.getInputStream(e)))
+    private val parsed = scala.collection.mutable.ArrayBuffer.empty[String]
+    private val sb = new java.lang.StringBuilder
+
+    def lift(i: Int): Option[String] = {
+      while (parsed.size <= i && r.exists(parseNext)) ()
+      parsed.lift(i)
+    }
+
+    /** Appends the next `si` to `parsed`; false at the end of the part. */
+    private def parseNext(r: javax.xml.stream.XMLStreamReader): Boolean = {
+      var inSi = false
+      var inT = false
+      var done = false
+      while (!done && r.hasNext) {
         r.next() match {
-          case javax.xml.stream.XMLStreamConstants.START_ELEMENT =>
+          case START_ELEMENT =>
             r.getLocalName match {
               case "si" => inSi = true; sb.setLength(0)
               case "t" if inSi => inT = true
               case _ => ()
             }
-          case javax.xml.stream.XMLStreamConstants.CHARACTERS
-               | javax.xml.stream.XMLStreamConstants.CDATA =>
-            if (inT) sb.append(r.getText)
-          case javax.xml.stream.XMLStreamConstants.END_ELEMENT =>
+          case CHARACTERS | CDATA => if (inT) sb.append(r.getText)
+          case END_ELEMENT =>
             r.getLocalName match {
               case "t" => inT = false
-              case "si" => inSi = false; out += sb.toString
+              case "si" => parsed += sb.toString; done = true
               case _ => ()
             }
           case _ => ()
         }
       }
-    } finally r.close()
-    out.result()
-  }
-
-  private def jsonEscape(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length + 8)
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '"' => sb.append("\\\"")
-        case '\\' => sb.append("\\\\")
-        case '\n' => sb.append("\\n")
-        case '\r' => sb.append("\\r")
-        case '\t' => sb.append("\\t")
-        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-        case c => sb.append(c)
-      }
-      i += 1
+      done
     }
-    sb.toString
   }
 
-  /** One worksheet → JSONL spill: row 1 becomes the key set (header
-    * names, trimmed; `_cN` for columns past the header), every later
-    * row becomes one JSON object of the present cells (trimmed). One
-    * row in flight — memory is O(row), not O(sheet). Returns the
-    * header names, so the caller can validate its schema against them.
+  /** One worksheet's rows, streamed: each element is one `<row>`'s
+    * present cells as (column index, trimmed value), so a reader holds
+    * one row at a time, never the sheet. The first element is the
+    * header. A cell's column comes from the letters of its `r=`
+    * reference, or from its position in the row when it has none.
     */
-  def sheetToJsonl(in: java.io.InputStream, shared: IndexedSeq[String],
-                   styleIsDate: IndexedSeq[(Boolean, Boolean)],
-                   out: java.nio.file.Path,
-                   date1904: Boolean = false): Seq[String] = {
-    val w = java.nio.file.Files.newBufferedWriter(out,
-      java.nio.charset.StandardCharsets.UTF_8)
-    val r = factory.createXMLStreamReader(in)
-    var header: Map[Int, String] = null
-    var rowCells = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
-    var cellPos = 0
+  final class SheetRows(in: java.io.InputStream, shared: SharedStrings,
+                        styleIsDate: IndexedSeq[(Boolean, Boolean)],
+                        date1904: Boolean)
+      extends Iterator[scala.collection.Seq[(Int, String)]] {
+    private val r = factory.createXMLStreamReader(in)
+    private var cells = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
+    private var ready = false // `cells` holds a whole row not yet returned
+    private var inRow = false
+    private var cellPos = 0
     // current-cell state
-    var cType = ""
-    var cIdx = 0
-    var cStyle: Option[(Boolean, Boolean)] = None
-    var inV = false
-    var vSeen = false
-    var inIsT = false
-    var inRow = false
-    val vText = new java.lang.StringBuilder
-    val isText = new java.lang.StringBuilder
-    def keyOf(i: Int): String =
-      header.getOrElse(i, s"_c$i")
-    def endCell(): Unit = {
-      val v: Option[String] = cType match {
-        case "s" =>
-          if (!vSeen) None
-          else vText.toString.trim.toIntOption.flatMap(shared.lift)
-        case "inlineStr" => Some(isText.toString)
-        case "b" =>
-          if (!vSeen) None
-          else Some(if (vText.toString.trim == "1") "true" else "false")
-        case "str" => if (vSeen) Some(vText.toString) else None
-        // error cells (#DIV/0!, #VALUE!, ...) are NULL in the
-        // pd.read_excel contract — never data, even for string columns
-        case "e" => None
-        case _ =>
-          if (!vSeen) None
-          else {
-            val raw = vText.toString
-            cStyle match {
-              case Some((true, withTime)) =>
-                Some(raw.trim.toDoubleOption
-                  .map(ExcelCells.serialToIso(_, withTime, date1904))
-                  .getOrElse(raw))
-              case _ =>
-                // Writers emit large/small numerics in scientific
-                // notation (`1.067371E7`); a LongType cast of that
-                // string is NULL — silent data loss. Normalize through
-                // the numeric renderer (integral doubles print plain).
-                if (raw.indexOf('E') >= 0 || raw.indexOf('e') >= 0)
-                  Some(raw.trim.toDoubleOption
-                    .map(ExcelCells.numericText).getOrElse(raw))
-                else Some(raw)
-            }
-          }
-      }
-      v.foreach(s => rowCells += cIdx -> s)
+    private var cType = ""
+    private var cIdx = 0
+    private var cStyle: Option[(Boolean, Boolean)] = None
+    private var inV = false
+    private var vSeen = false
+    private var inIsT = false
+    private val vText = new java.lang.StringBuilder
+    private val isText = new java.lang.StringBuilder
+
+    def hasNext: Boolean = {
+      while (!ready && r.hasNext) step(r.next())
+      ready
     }
-    def endRow(): Unit = {
-      if (header == null) {
-        header = rowCells.map { case (i, s) => i -> s.trim }.toMap
-      } else {
-        val sb = new java.lang.StringBuilder(64)
-        sb.append('{')
-        var first = true
-        rowCells.foreach { case (i, s) =>
-          if (!first) sb.append(',')
-          first = false
-          sb.append('"').append(jsonEscape(keyOf(i))).append("\":\"")
-            .append(jsonEscape(s.trim)).append('"')
-        }
-        sb.append('}')
-        w.write(sb.toString)
-        w.newLine()
-      }
-      rowCells = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
+
+    def next(): scala.collection.Seq[(Int, String)] = {
+      if (!hasNext) throw new NoSuchElementException("no row left in the sheet")
+      ready = false
+      val row = cells
+      cells = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
+      row
     }
-    try {
-      while (r.hasNext) {
-        r.next() match {
-          case javax.xml.stream.XMLStreamConstants.START_ELEMENT =>
-            r.getLocalName match {
-              case "row" => inRow = true; cellPos = 0
-              case "c" if inRow =>
-                val ref = Option(r.getAttributeValue(null, "r")).getOrElse("")
-                val letters = ref.takeWhile(_.isLetter)
-                cIdx =
-                  if (letters.isEmpty) cellPos
-                  else letters.foldLeft(0)(
-                    (acc, ch) => acc * 26 + (ch - 'A' + 1)) - 1
-                cellPos += 1
-                cType = Option(r.getAttributeValue(null, "t")).getOrElse("")
-                cStyle = Option(r.getAttributeValue(null, "s"))
-                  .flatMap(_.toIntOption).flatMap(styleIsDate.lift)
-                vText.setLength(0); isText.setLength(0)
-                inV = false; vSeen = false
-              case "v" => inV = true; vSeen = true
-              case "t" => inIsT = true
-              case _ => ()
-            }
-          case javax.xml.stream.XMLStreamConstants.CHARACTERS
-               | javax.xml.stream.XMLStreamConstants.CDATA =>
-            if (inV) vText.append(r.getText)
-            else if (inIsT) isText.append(r.getText)
-          case javax.xml.stream.XMLStreamConstants.END_ELEMENT =>
-            r.getLocalName match {
-              case "v" => inV = false
-              case "t" => inIsT = false
-              case "c" if inRow => endCell()
-              case "row" if inRow => endRow(); inRow = false
-              case _ => ()
-            }
+
+    private def step(event: Int): Unit = event match {
+      case START_ELEMENT =>
+        r.getLocalName match {
+          case "row" => inRow = true; cellPos = 0
+          case "c" if inRow =>
+            val ref = Option(r.getAttributeValue(null, "r")).getOrElse("")
+            val letters = ref.takeWhile(_.isLetter)
+            cIdx =
+              if (letters.isEmpty) cellPos
+              else letters.foldLeft(0)(
+                (acc, ch) => acc * 26 + (ch - 'A' + 1)) - 1
+            cellPos += 1
+            cType = Option(r.getAttributeValue(null, "t")).getOrElse("")
+            cStyle = Option(r.getAttributeValue(null, "s"))
+              .flatMap(_.toIntOption).flatMap(styleIsDate.lift)
+            vText.setLength(0); isText.setLength(0)
+            inV = false; vSeen = false
+          case "v" => inV = true; vSeen = true
+          case "t" => inIsT = true
           case _ => ()
         }
-      }
-    } finally {
-      r.close()
-      w.close()
+      case CHARACTERS | CDATA =>
+        if (inV) vText.append(r.getText)
+        else if (inIsT) isText.append(r.getText)
+      case END_ELEMENT =>
+        r.getLocalName match {
+          case "v" => inV = false
+          case "t" => inIsT = false
+          case "c" if inRow => cellValue().foreach(v => cells += cIdx -> v.trim)
+          case "row" if inRow => inRow = false; ready = true
+          case _ => ()
+        }
+      case _ => ()
     }
-    require(header != null, s"sheet is empty (no header row): $out")
-    header.values.toSeq
+
+    private def cellValue(): Option[String] = cType match {
+      case "s" =>
+        if (!vSeen) None
+        else vText.toString.trim.toIntOption.flatMap(shared.lift)
+      case "inlineStr" => Some(isText.toString)
+      case "b" =>
+        if (!vSeen) None
+        else Some(if (vText.toString.trim == "1") "true" else "false")
+      case "str" => if (vSeen) Some(vText.toString) else None
+      // error cells (#DIV/0!, #VALUE!, ...) are NULL in the
+      // pd.read_excel contract — never data, even for string columns
+      case "e" => None
+      case _ =>
+        if (!vSeen) None
+        else {
+          val raw = vText.toString
+          cStyle match {
+            case Some((true, withTime)) =>
+              Some(raw.trim.toDoubleOption
+                .map(ExcelCells.serialToIso(_, withTime, date1904))
+                .getOrElse(raw))
+            case _ =>
+              // Writers emit large/small numerics in scientific
+              // notation (`1.067371E7`); a LongType cast of that
+              // string is NULL — silent data loss. Normalize through
+              // the numeric renderer (integral doubles print plain).
+              if (raw.indexOf('E') >= 0 || raw.indexOf('e') >= 0)
+                Some(raw.trim.toDoubleOption
+                  .map(ExcelCells.numericText).getOrElse(raw))
+              else Some(raw)
+          }
+        }
+    }
   }
 }

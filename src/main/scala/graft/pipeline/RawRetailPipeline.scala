@@ -62,7 +62,8 @@ object RawRetailPipeline {
     * the tables inside a level do not read each other and are built
     * concurrently, so one driver keeps several independent Spark jobs
     * in flight instead of running them one after another:
-    *  1. raw_retail_data (xlsx parse), raw_fx_rates, raw_uk_holidays;
+    *  1. raw_retail_data (xlsx scan, one task per sheet), raw_fx_rates
+    *     and raw_uk_holidays (one Spark job each);
     *  2. dim_calendar (after its bounds query), dim_product,
     *     dim_customer;
     *  3. fct_sales, and daily_fx_rates over the fct plan's date range;
@@ -126,12 +127,15 @@ object RawRetailPipeline {
             col("Customer ID").as("customer_id"),
             col("Country").as("country"),
             col("source_sheet"))),
+      // The two small sources are parsed on the driver. One partition
+      // already satisfies the distinct's and the sort's distribution,
+      // so each table is staged in one job with no Exchange.
       () => cat.save("raw_fx_rates",
-        XmlFxSource(fxXmlPath).load(spark)
+        XmlFxSource(fxXmlPath).load(spark).coalesce(1)
           .withColumnRenamed("rate", "gbp_per_eur")
           .orderBy("date")),
       () => cat.save("raw_uk_holidays",
-        XlsSource(holidaysXlsPath, HolidaysSchema).load(spark)
+        XlsSource(holidaysXlsPath, HolidaysSchema).load(spark).coalesce(1)
           .select(col("UK BANK HOLIDAYS").as("holiday_date"))
           .filter($"holiday_date".isNotNull)
           .distinct().orderBy("holiday_date")))

@@ -1,7 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.engine.GoldenFixture
 import graft.pipeline.RawRetailPipeline
 
@@ -14,7 +20,7 @@ import graft.pipeline.RawRetailPipeline
   * `runMain graft.Golden` + tools/check_golden.py (the DuckDB
   * differential); this spec keeps the path green per-commit.
   */
-class GoldenSpec extends SparkTestBase {
+class GoldenSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   import GoldenSpec.{cfg, built}
 
   private lazy val m = GoldenFixture.manifest(cfg)
@@ -106,6 +112,35 @@ class GoldenSpec extends SparkTestBase {
     try assert(cat.table("fct_sales").count() ==
       GoldenFixture.manifest(small).fctRows)
     finally cat.close()
+  }
+
+  test("raw_fx_rates and raw_uk_holidays are staged with no shuffle") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_golden_plans")
+      .toString
+    val (xlsx, fx, hol) = GoldenSpec.writeRaw(Golden.scaled(2000), dir)
+    val small = Set("raw_fx_rates", "raw_uk_holidays")
+    val plans = new java.util.concurrent.ConcurrentHashMap[String, SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.analyzed.collectFirst { case c: InsertIntoHadoopFsRelationCommand =>
+          new java.io.File(c.outputPath.toString).getName
+        }.filter(small).foreach(plans.put(_, qe.executedPlan))
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try RawRetailPipeline.build(spark, xlsx, fx, hol, s"$dir/warehouse").close()
+    finally spark.listenerManager.unregister(listener)
+    // listener events arrive on the listener bus, after the write returns
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (plans.size < small.size && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(plans.keySet.asScala == small)
+    plans.asScala.foreach { case (t, plan) =>
+      val adaptive = plan.collect { case a: AdaptiveSparkPlanExec => a }
+      assert(adaptive.nonEmpty && adaptive.forall(_.isFinalPlan), s"$t:\n$plan")
+      val shuffles = (plan +: adaptive.flatMap(a => Seq(a.initialPlan, a.executedPlan)))
+        .flatMap(collectWithSubqueries(_) { case e: ShuffleExchangeExec => e })
+      assert(shuffles.isEmpty, s"$t:\n$plan")
+    }
   }
 }
 

@@ -11,6 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * cannot see and the object-store port would silently miss. Reading
   * a `.sql` file for `createViewFromSql` is not warehouse I/O and is
   * not flagged.
+  *
+  * A sibling lint keeps the raw-file readers free of spills: a temp
+  * file or directory beside a reader is a text round trip between
+  * formats, and a `deleteOnExit` hook grows with every load in a
+  * long-lived JVM.
   */
 class StoreSeamSpec extends AnyFunSuite {
 
@@ -24,6 +29,20 @@ class StoreSeamSpec extends AnyFunSuite {
 
   private def raw(line: String): Boolean =
     RawFileOp.exists(_.findFirstIn(line).isDefined)
+
+  private val SpillOp = Seq(
+    """\bcreateTemp(?:File|Directory)\b""".r,
+    """\bdeleteOnExit\b""".r)
+
+  private def spills(line: String): Boolean =
+    SpillOp.exists(_.findFirstIn(line).isDefined)
+
+  private def hits(files: Seq[Path], flagged: String => Boolean): Seq[String] =
+    files.flatMap { (f: Path) =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if flagged(line) => s"$f:${i + 1}: ${line.trim}"
+      }
+    }
 
   test("the lint flags raw file mutation and listing, not reads") {
     Seq("new java.io.File(p).delete()",
@@ -50,12 +69,26 @@ class StoreSeamSpec extends AnyFunSuite {
     val files = engine.resolve("Catalog.scala") +: Using.resource(Files.walk(pipeline))(
       _.iterator.asScala.filter(_.toString.endsWith(".scala")).toVector)
     assert(files.size > 1)
-    val hits = files.flatMap { (f: Path) =>
-      Files.readAllLines(f).asScala.zipWithIndex.collect {
-        case (line, i) if raw(line) => s"$f:${i + 1}: ${line.trim}"
-      }
-    }
-    assert(hits.isEmpty,
-      s"raw file operations outside the Store seam:\n  ${hits.mkString("\n  ")}")
+    val found = hits(files, raw)
+    assert(found.isEmpty,
+      s"raw file operations outside the Store seam:\n  ${found.mkString("\n  ")}")
+  }
+
+  test("the spill lint flags temp files, temp directories and exit hooks") {
+    Seq("val spillRoot = java.nio.file.Files.createTempDirectory(",
+      "Files.createTempFile(dir, \"sheet_\", \".jsonl\")",
+      "java.io.File.createTempFile(s\"$name.\", \".tmp\", dir)",
+      "spill.toFile.deleteOnExit()").foreach(l => assert(spills(l), l))
+    Seq("val zip = new java.util.zip.ZipFile(path)",
+      "java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))")
+      .foreach(l => assert(!spills(l), l))
+  }
+
+  test("the raw-file readers create no temp file and register no exit hook") {
+    val engine = Paths.get("src/main/scala/graft/engine")
+    val readers = Seq("Sources.scala", "XlsSource.scala").map(engine.resolve)
+    readers.foreach(f => assert(Files.isRegularFile(f), s"run from the repository root: $f"))
+    val found = hits(readers, spills)
+    assert(found.isEmpty, s"spills in the raw-file readers:\n  ${found.mkString("\n  ")}")
   }
 }

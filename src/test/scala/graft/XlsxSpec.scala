@@ -279,4 +279,78 @@ class XlsxSpec extends SparkTestBase {
       XlsxSource(f.toString, schema).load(spark)
     }
   }
+
+  private def zipOf(parts: (String, String)*): String = {
+    val f = Files.createTempFile("graft-parts", ".xlsx")
+    val zos = new ZipOutputStream(Files.newOutputStream(f))
+    parts.foreach { case (name, content) =>
+      zos.putNextEntry(new ZipEntry(name))
+      zos.write(content.getBytes("UTF-8"))
+      zos.closeEntry()
+    }
+    zos.close()
+    f.toString
+  }
+
+  /** A workbook of `sheets` (name, data rows of (k, v)), each sheet
+    * in its own part, with the header row `headers`.
+    */
+  private def workbook(headers: Seq[String],
+                       sheets: Seq[(String, Seq[(String, Int)])]): String = {
+    val ns = """xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships""""
+    // rIds and part numbers count down, so neither follows sheet order
+    val ids = sheets.indices.map(i => sheets.size - i)
+    def cell(v: String) = s"""<c t="inlineStr"><is><t>$v</t></is></c>"""
+    val parts = sheets.zip(ids).map { case ((_, rows), id) =>
+      s"xl/worksheets/sheet$id.xml" ->
+        (s"<worksheet><sheetData><row>${headers.map(cell).mkString}</row>" +
+          rows.map { case (k, v) => s"<row>${cell(k)}<c><v>$v</v></c></row>" }.mkString +
+          "</sheetData></worksheet>")
+    }
+    zipOf(Seq(
+      "xl/workbook.xml" -> (s"<workbook $ns><sheets>" + sheets.zip(ids).map {
+        case ((n, _), id) => s"""<sheet name="$n" sheetId="$id" r:id="rId$id"/>"""
+      }.mkString + "</sheets></workbook>"),
+      "xl/_rels/workbook.xml.rels" -> ("<Relationships>" + ids.map(id =>
+        s"""<Relationship Id="rId$id" Target="worksheets/sheet$id.xml"/>""")
+        .mkString + "</Relationships>")) ++ parts: _*)
+  }
+
+  private val kv = StructType(Seq(
+    StructField("k", StringType), StructField("v", LongType)))
+
+  test("XlsxSource returns rows in workbook order, not sheet-name order") {
+    val path = workbook(Seq("k", "v"), Seq(
+      "Zeta" -> Seq("z1" -> 1, "z2" -> 2),
+      "Alpha" -> Seq("a1" -> 3),
+      "Mid" -> Seq("m1" -> 4, "m2" -> 5)))
+    val rows = XlsxSource(path, kv).load(spark).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2)))
+    assert(rows.toSeq === Seq(("z1", 1L, "Zeta"), ("z2", 2L, "Zeta"),
+      ("a1", 3L, "Alpha"), ("m1", 4L, "Mid"), ("m2", 5L, "Mid")))
+  }
+
+  test("XlsxSource rejects a header missing a schema column at load, " +
+      "naming the sheet and the column") {
+    val path = workbook(Seq("k", "value"), Seq("Only" -> Seq("x" -> 1)))
+    // load() runs no Spark job: the check is on the driver's header read
+    val e = intercept[IllegalArgumentException](XlsxSource(path, kv).load(spark))
+    assert(e.getMessage.contains("sheet 'Only'"), e.getMessage)
+    assert(e.getMessage.contains("missing schema column(s) v "), e.getMessage)
+  }
+
+  test("XlsxSource writes nothing to java.io.tmpdir; the frame reads the " +
+      "workbook itself when an action runs") {
+    val path = workbook(Seq("k", "v"), Seq("S" -> Seq("x" -> 1)))
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def entries = Option(tmp.list()).toSet.flatten
+    val before = entries
+    val df = XlsxSource(path, kv).load(spark)
+    assert(df.collect().length === 1)
+    assert((entries -- before).isEmpty, s"new entries: ${entries -- before}")
+    // Like any Spark file source, the frame is lazy over the file: it
+    // keeps no copy, so the workbook must stay until the last action.
+    Files.delete(java.nio.file.Paths.get(path))
+    assertThrows[org.apache.spark.SparkException](df.collect())
+  }
 }
