@@ -1,18 +1,7 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 
-/** Name → table registry over a parquet warehouse directory
-  * (SURVEY.md §2.1 S6-S7, S10-S11; §2.10 M2).
-  *
-  * The reference keeps all tables in one embedded DuckDB file and
-  * rebuilds with DROP-IF-EXISTS + CTAS (the src/models modules). The Spark
-  * analog: one directory per table under a warehouse root,
-  * `mode("overwrite")` subsuming the drop, and a temp view per table so
-  * both the DataFrame API and `spark.sql` address the catalog. At scale
-  * the warehouse root is an object-store prefix and saves pass
-  * `partitionBy` so downstream scans prune partitions.
-  */
 /** Order-independent table checksum — the migration-validation
   * primitive for verifying a 100 TB copy without sorting or moving
   * either side: both clusters scan locally and compare two numbers
@@ -209,8 +198,46 @@ object Catalog {
     }
     hit
   }
+
+  /** Directory key of the ingest writers' batches (`__batch_id=N`). */
+  val BatchKey = "__batch_id"
+  /** Directory key of the `MinMergeStats` delta log (`__delta=N`). */
+  val DeltaKey = "__delta"
+
+  /** One listing of a per-batch table: the ids of its committed
+    * (`ids`) and uncommitted (`partial`) `key=N` directories under
+    * `root`, ascending.
+    */
+  final case class Batches(root: String, key: String, ids: Seq[Long],
+                           partial: Seq[Long]) {
+    def dir(id: Long): String = s"$root/$key=$id"
+    /** The newest committed id, or -1 when none is committed. */
+    def newest: Long = ids.foldLeft(-1L)(math.max)
+    /** This listing with `id` committed. */
+    def +(id: Long): Batches =
+      copy(ids = (ids :+ id).distinct.sorted, partial = partial.filterNot(_ == id))
+  }
 }
 
+/** Name → table registry over a parquet warehouse directory
+  * (SURVEY.md §2.1 S6-S7, S10-S11; §2.10 M2).
+  *
+  * The reference keeps all tables in one embedded DuckDB file and
+  * rebuilds with DROP-IF-EXISTS + CTAS (the src/models modules). The Spark
+  * analog: one directory per table under a warehouse root,
+  * `mode("overwrite")` subsuming the drop, and a temp view per table so
+  * both the DataFrame API and `spark.sql` address the catalog. At scale
+  * the warehouse root is an object-store prefix and saves pass
+  * `partitionBy` so downstream scans prune partitions.
+  *
+  * The DuckDB file also means a reader never sees half of a write. Here
+  * that guarantee is the Catalog's, per commit protocol: the compaction
+  * swap, the versioned pointer, and the per-batch layout — a table that
+  * is a set of numbered directories (`__batch_id=N`, `__delta=N`), each
+  * live only once its `_SUCCESS` exists. [[batches]] lists the live
+  * ones, [[readBatches]] reads exactly those, [[purgeBatches]] deletes
+  * the rest at a writer's entry and [[writeBatch]] commits one more.
+  */
 final class Catalog private[graft] (val spark: SparkSession,
     val warehouse: String, private[graft] val store: Store) {
 
@@ -223,7 +250,7 @@ final class Catalog private[graft] (val spark: SparkSession,
 
   // ---- single-writer guard -------------------------------------------
   // Every mutating operator here (compact's two-rename swap,
-  // saveVersioned's pointer flip, the incremental writers' purge of
+  // saveVersioned's pointer flip, purgeBatches' delete of
   // _SUCCESS-less batch dirs) assumes exactly one session owns the
   // warehouse; a concurrent second writer could have its in-flight work
   // swapped aside or purged mid-write. The assumption is converted into
@@ -478,7 +505,7 @@ final class Catalog private[graft] (val spark: SparkSession,
   /** Read `name` back and (re-)register it — partition directories
     * ('table/part=value') are not table names and stay unregistered.
     */
-  private def reread(name: String): DataFrame = {
+  private[graft] def reread(name: String): DataFrame = {
     val back = spark.read.parquet(s"$warehouse/$name")
     if (!name.exists(c => c == '/' || c == '=')) back.createOrReplaceTempView(name)
     back
@@ -513,22 +540,30 @@ final class Catalog private[graft] (val spark: SparkSession,
     // lose partition pruning.
     require(!store.listDirs(s"$warehouse/$name").exists(_.contains("=")),
       s"compact($name): partitioned table — compact one partition dir at a time")
-    marked(name)(rewrite(name, targetBytes, sortBy))
+    rewriteAll(name, Seq(name), targetBytes, sortBy)
     reread(name)
   }
 
-  private def rewrite(name: String, targetBytes: Long, sortBy: Seq[String]): Unit = {
-    val dir = s"$warehouse/$name"
-    val nFiles = math.max(1, math.ceil(store.size(dir).toDouble / targetBytes).toInt)
-    val df = spark.read.parquet(dir)
-    val shaped =
-      if (sortBy.nonEmpty)
-        df.repartition(nFiles, sortBy.map(
-            org.apache.spark.sql.functions.col): _*)
-          .sortWithinPartitions(sortBy.map(
-            org.apache.spark.sql.functions.col): _*)
-      else df.repartition(nFiles)
-    swap(name)(tmp => store.writeParquet(shaped.write.mode("overwrite"), tmp))
+  /** Rewrite each of `dirs` (directories of `name`'s table) into
+    * `ceil(bytes / targetBytes)` files, all under one marker. A
+    * directory that cannot shrink — no `sortBy`, and already no more
+    * files than that — is left alone, and when none can, no marker is
+    * written either.
+    */
+  private def rewriteAll(name: String, dirs: Seq[String], targetBytes: Long,
+                         sortBy: Seq[String]): Unit = {
+    val keys = sortBy.map(org.apache.spark.sql.functions.col)
+    val todo = dirs.flatMap { rel =>
+      val dir = s"$warehouse/$rel"
+      val nFiles = math.max(1, math.ceil(store.size(dir).toDouble / targetBytes).toInt)
+      val df = spark.read.parquet(dir)
+      if (keys.isEmpty && df.inputFiles.length <= nFiles) None
+      else Some(rel -> (if (keys.isEmpty) df.repartition(nFiles)
+        else df.repartition(nFiles, keys: _*).sortWithinPartitions(keys: _*)))
+    }
+    if (todo.nonEmpty) marked(name)(todo.foreach { case (rel, shaped) =>
+      swap(rel)(tmp => store.writeParquet(shaped.write.mode("overwrite"), tmp))
+    })
   }
 
   /** Overwrite an EXISTING table with a frame that reads it — the
@@ -572,7 +607,7 @@ final class Catalog private[graft] (val spark: SparkSession,
     val leafDirs = leaves(name)
     require(leafDirs != Seq(name),
       s"compactPartitions($name): not partitioned — use compact()")
-    marked(name)(leafDirs.foreach(rewrite(_, targetBytes, sortBy)))
+    rewriteAll(name, leafDirs, targetBytes, sortBy)
     reread(name)
   }
 
@@ -593,6 +628,72 @@ final class Catalog private[graft] (val spark: SparkSession,
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .saveAsTable(name)
     spark.table(name)
+  }
+
+  // ---- per-batch tables ----------------------------------------------
+  // A per-batch table is a set of numbered directories `<key>=N` under
+  // its root ([[Catalog.BatchKey]] for the ingest writers,
+  // [[Catalog.DeltaKey]] for the MinMergeStats log). Spark creates each
+  // at job start and its committer drops `_SUCCESS` only after every
+  // task file is in place, so a directory is LIVE only once its
+  // `_SUCCESS` exists. Readers read exactly the live ones; writers purge
+  // the rest at entry (safe only because the warehouse is single-writer,
+  // see the guard above) and extend that listing as they commit.
+
+  private def foreign(key: String) = s"this table uses the per-batch $key= " +
+    "layout (a flat pre-existing table must be re-ingested as one batch)"
+
+  /** The reader's listing of per-batch table `name`: one LIST of its
+    * root and one `_SUCCESS` check per `key=` directory. Deletes
+    * nothing — a reader racing this session's own in-flight write must
+    * not sweep it.
+    */
+  def batches(name: String, key: String = Catalog.BatchKey): Catalog.Batches = {
+    healIfMarked(name)
+    val root = s"$warehouse/$name"
+    val names = store.listDirs(root)
+    // besides the batches, only `_`-prefixed table metadata (Spark's own
+    // hidden-file convention) may sit at the root
+    names.find(!_.startsWith("_")).foreach(n => throw new IllegalArgumentException(
+      s"$name: entry '$n' is not a batch directory — ${foreign(key)}"))
+    val (ids, partial) = names.filter(_.startsWith(s"$key="))
+      .map(_.stripPrefix(s"$key=").toLong).sorted
+      .partition(id => store.exists(s"$root/$key=$id/_SUCCESS"))
+    Catalog.Batches(root, key, ids, partial)
+  }
+
+  /** The writer's listing of `name`, with every uncommitted directory
+    * deleted: its writing call never returned, so an at-least-once
+    * upstream redelivers the batch.
+    */
+  def purgeBatches(name: String, key: String = Catalog.BatchKey): Catalog.Batches = {
+    // a flat table's own job marker: the per-batch layout commits each
+    // batch directory, never the root
+    require(!store.exists(s"$warehouse/$name/_SUCCESS"),
+      s"$name: a _SUCCESS at the table root — ${foreign(key)}")
+    val b = batches(name, key)
+    b.partial.foreach(id => store.delete(b.dir(id)))
+    b.copy(partial = Nil)
+  }
+
+  /** Write batch `id` of `b`'s table with `writer` — mode overwrite, so
+    * a replay rewrites its own directory — and return `b` with it
+    * committed.
+    */
+  def writeBatch(b: Catalog.Batches, id: Long,
+                 writer: DataFrameWriter[Row]): Catalog.Batches = {
+    store.writeParquet(writer.mode("overwrite"), b.dir(id))
+    b + id
+  }
+
+  /** The committed directories of `b` as one frame, with `b.key` as a
+    * column: the directories are passed by name, so an uncommitted one
+    * is never scanned, and `basePath` anchors partition discovery at
+    * the table root.
+    */
+  def readBatches(b: Catalog.Batches): DataFrame = {
+    require(b.ids.nonEmpty, s"${b.root}: no committed batches")
+    spark.read.option("basePath", b.root).parquet(b.ids.map(b.dir): _*)
   }
 
   // ---- versioned tables ----------------------------------------------

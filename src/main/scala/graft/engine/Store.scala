@@ -3,9 +3,10 @@ package graft.engine
 import org.apache.spark.sql.{DataFrameWriter, Row}
 
 /** The warehouse's one storage seam. Every commit protocol — the
-  * [[Catalog]] compaction swap, its `_LOCK` and versioned pointer, the
-  * per-batch writers (`IncrementalIngest`, `IncrementalNearDup`,
-  * `IncrementalRollup`) and the `MinMergeStats` delta log — touches
+  * [[Catalog]] compaction swap, its `_LOCK` and versioned pointer, and
+  * the per-batch layout (`__batch_id=`/`__delta=` directories committed
+  * by `_SUCCESS`, listed, read and purged only by the Catalog for the
+  * ingest writers and the `MinMergeStats` delta log) — touches
   * warehouse files only through these primitives, each chosen to map
   * ONE-FOR-ONE onto the Hadoop `FileSystem` API for the object-store
   * deployment:
@@ -34,7 +35,8 @@ import org.apache.spark.sql.{DataFrameWriter, Row}
   *
   * Tests substitute a store that crashes at a chosen call (the
   * Catalog's `private[graft]` constructor parameter), which is how
-  * every crash point of every protocol is enumerated.
+  * every crash point of every protocol is enumerated and its calls —
+  * each a round trip on an object store — are counted.
   */
 private[graft] trait Store {
 

@@ -18,11 +18,10 @@ import graft.engine.Catalog
   * Crash safety (exactly-once): there is no atomic multi-table commit
   * on a filesystem, so both appends are made *recoverable* instead —
   * each batch lands under its own `__batch_id=` partition in BOTH the
-  * row table and the digest table, and a partition counts as committed
-  * only when its `_SUCCESS` marker exists (directory existence is NOT
-  * commit: Spark creates the directory at job start, so a crash
-  * mid-write leaves a partial partition). Append order is `_last_batch`
-  * artifact, then rows, then digests; [[recover]] (run at the start of
+  * row table and the digest table, committed by its `_SUCCESS` (the
+  * [[Catalog]]'s per-batch rule; readers see only committed
+  * partitions). Append order is `_last_batch`
+  * artifact, then rows, then digests; `recover` (run at the start of
   * every ingest, i.e. before `_last_batch` is overwritten) repairs the
   * newest batch from the durable `_last_batch`. The failure matrix:
   *  - crash during the `_last_batch` write: no row partition exists for
@@ -43,89 +42,32 @@ import graft.engine.Catalog
   */
 object IncrementalIngest {
 
-  private def rowsDir(cat: Catalog, table: String, batchId: Long) =
-    s"${cat.warehouse}/$table/__batch_id=$batchId"
-
-  private def digestsDir(cat: Catalog, table: String, batchId: Long) =
-    s"${cat.warehouse}/${table}_digests/__batch_id=$batchId"
-
-  /** Commit test: Hadoop's FileOutputCommitter drops `_SUCCESS` only
-    * after every task file is in place (at scale: the same marker on
-    * the object store) — one definition of "committed" for every
-    * `__batch_id=` layout.
+  /** The surviving batch of the newest ingest: recovery source and audit
+    * trail (see [[ingest]]).
     */
-  private def committed(cat: Catalog, dir: String): Boolean =
-    cat.store.exists(s"$dir/_SUCCESS")
-
-  /** All `__batch_id=` partition ids present under the row table,
-    * committed or partial (one LIST of top-level prefixes). Shared
-    * with [[IncrementalRollup]].
-    */
-  private[pipeline] def batchIds(cat: Catalog, table: String): Seq[Long] =
-    cat.store.listDirs(s"${cat.warehouse}/$table")
-      .filter(_.startsWith("__batch_id="))
-      .map(_.stripPrefix("__batch_id=").toLong)
-
-  /** Batch ids whose row partition is fully committed. */
-  private def committedBatches(cat: Catalog, table: String): Seq[Long] =
-    batchIds(cat, table).filter(id => committed(cat, rowsDir(cat, table, id)))
-
-  /** Shared recovery step for every per-batch writer (rollup facts,
-    * near-dup corpus + signature index): purge uncommitted
-    * (`_SUCCESS`-less) `__batch_id=` directories — a crash mid-write
-    * leaves a partial partition no recompute may read, and the batch
-    * never completed its ingest call so an at-least-once upstream
-    * redelivers it — and refuse foreign layouts loudly instead of
-    * letting Spark's partition discovery throw a cryptic
-    * conflicting-structures error.
-    *
-    * REQUIRES single-writer-per-warehouse: a `_SUCCESS`-less directory
-    * is only distinguishable from a *concurrent* writer's in-flight
-    * batch by ownership, so purging is safe only because exactly one
-    * session writes the warehouse — the invariant the Catalog
-    * constructor's lock (in-process claim + `_LOCK` pid file) enforces
-    * rather than assumes.
-    */
-  private[pipeline] def purgePartialBatches(cat: Catalog, table: String): Unit = {
-    val root = s"${cat.warehouse}/$table"
-    // a flat table's own job marker: the per-batch layout commits each
-    // batch directory, never the root
-    val foreign = "this table uses the per-batch __batch_id= layout (a " +
-      "flat pre-existing table must be re-ingested as one batch)"
-    require(!cat.store.exists(s"$root/_SUCCESS"),
-      s"$table: a _SUCCESS at the table root — $foreign")
-    cat.store.listDirs(root)
-      // `_`-prefixed directories OTHER than the batch dirs are table
-      // metadata (Spark's own hidden-file convention) — never purged
-      .filterNot(n => n.startsWith("_") && !n.startsWith("__batch_id="))
-      .foreach { n =>
-        require(n.startsWith("__batch_id="),
-          s"$table: entry '$n' is not a batch directory — $foreign")
-        if (!committed(cat, s"$root/$n")) cat.store.delete(s"$root/$n")
-      }
-  }
+  private def lastBatch(cat: Catalog, table: String) =
+    s"${cat.warehouse}/${table}_last_batch"
 
   /** Close the crash windows: if the newest row batch (committed or
     * partial) is missing its `_SUCCESS` or its digest partition's,
     * rewrite the incomplete partition(s) from the `<table>_last_batch`
-    * artifact. Idempotent; O(1) directory checks plus at most one
-    * batch-sized rewrite.
+    * artifact. Idempotent; one listing of each table plus at most one
+    * batch-sized rewrite. Returns the committed listings of the row and
+    * digest tables.
     */
-  def recover(cat: Catalog, table: String): Unit =
-    batchIds(cat, table).sorted.lastOption.foreach { last =>
-      val rows = rowsDir(cat, table, last)
-      val digs = digestsDir(cat, table, last)
-      val (rowsDone, digsDone) = (committed(cat, rows), committed(cat, digs))
-      if (!rowsDone || !digsDone) {
-        val lb = cat.spark.read
-          .parquet(s"${cat.warehouse}/${table}_last_batch")
-        if (!rowsDone)
-          cat.store.writeParquet(lb.drop("__fp").write.mode("overwrite"), rows)
-        if (!digsDone)
-          cat.store.writeParquet(
-            lb.select(col("__fp").as("fp")).write.mode("overwrite"), digs)
+  private def recover(cat: Catalog, table: String): (Catalog.Batches, Catalog.Batches) = {
+    val rows = cat.batches(table)
+    val digs = cat.batches(s"${table}_digests")
+    (rows.ids ++ rows.partial).maxOption
+      .filterNot(last => rows.ids.contains(last) && digs.ids.contains(last))
+      .fold((rows, digs)) { last =>
+        val lb = cat.spark.read.parquet(lastBatch(cat, table))
+        (if (rows.ids.contains(last)) rows
+         else cat.writeBatch(rows, last, lb.drop("__fp").write),
+         if (digs.ids.contains(last)) digs
+         else cat.writeBatch(digs, last, lb.select(col("__fp").as("fp")).write))
       }
-    }
+  }
 
   /** Ingest `batch`: returns the rows whose `textCol` content was never
     * seen before (first occurrence within the batch wins), after
@@ -134,17 +76,15 @@ object IncrementalIngest {
     */
   def ingest(cat: Catalog, batch: DataFrame, textCol: String,
              table: String): DataFrame = {
-    recover(cat, table)
-    val digests = s"${table}_digests"
-    val batchId = committedBatches(cat, table).foldLeft(0L)(math.max) + 1
+    val (rows, digs) = recover(cat, table)
+    val batchId = math.max(rows.newest, 0L) + 1
     val withFp = batch.withColumn("__fp", md5(col(textCol)))
       .dropDuplicates("__fp") // within-batch dedup
     // read the digest history from storage, not the temp view: a fresh
     // session over an existing warehouse has no view registered yet
     val fresh =
-      if (cat.exists(digests))
-        withFp.join(
-          cat.spark.read.parquet(s"${cat.warehouse}/$digests").select("fp"),
+      if (digs.ids.nonEmpty)
+        withFp.join(cat.readBatches(digs).select("fp"),
           withFp("__fp") === col("fp"), "left_anti")
       else withFp
     // Materialize the surviving batch ONCE, durably, BEFORE either
@@ -152,19 +92,16 @@ object IncrementalIngest {
     // anti-join against the now-updated digest table and evaluate to
     // empty (self-invalidation). The `<table>_last_batch` artifact
     // doubles as the recovery source and the ingest audit trail.
-    val freshDir = s"${cat.warehouse}/${table}_last_batch"
-    cat.store.writeParquet(fresh.write.mode("overwrite"), freshDir)
-    val freshBack = cat.spark.read.parquet(freshDir)
-    cat.store.writeParquet(freshBack.drop("__fp").write.mode("overwrite"),
-      rowsDir(cat, table, batchId))
-    cat.store.writeParquet(freshBack.select(col("__fp").as("fp"))
-      .write.mode("overwrite"), digestsDir(cat, table, batchId))
-    // Re-register both views over the partitioned roots, shedding the
+    cat.store.writeParquet(fresh.write.mode("overwrite"), lastBatch(cat, table))
+    val freshBack = cat.spark.read.parquet(lastBatch(cat, table))
+    val rowsNow = cat.writeBatch(rows, batchId, freshBack.drop("__fp").write)
+    val digsNow = cat.writeBatch(digs, batchId,
+      freshBack.select(col("__fp").as("fp")).write)
+    // Re-register both views over the committed batches, shedding the
     // partition-discovery `__batch_id` column: batch placement is a
     // storage detail, not part of the table's column contract.
-    Seq(table, digests).foreach { n =>
-      cat.spark.read.parquet(s"${cat.warehouse}/$n").drop("__batch_id")
-        .createOrReplaceTempView(n)
+    Seq(table -> rowsNow, s"${table}_digests" -> digsNow).foreach { case (n, b) =>
+      cat.readBatches(b).drop(Catalog.BatchKey).createOrReplaceTempView(n)
     }
     freshBack.drop("__fp")
   }

@@ -36,10 +36,11 @@ import graft.engine.Catalog
   *
   * Crash safety mirrors the other per-batch writers: rows and
   * signatures each land under `__batch_id=<id>/` with mode(overwrite),
-  * partial (`_SUCCESS`-less) directories are purged at every entry,
-  * and a replay with the same `batchId` overwrites its own
-  * directories. The index probe EXCLUDES the batch's own
-  * `__batch_id=` partition, so a replay of a fully committed batch
+  * partial (`_SUCCESS`-less) directories are purged at every entry
+  * ([[Catalog.purgeBatches]]), readers see only committed ones, and a
+  * replay with the same `batchId` overwrites its own directories. The
+  * index probe does not list the batch's own `__batch_id=` partition,
+  * so a replay of a fully committed batch
   * returns the same survivor set as the first run (the docs would
   * otherwise each match their own indexed signature at hamming 0 and
   * the replay would return empty — warehouse-convergent but
@@ -86,23 +87,19 @@ object IncrementalNearDup {
     * existing `sb=` partition dirs (legacy index written before the
     * meta file existed — max(sb)+1, correct whenever the top bucket is
     * populated, which 4 bands × any real batch guarantees) and written
-    * back; else [[SigBuckets]] for a brand-new index.
+    * back; else None for a brand-new index, which gets [[SigBuckets]].
     */
-  private[graft] def storedSigBuckets(cat: Catalog, sigsTable: String): Int = {
+  private[graft] def storedSigBuckets(cat: Catalog, sigsTable: String): Option[Int] = {
     val meta = sigBucketsFile(cat, sigsTable)
-    if (cat.store.exists(meta)) cat.store.read(meta).toInt
+    if (cat.store.exists(meta)) Some(cat.store.read(meta).toInt)
     else {
-      val root = s"${cat.warehouse}/$sigsTable"
+      val sigs = cat.batches(sigsTable)
       val sbDirs = for {
-        b <- cat.store.listDirs(root) if b.startsWith("__batch_id=")
-        k <- cat.store.listDirs(s"$root/$b") if k.startsWith("k=")
-        sb <- cat.store.listDirs(s"$root/$b/$k") if sb.startsWith("sb=")
-      } yield sb.stripPrefix("sb=").toInt
-      if (sbDirs.nonEmpty) {
-        val nb = sbDirs.max + 1
-        cat.store.putAtomic(meta, nb.toString)
-        nb
-      } else SigBuckets
+        id <- sigs.ids
+        k <- cat.store.listDirs(sigs.dir(id)) if k.startsWith("k=")
+        sb <- cat.store.listDirs(s"${sigs.dir(id)}/$k") if sb.startsWith("sb=")
+      } yield sb.stripPrefix("sb=").toInt + 1
+      sbDirs.maxOption.map { nb => cat.store.putAtomic(meta, nb.toString); nb }
     }
   }
 
@@ -120,25 +117,22 @@ object IncrementalNearDup {
   private def kbCol(nb: Int): org.apache.spark.sql.Column =
     col("k").cast("long") * nb + pmod(col("band"), lit(nb.toLong))
 
-  /** The signature index pruned to the probing batch's band buckets
-    * (literal predicate over the (k, sb) partition columns → directory
-    * pruning) and stripped of `excludeBatch`'s own partition (replay
-    * stability). `nb` MUST be the stored layout's bucket count (see
-    * [[storedSigBuckets]]). Package-visible so the spec can assert the
-    * pruned scan's metrics directly.
+  /** The signature index `index` pruned to the probing batch's band
+    * buckets (literal predicate over the (k, sb) partition columns →
+    * directory pruning). `nb` MUST be the stored layout's bucket count
+    * (see [[storedSigBuckets]]). Package-visible so the spec can assert
+    * the pruned scan's metrics directly.
     */
-  private[graft] def probeIndex(cat: Catalog, sigsTable: String,
-                                kbs: Seq[Long], excludeBatch: Long,
-                                nb: Int = SigBuckets): DataFrame =
-    cat.spark.read.parquet(s"${cat.warehouse}/$sigsTable")
-      .filter(col("__batch_id") =!= excludeBatch)
+  private[graft] def probeIndex(cat: Catalog, index: Catalog.Batches,
+                                kbs: Seq[Long], nb: Int = SigBuckets): DataFrame =
+    cat.readBatches(index)
       .filter((col("k").cast("long") * nb + col("sb").cast("long"))
         .isin(kbs: _*))
       .select(col("doc_id"), col("simhash"), col("k"), col("band"))
 
   /** The corpus as one frame (all committed batches). */
   def corpus(cat: Catalog, table: String): DataFrame =
-    cat.spark.read.parquet(s"${cat.warehouse}/$table").drop("__batch_id")
+    corpusWithBatchId(cat, table).drop(Catalog.BatchKey)
 
   /** [[corpus]] with the `__batch_id` partition column exposed — the
     * accessor per-batch consumers (o6's census) read through, so the
@@ -146,7 +140,7 @@ object IncrementalNearDup {
     * stays encapsulated here rather than hand-built at call sites.
     */
   def corpusWithBatchId(cat: Catalog, table: String): DataFrame =
-    cat.spark.read.parquet(s"${cat.warehouse}/$table")
+    cat.readBatches(cat.batches(table))
 
   /** Ingest `batch` (must carry `doc_id` and `text`): returns the
     * surviving (novel) rows after appending them and their signatures.
@@ -166,16 +160,16 @@ object IncrementalNearDup {
              batchId: Option[Long] = None,
              precomputedSigs: Option[DataFrame] = None): DataFrame = {
     val sigsTable = s"${table}_sigs"
-    IncrementalIngest.purgePartialBatches(cat, table)
-    IncrementalIngest.purgePartialBatches(cat, sigsTable)
+    val docs = cat.purgeBatches(table)
+    val sigs = cat.purgeBatches(sigsTable)
     // the index's on-disk bucket count, NOT the compile-time constant:
     // a pre-existing index keeps the layout it was written with
-    val nb = storedSigBuckets(cat, sigsTable)
-    // the id is fixed BEFORE the probe so the probe can exclude the
+    val recorded = storedSigBuckets(cat, sigsTable)
+    val nb = recorded.getOrElse(SigBuckets)
+    // the id is fixed BEFORE the probe so the probe can leave out the
     // batch's own signatures on replay; computing it consumes nothing —
     // an all-duplicate batch still writes no directory under this id
-    val id = batchId.getOrElse(
-      IncrementalIngest.batchIds(cat, table).foldLeft(-1L)(math.max) + 1)
+    val id = batchId.getOrElse(docs.newest + 1)
     // signatures computed ONCE per batch, durably: the within-batch
     // self-join, the index probe, and the signature append all read
     // this frame — recomputing the token explode three times would
@@ -189,14 +183,16 @@ object IncrementalNearDup {
           col("x.doc_id") < col("y.doc_id"))
       .filter(bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))) <= 3)
       .select(col("y.doc_id").as("doc_id"))
+    // every committed index batch but this one's own (a replay)
+    val index = sigs.copy(ids = sigs.ids.filterNot(_ == id))
     val idxDup =
       // committed batch dirs, not bare dir existence: a sigs dir
       // holding only the _SIG_BUCKETS meta (pre-seeded layout, or a
       // crash after meta before sigs) has nothing to probe
-      if (IncrementalIngest.batchIds(cat, sigsTable).nonEmpty) {
+      if (index.ids.nonEmpty) {
         val kbs = bb.select(kbCol(nb).as("kb")).distinct()
           .collect().map(_.getLong(0)).toSeq
-        val idx = probeIndex(cat, sigsTable, kbs, id, nb)
+        val idx = probeIndex(cat, index, kbs, nb)
           .select(col("doc_id").as("idx_id"), col("simhash").as("si"),
             col("k").as("ki"), col("band").as("bi"))
         bb.join(idx, col("k") === col("ki") && col("band") === col("bi"))
@@ -212,21 +208,19 @@ object IncrementalNearDup {
     try {
       if (kept.isEmpty) kept
       else {
-        cat.store.writeParquet(kept.write.mode("overwrite"),
-          s"${cat.warehouse}/$table/__batch_id=$id")
+        val written = cat.writeBatch(docs, id, kept.write)
         // meta BEFORE sigs: a crash in between leaves a recorded
         // layout with no rows (harmless); the reverse would leave an
         // un-annotated index a retuned constant could mis-probe. The
         // layout never changes once recorded, so it is written once.
-        val meta = sigBucketsFile(cat, sigsTable)
-        if (!cat.store.exists(meta)) cat.store.putAtomic(meta, nb.toString)
-        cat.store.writeParquet(
+        if (recorded.isEmpty)
+          cat.store.putAtomic(sigBucketsFile(cat, sigsTable), nb.toString)
+        cat.writeBatch(sigs, id,
           banded(bs.join(dropIds, Seq("doc_id"), "left_anti"))
             .withColumn("sb", pmod(col("band"), lit(nb.toLong)))
             .repartition(col("k"), col("sb"))
-            .write.mode("overwrite").partitionBy("k", "sb"),
-          s"${cat.warehouse}/$sigsTable/__batch_id=$id")
-        cat.spark.read.parquet(s"${cat.warehouse}/$table/__batch_id=$id")
+            .write.partitionBy("k", "sb"))
+        cat.readBatches(written.copy(ids = Seq(id))).drop(Catalog.BatchKey)
       }
     } finally { kept.unpersist(false); dropIds.unpersist(false); () }
   }

@@ -22,7 +22,8 @@ import graft.engine.Catalog
   * [[graft.streaming.RollupStream]] layout), and a directory counts as
   * committed only when its `_SUCCESS` marker exists — [[ingest]] and
   * [[refresh]] both start by deleting partial (marker-less) batch
-  * directories, so a crash DURING a fact write never leaks fragment
+  * directories ([[Catalog.purgeBatches]]) and read only the committed
+  * ones, so a crash DURING a fact write never leaks fragment
   * rows into a recompute, and an auto-allocated id never double-counts
   * a fragment next to its redelivery. A crash BETWEEN the fact write
   * and the rollup refresh then has two safe repairs: re-running
@@ -47,33 +48,31 @@ object IncrementalRollup {
     */
   def refresh(cat: Catalog, fact: String, rollup: String, partCol: String,
               touched: Seq[Any],
-              compute: DataFrame => DataFrame): DataFrame = {
-    recoverFact(cat, fact)
-    refreshRecovered(cat, fact, rollup, partCol, touched, compute)
-  }
+              compute: DataFrame => DataFrame): DataFrame =
+    refreshFrom(cat, fact, cat.purgeBatches(fact), rollup, partCol, touched, compute)
 
-  /** [[refresh]] body after recovery — split out so [[ingest]], which
-    * has just recovered and written its own committed batch, doesn't
-    * pay a second recovery LIST per call.
+  /** [[refresh]] over `facts`, the fact table's committed listing —
+    * split out so [[ingest]], which has just purged and written its own
+    * committed batch, doesn't list the table a second time.
     */
-  private def refreshRecovered(cat: Catalog, fact: String, rollup: String,
-                               partCol: String, touched: Seq[Any],
-                               compute: DataFrame => DataFrame): DataFrame = {
+  private def refreshFrom(cat: Catalog, fact: String, facts: Catalog.Batches,
+                          rollup: String, partCol: String, touched: Seq[Any],
+                          compute: DataFrame => DataFrame): DataFrame = {
     if (touched.nonEmpty) {
       // a purged lone partial leaves the root existing but empty —
       // surface the repair contract instead of Spark's cryptic
       // 'unable to infer schema'
-      require(IncrementalIngest.batchIds(cat, fact).nonEmpty,
+      require(facts.ids.nonEmpty,
         s"refresh($rollup): $fact has no committed batches — nothing " +
           "to recompute from; replay the ingest (the crashed batch " +
           "never committed)")
-      val factBack = cat.spark.read.parquet(s"${cat.warehouse}/$fact")
       // isin over literal partition values -> static partition pruning:
       // the recompute scan reads only the touched fact directories.
       // `__batch_id` is batch *placement*, not part of the fact's
       // column contract — shed it before compute sees the slice.
-      val slice = factBack.filter(col(partCol).isInCollection(touched))
-        .drop("__batch_id")
+      val slice = cat.readBatches(facts)
+        .filter(col(partCol).isInCollection(touched))
+        .drop(Catalog.BatchKey)
       val out = compute(slice)
       require(out.columns.contains(partCol),
         s"refresh($rollup): compute() must emit '$partCol' — a rollup " +
@@ -89,9 +88,7 @@ object IncrementalRollup {
     } else require(cat.exists(rollup),
       s"refresh($rollup): a rollup that does not exist yet needs a " +
         "non-empty batch (no schema to create an empty table from)")
-    val back = cat.spark.read.parquet(s"${cat.warehouse}/$rollup")
-    back.createOrReplaceTempView(rollup)
-    back
+    cat.reread(rollup)
   }
 
   /** Land `batch` under `fact/__batch_id=<id>/` (partitioned by
@@ -118,36 +115,24 @@ object IncrementalRollup {
     // lazy batch twice would be wasted work and, for a
     // non-deterministic source, could desync the touched set from the
     // rows actually written.
-    recoverFact(cat, fact)
+    val facts = cat.purgeBatches(fact)
     val b = batch.persist()
     try {
       val touched = b.select(partCol).distinct()
         .collect().map(_.get(0)).toSeq
-      if (touched.nonEmpty) {
-        // all partial dirs were just removed, so max-existing is a
-        // committed batch and the fresh id cannot collide with (or
-        // hide behind) a crashed fragment
-        val id = batchId.getOrElse(
-          IncrementalIngest.batchIds(cat, fact).foldLeft(-1L)(math.max) + 1)
-        // cluster fact rows by partition value so a batch writes ONE
-        // file per touched partition, not one per task per partition —
-        // the small-file debt Catalog.compact otherwise has to pay
-        // down. If one partition's batch volume ever exceeds a task,
-        // salt the repartition (files per partition > 1) rather than
-        // dropping it.
-        cat.store.writeParquet(b.repartition(col(partCol))
-          .write.mode("overwrite").partitionBy(partCol),
-          s"${cat.warehouse}/$fact/__batch_id=$id")
-      }
-      // recovery already ran at this ingest's entry, and the only new
-      // directory since is the committed batch just written
-      refreshRecovered(cat, fact, rollup, partCol, touched, compute)
+      // all partial dirs were just removed, so the newest id is a
+      // committed batch and a fresh id cannot collide with (or hide
+      // behind) a crashed fragment. Fact rows are clustered by
+      // partition value so a batch writes ONE file per touched
+      // partition, not one per task per partition — the small-file
+      // debt Catalog.compact otherwise has to pay down. If one
+      // partition's batch volume ever exceeds a task, salt the
+      // repartition (files per partition > 1) rather than dropping it.
+      val written =
+        if (touched.isEmpty) facts
+        else cat.writeBatch(facts, batchId.getOrElse(facts.newest + 1),
+          b.repartition(col(partCol)).write.partitionBy(partCol))
+      refreshFrom(cat, fact, written, rollup, partCol, touched, compute)
     } finally { b.unpersist(false); () }
   }
-
-  /** Crash recovery + layout guard, run at every public entry (one
-    * driver-side LIST) — see [[IncrementalIngest.purgePartialBatches]].
-    */
-  private def recoverFact(cat: Catalog, fact: String): Unit =
-    IncrementalIngest.purgePartialBatches(cat, fact)
 }

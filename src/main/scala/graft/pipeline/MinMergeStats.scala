@@ -66,30 +66,28 @@ import graft.engine.Catalog
   * (LSM-tree structure: O'Neil et al. 1996; the single-level +
   * idempotent-merge specialization is what min-merge affords.)
   *
-  * Crash contract (reader/writer split, round 17 — r16 advisor):
-  * READERS ([[view]]/[[exists]]) apply the contract LOGICALLY through
-  * [[effectiveDeltas]] — uncommitted deltas excluded, an unresolved
-  * `_REBUILD` marker applied as a roll-forward or roll-back READING,
-  * bucket-less shells skipped — and delete nothing, so a reader
-  * racing an in-process writer's in-flight fold can never sweep the
-  * writer's partial output. The marker reading is decided by whether
-  * the TARGET delta directory is COMMITTED, over the raw listing
-  * rather than the bucket-filtered one (round 18 — r17 advisor): a
-  * rebuild whose replacement is EMPTY (a takedown retiring every
-  * remaining row) commits a bucket-less target, and readers must
-  * roll FORWARD to the empty `_SCHEMA` frame exactly as the writer's
-  * [[repair]] will, not roll back and resurrect retired rows.
-  * WRITERS ([[fold]]/[[compact]]/[[rebuild]]/[[replaceAll]]) run
-  * [[repair]] at entry — physically resolving the marker and purging
-  * `_SUCCESS`-less or bucket-less delta directories (the
-  * [[IncrementalIngest.purgePartialBatches]] pattern) — under the
-  * Catalog's single-writer contract, same as every incremental
-  * writer. [[rebuild]] (takedown) is the one operation that must
-  * REMOVE rows, which append-only storage cannot express — it writes
-  * the rebuilt table as one fresh delta, then sweeps all older
-  * deltas under the `_REBUILD` marker that the next entry rolls
-  * forward (new delta committed: finish the sweep) or back (not
-  * committed: drop the partial delta, old state intact).
+  * Crash contract (reader/writer split): every call takes ONE
+  * snapshot of the deltas at entry and passes it down. READERS
+  * ([[view]]/[[exists]]) apply the contract LOGICALLY through
+  * [[effectiveDeltas]] — only committed deltas are listed
+  * ([[graft.engine.Catalog.batches]]), an unresolved `_REBUILD` marker
+  * is applied as a roll-forward or roll-back READING, bucket-less
+  * shells are skipped — and delete nothing, so a reader racing an
+  * in-process writer's in-flight fold can never sweep its output. The
+  * marker reading is decided by whether the TARGET delta is COMMITTED,
+  * bucket-less or not: a rebuild whose replacement is EMPTY (a takedown
+  * retiring every remaining row) commits a bucket-less target, and
+  * readers roll FORWARD to the empty `_SCHEMA` frame exactly as the
+  * writer's [[repair]] will. WRITERS ([[fold]]/[[compact]]/
+  * [[rebuild]]/[[replaceAll]]) run [[repair]] at entry — purging
+  * uncommitted deltas ([[graft.engine.Catalog.purgeBatches]]) and
+  * physically resolving the marker and the shells — under the
+  * Catalog's single-writer contract. [[rebuild]] (takedown) is the one
+  * operation that must REMOVE rows, which append-only storage cannot
+  * express — it writes the rebuilt table as one fresh delta, then
+  * sweeps all older deltas under the `_REBUILD` marker that the next
+  * entry rolls forward (new delta committed: finish the sweep) or back
+  * (not committed: drop the partial delta, old state intact).
   *
   * 100 TB port seam: every filesystem touch goes through the
   * Catalog's [[graft.engine.Store]] (Hadoop-`FileSystem`-shaped; this
@@ -126,20 +124,27 @@ object MinMergeStats {
   private def bucketCol(keys: Seq[String], n: Int): Column =
     pmod(xxhash64(keys.map(col): _*), lit(n.toLong)).cast("int")
 
-  private def committed(cat: Catalog, dir: String): Boolean =
-    cat.store.exists(s"$dir/_SUCCESS")
+  /** The bucket numbers present in delta directory `dir`. */
+  private def bucketsOf(cat: Catalog, dir: String): Seq[Int] =
+    cat.store.listDirs(dir).filter(_.startsWith("__bucket="))
+      .map(_.stripPrefix("__bucket=").toInt)
 
-  private def hasBuckets(cat: Catalog, dir: String): Boolean =
-    cat.store.listDirs(dir).exists(_.startsWith("__bucket="))
-
-  /** Paths of the table's `__delta=N` directories (any state). */
-  private def deltaDirs(cat: Catalog, table: String): Seq[String] = {
-    val r = root(cat, table)
-    cat.store.listDirs(r).filter(_.startsWith("__delta=")).map(n => s"$r/$n")
+  /** One snapshot of a table's effective deltas: the committed listing
+    * narrowed to the deltas that carry rows, and each one's buckets.
+    */
+  private final case class Deltas(listing: Catalog.Batches,
+                                  buckets: Map[Long, Seq[Int]]) {
+    def ids: Seq[Long] = listing.ids
+    def add(id: Long, bs: Seq[Int]): Deltas =
+      Deltas(listing + id, buckets + (id -> bs))
   }
 
-  private def deltaId(path: String): Long =
-    path.substring(path.lastIndexOf('/') + 1).stripPrefix("__delta=").toLong
+  /** `listing`'s deltas that carry at least one bucket. */
+  private def withBuckets(cat: Catalog, listing: Catalog.Batches): Deltas = {
+    val bs = listing.ids.map(id => id -> bucketsOf(cat, listing.dir(id)))
+      .filter(_._2.nonEmpty)
+    Deltas(listing.copy(ids = bs.map(_._1), partial = Nil), bs.toMap)
+  }
 
   private def rebuildMarker(cat: Catalog, table: String): String =
     s"${root(cat, table)}/_REBUILD"
@@ -162,71 +167,68 @@ object MinMergeStats {
         s"$table: _REBUILD marker holds '$raw', not a delta id — " +
           s"markers are written atomically so this is external " +
           s"corruption; inspect $marker against the newest " +
-          s"__delta= directory before removing the marker by hand")))
+          s"delta directory before removing the marker by hand")))
     }
   }
 
   /** The delta set a READER should see — the crash contract applied
     * logically, deleting nothing: uncommitted (`_SUCCESS`-less) deltas
-    * and bucket-less shells are skipped, and an unresolved `_REBUILD`
-    * marker is applied as a reading. The roll-forward/roll-back choice
-    * is decided by whether the TARGET delta is COMMITTED — checked
-    * over the raw directory listing, NOT the bucket-filtered list,
-    * because a rebuild to an EMPTY table (takedown of every remaining
-    * row) commits a bucket-less target: committed target → the
-    * roll-forward view (pre-rebuild deltas excluded — reading them
-    * would resurrect retired keys through the min; an all-swept empty
-    * target serves the `_SCHEMA` frame); target not committed → the
-    * roll-back view, the old state, with the partial target already
-    * excluded as uncommitted. This matches [[repair]]'s physical
-    * resolution bit for bit — the reader/writer agreement the r17
-    * advisor found broken for empty rebuild targets.
+    * are not listed, bucket-less shells are skipped, and an unresolved
+    * `_REBUILD` marker is applied as a reading. The
+    * roll-forward/roll-back choice is decided by whether the TARGET
+    * delta is COMMITTED — bucket-less or not, because a rebuild to an
+    * EMPTY table (takedown of every remaining row) commits a
+    * bucket-less target: committed target → the roll-forward view
+    * (pre-rebuild deltas excluded — reading them would resurrect
+    * retired keys through the min; an all-swept empty target serves
+    * the `_SCHEMA` frame); target not committed → the roll-back view,
+    * the old state, with the partial target already excluded as
+    * uncommitted. This matches [[repair]]'s physical resolution bit for
+    * bit.
     */
-  private def effectiveDeltas(cat: Catalog, table: String): Seq[String] = {
-    val raw = deltaDirs(cat, table)
-    val dirs = raw.filter(d => committed(cat, d) && hasBuckets(cat, d))
-    markerId(cat, table) match {
-      case Some(j) if raw.exists(d => deltaId(d) == j && committed(cat, d)) =>
-        dirs.filter(deltaId(_) >= j)
-      case _ => dirs
-    }
+  private def effectiveDeltas(cat: Catalog, table: String): Deltas = {
+    val all = cat.batches(table, Catalog.DeltaKey)
+    withBuckets(cat, all.copy(ids = resolved(all.ids, markerId(cat, table))))
   }
 
-  /** WRITER-ONLY crash repair (driver-side LISTs + deletes): finish or
-    * roll back an interrupted [[rebuild]] sweep, then purge
-    * `_SUCCESS`-less delta directories (crashed fold/compact writes —
-    * safe to drop because the writing call never returned, so an
-    * at-least-once upstream redelivers, and a dropped compact output
-    * only defers the merge) and committed bucket-less shells (a
-    * crashed empty-fold cleanup, a fully-swept compaction source, or
-    * a rolled-forward EMPTY rebuild target — they carry no rows).
-    * Runs only from [[fold]]/[[compact]]/[[rebuild]]/[[replaceAll]],
-    * which hold the Catalog's single-writer contract; readers never
-    * repair (r16 advisor — a reader racing an in-flight writer must
-    * not sweep its output).
+  /** The deltas live under `marker`: from its target on when the
+    * target committed (roll forward), all of them otherwise (roll back).
     */
-  private def repair(cat: Catalog, table: String): Unit = {
-    markerId(cat, table).foreach { j =>
-      val dirs = deltaDirs(cat, table)
-      val target = dirs.find(deltaId(_) == j)
-      if (target.exists(committed(cat, _)))
-        // roll forward: the rebuilt table committed; finish the sweep
-        dirs.filter(deltaId(_) < j).foreach(cat.store.delete)
-      else
-        // roll back: rebuild crashed mid-write; old state is intact
-        target.foreach(cat.store.delete)
-      cat.store.delete(rebuildMarker(cat, table))
-    }
-    deltaDirs(cat, table)
-      .filter(d => !committed(cat, d) || !hasBuckets(cat, d))
-      .foreach(cat.store.delete)
+  private def resolved(ids: Seq[Long], marker: Option[Long]): Seq[Long] =
+    marker.filter(ids.contains).fold(ids)(j => ids.filter(_ >= j))
+
+  /** WRITER-ONLY crash repair (driver-side LISTs + deletes): purge
+    * `_SUCCESS`-less delta directories ([[Catalog.purgeBatches]] —
+    * crashed fold/compact writes, safe to drop because the writing
+    * call never returned, so an at-least-once upstream redelivers, and
+    * a dropped compact output only defers the merge), finish or roll
+    * back an interrupted [[rebuild]] sweep, then drop committed
+    * bucket-less shells (a crashed empty-fold cleanup, a fully-swept
+    * compaction source, or a rolled-forward EMPTY rebuild target — they
+    * carry no rows). Runs only from
+    * [[fold]]/[[compact]]/[[rebuild]]/[[replaceAll]], which hold the
+    * Catalog's single-writer contract; readers never repair (a reader
+    * racing an in-flight writer must not sweep its output). Returns the
+    * snapshot the writer then works from.
+    */
+  private def repair(cat: Catalog, table: String): Deltas = {
+    // read before anything is deleted: a corrupt marker refuses first
+    val marker = markerId(cat, table)
+    val all = cat.purgeBatches(table, Catalog.DeltaKey)
+    // a rolled-back rebuild's partial target was purged above
+    val live = resolved(all.ids, marker)
+    all.ids.diff(live).foreach(id => cat.store.delete(all.dir(id)))
+    if (marker.nonEmpty) cat.store.delete(rebuildMarker(cat, table))
+    val d = withBuckets(cat, all.copy(ids = live))
+    live.diff(d.ids).foreach(id => cat.store.delete(all.dir(id)))
+    d
   }
 
   /** Whether `table` holds at least one effective delta. Pure read —
     * no repair, no deletion (see [[effectiveDeltas]]).
     */
   def exists(cat: Catalog, table: String): Boolean =
-    effectiveDeltas(cat, table).nonEmpty
+    effectiveDeltas(cat, table).ids.nonEmpty
 
   /** Whether `table` is SERVABLE by [[view]]: it holds effective
     * deltas, or a persisted `_SCHEMA` lets the zero-delta empty frame
@@ -235,8 +237,8 @@ object MinMergeStats {
     * a retire arriving at an all-empty table no-ops instead of
     * throwing (r17 advisor).
     */
-  private def servable(cat: Catalog, table: String): Boolean =
-    exists(cat, table) || cat.store.exists(schemaFile(cat, table))
+  private def servable(cat: Catalog, table: String, d: Deltas): Boolean =
+    d.ids.nonEmpty || cat.store.exists(schemaFile(cat, table))
 
   private def nBucketsOf(cat: Catalog, table: String, requested: Int): Int = {
     val f = s"${root(cat, table)}/_NBUCKETS"
@@ -278,10 +280,14 @@ object MinMergeStats {
     * into another warehouse's files.
     */
   def view(cat: Catalog, table: String, keys: Seq[String],
-           ord: Seq[String]): DataFrame = {
-    val dirs = effectiveDeltas(cat, table)
+           ord: Seq[String]): DataFrame =
+    viewOf(cat, table, effectiveDeltas(cat, table), keys, ord)
+
+  /** [[view]] over the snapshot `d`. */
+  private def viewOf(cat: Catalog, table: String, d: Deltas,
+                     keys: Seq[String], ord: Seq[String]): DataFrame = {
     val v =
-      if (dirs.isEmpty) {
+      if (d.ids.isEmpty) {
         // every fold of this table carried an empty batch (legitimate
         // on a duplicate-free corpus) — serve the empty registry in
         // the schema the first fold persisted, instead of throwing
@@ -294,13 +300,8 @@ object MinMergeStats {
           cat.spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           schema).select((keys ++ ord).map(col): _*)
       } else {
-        // basePath: the delta paths themselves look like partition
-        // directories (__delta=N), so a multi-root read must anchor
-        // partition inference at the table root
-        val back = cat.spark.read
-          .option("basePath", root(cat, table))
-          .parquet(dirs: _*)
-        if (dirs.size == 1) back.select((keys ++ ord).map(col): _*)
+        val back = cat.readBatches(d.listing)
+        if (d.ids.size == 1) back.select((keys ++ ord).map(col): _*)
         else reduced(back, keys, ord).select((keys ++ ord).map(col): _*)
       }
     v.createOrReplaceTempView(table)
@@ -330,12 +331,9 @@ object MinMergeStats {
     */
   def rawCandidates(cat: Catalog, table: String, keys: Seq[String],
                     ord: Seq[String]): DataFrame = {
-    val dirs = effectiveDeltas(cat, table)
-    if (dirs.isEmpty) view(cat, table, keys, ord)
-    else cat.spark.read
-      .option("basePath", root(cat, table))
-      .parquet(dirs: _*)
-      .select((keys ++ ord).map(col): _*)
+    val d = effectiveDeltas(cat, table)
+    if (d.ids.isEmpty) viewOf(cat, table, d, keys, ord)
+    else cat.readBatches(d.listing).select((keys ++ ord).map(col): _*)
   }
 
   /** Fold `batch` into `table`: per `keys` group the table's merged
@@ -358,7 +356,7 @@ object MinMergeStats {
            keys: Seq[String], ord: Seq[String],
            nBuckets: Int = DefaultBuckets,
            batchReduced: Boolean = false): DataFrame = {
-    repair(cat, table)
+    val before = repair(cat, table)
     val n = nBucketsOf(cat, table, nBuckets)
     val base =
       if (batchReduced) batch.select((keys ++ ord).map(col): _*)
@@ -368,54 +366,38 @@ object MinMergeStats {
     val sf = schemaFile(cat, table)
     if (!cat.store.exists(sf)) cat.store.putAtomic(sf, base.schema.json)
     val delta = base.withColumn("__bucket", bucketCol(keys, n))
-    val existing = deltaDirs(cat, table)
-    val id = existing.map(deltaId).foldLeft(-1L)(math.max) + 1
-    val dir = s"${root(cat, table)}/__delta=$id"
-    cat.store.writeParquet(delta.write.mode("overwrite").partitionBy("__bucket"), dir)
+    val id = before.listing.newest + 1
+    cat.writeBatch(before.listing, id, delta.write.partitionBy("__bucket"))
+    val bs = bucketsOf(cat, before.listing.dir(id))
     // an empty batch writes no bucket directories — drop the empty
     // delta so a no-op fold is a physical no-op (view then serves the
     // merged survivors, or the _SCHEMA empty frame if nothing exists)
-    if (!hasBuckets(cat, dir)) cat.store.delete(dir)
-    else {
-      val hot = bucketsOver(cat, table, AutoCompactDeltas)
-      if (hot.nonEmpty) compactBuckets(cat, table, hot, keys, ord)
-      // Backstop (round 18 — caught by the 50-fold soak spec): the
-      // per-bucket heat rule can NEVER fire for a sparse-batch stream
-      // (a batch with few keys touches few of the nBuckets buckets, so
-      // no bucket's delta count crosses the dial) — yet the TABLE's
-      // delta count still grows one per fold, and that count is the
-      // reader's listing + parquet-footer cost even when every key's
-      // merge width stays 1. Bound it with the same dial: once the
-      // effective delta count exceeds AutoCompactDeltas, merge every
-      // present bucket into one delta. In the dense regime this never
-      // fires (per-bucket count ≈ delta count, so the hot rule fires
-      // first and subsumes it); in the sparse regime the merged mass
-      // is small for the same reason the rule never fired — few keys.
-      // Checked only when the hot rule did NOT fire this fold (r18
-      // advisor): a mixed-regime fold tripping both rules would
-      // otherwise re-read and re-write the just-compacted hot delta
-      // in the same fold — double write amplification for nothing.
-      // The bound survives the skip: a fold that compacts hot buckets
-      // resets their heat, so the very next fold's hot rule is quiet
-      // and the backstop gets its check then.
-      else if (effectiveDeltas(cat, table).size > AutoCompactDeltas)
-        compactBuckets(cat, table, bucketsOver(cat, table, 0), keys, ord)
-    }
-    view(cat, table, keys, ord)
+    val after =
+      if (bs.isEmpty) { cat.store.delete(before.listing.dir(id)); before }
+      else {
+        val d = before.add(id, bs)
+        val hot = bucketsOver(d, AutoCompactDeltas)
+        if (hot.nonEmpty) compactBuckets(cat, d, hot, keys, ord)
+        // Backstop (caught by the 50-fold soak spec): the heat rule
+        // never fires for a sparse-batch stream (few keys per batch, so
+        // no bucket's delta count crosses the dial), yet the table's
+        // delta count — the reader's listing and footer cost — grows one
+        // per fold. Past the same dial, merge every present bucket; the
+        // merged mass is small for the same reason the rule never fired.
+        // Skipped when the hot rule fired this fold, which would
+        // otherwise rewrite its just-compacted delta again; that fold
+        // reset the heat, so the next fold's backstop check runs.
+        else if (d.ids.size > AutoCompactDeltas)
+          compactBuckets(cat, d, bucketsOver(d, 0), keys, ord)
+        else d
+      }
+    viewOf(cat, table, after, keys, ord)
   }
 
-  /** Buckets present in more than `limit` effective deltas. */
-  private def bucketsOver(cat: Catalog, table: String,
-                          limit: Int): Seq[Int] = {
-    val counts = scala.collection.mutable.Map.empty[Int, Int]
-    effectiveDeltas(cat, table).foreach { d =>
-      cat.store.listDirs(d).filter(_.startsWith("__bucket=")).foreach { b =>
-        val k = b.stripPrefix("__bucket=").toInt
-        counts(k) = counts.getOrElse(k, 0) + 1
-      }
-    }
-    counts.filter(_._2 > limit).keys.toSeq.sorted
-  }
+  /** Buckets present in more than `limit` of `d`'s deltas. */
+  private def bucketsOver(d: Deltas, limit: Int): Seq[Int] =
+    d.buckets.values.flatten.groupBy(identity)
+      .collect { case (k, hits) if hits.size > limit => k }.toSeq.sorted
 
   /** Merge every delta into one — call after an ingest drive so
     * query-time consumers read the single-delta plain-scan view.
@@ -424,43 +406,42 @@ object MinMergeStats {
     */
   def compact(cat: Catalog, table: String, keys: Seq[String],
               ord: Seq[String]): DataFrame = {
-    repair(cat, table)
-    if (deltaDirs(cat, table).size > 1)
-      compactBuckets(cat, table, bucketsOver(cat, table, 0), keys, ord)
-    view(cat, table, keys, ord)
+    val d = repair(cat, table)
+    viewOf(cat, table,
+      if (d.ids.size > 1) compactBuckets(cat, d, bucketsOver(d, 0), keys, ord) else d,
+      keys, ord)
   }
 
-  /** Merge `buckets` across all deltas into one new delta and drop
-    * their older per-bucket directories — the bucket-scoped rewrite.
-    * Crash-safe WITHOUT a swap: the merged delta commits first, and
-    * any old rows a crashed sweep leaves behind are duplicates the
-    * read-time min absorbs until the next compaction sweeps them.
-    * Writer-only (callers ran [[repair]], so every on-disk delta is
-    * committed and the marker is resolved).
+  /** Merge `buckets` across all of `d`'s deltas into one new delta and
+    * drop their older per-bucket directories — the bucket-scoped
+    * rewrite. Crash-safe WITHOUT a swap: the merged delta commits
+    * first, and any old rows a crashed sweep leaves behind are
+    * duplicates the read-time min absorbs until the next compaction
+    * sweeps them. Writer-only (`d` comes from [[repair]], so every
+    * on-disk delta is committed and the marker is resolved). Returns
+    * the snapshot after the merge.
     */
-  private def compactBuckets(cat: Catalog, table: String,
-                             buckets: Seq[Int], keys: Seq[String],
-                             ord: Seq[String]): Unit = {
-    if (buckets.isEmpty) return
-    val before = deltaDirs(cat, table).filter(committed(cat, _))
-    if (before.size <= 1) return
-    val id = before.map(deltaId).max + 1
-    val dir = s"${root(cat, table)}/__delta=$id"
-    // partition-pruned read of exactly the chosen buckets
-    val src = cat.spark.read
-      .option("basePath", root(cat, table))
-      .parquet(before: _*)
-      .filter(col("__bucket").isInCollection(buckets))
-    cat.store.writeParquet(reduced(src, keys, ord, Seq("__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket"), dir)
-    before.foreach { d =>
-      buckets.foreach { k =>
-        cat.store.delete(s"$d/__bucket=$k")
-      }
-      // a delta whose buckets are all swept carries no rows — drop it
-      if (!hasBuckets(cat, d)) cat.store.delete(d)
+  private def compactBuckets(cat: Catalog, d: Deltas, buckets: Seq[Int],
+                             keys: Seq[String], ord: Seq[String]): Deltas =
+    if (buckets.isEmpty || d.ids.size <= 1) d
+    else {
+      val id = d.listing.newest + 1
+      // partition-pruned read of exactly the chosen buckets
+      val src = cat.readBatches(d.listing)
+        .filter(col("__bucket").isInCollection(buckets))
+      cat.writeBatch(d.listing, id, reduced(src, keys, ord, Seq("__bucket"))
+        .write.partitionBy("__bucket"))
+      // every chosen bucket holds rows in some delta, so the merged
+      // delta holds exactly `buckets`
+      val left = d.ids.map { old =>
+        val (swept, rest) = d.buckets(old).partition(buckets.contains)
+        // a delta whose buckets are all swept carries no rows — drop it
+        if (rest.isEmpty) cat.store.delete(d.listing.dir(old))
+        else swept.foreach(k => cat.store.delete(s"${d.listing.dir(old)}/__bucket=$k"))
+        old -> rest
+      }.filter(_._2.nonEmpty)
+      Deltas(d.listing.copy(ids = left.map(_._1)), left.toMap).add(id, buckets)
     }
-  }
 
   /** Takedown — the min-merge complement of AdditiveStats.retire. A
     * min is not invertible (the table no longer holds the runner-up),
@@ -484,15 +465,15 @@ object MinMergeStats {
   def rebuild(cat: Catalog, table: String, survivors: DataFrame,
               retiredOwner: org.apache.spark.sql.Column,
               keys: Seq[String], ord: Seq[String]): DataFrame = {
-    repair(cat, table)
-    require(servable(cat, table),
+    val d = repair(cat, table)
+    require(servable(cat, table, d),
       s"rebuild: registry table '$table' does not exist")
     // materialize the merged reading ONCE: reg feeds three subtrees of
     // the rewrite plan (affected, keep, and the semi-join's right
     // side) — left lazy, a multi-delta merge aggregate would recompute
     // per subtree inside one job
     val reg = graft.queries.Scratch.materialize(cat.spark,
-      s"minmerge_rebuild_$table", view(cat, table, keys, ord))
+      s"minmerge_rebuild_$table", viewOf(cat, table, d, keys, ord))
     // NULL-evaluating predicates would otherwise drop a row from BOTH
     // sides (filter(p) and filter(!p) each exclude NULL) — a live key
     // silently deleted on takedown. Treat NULL as not-retired.
@@ -502,7 +483,7 @@ object MinMergeStats {
     val rebuilt = reduced(
       survivors.join(affected.select(keys.map(col): _*), keys, "left_semi"),
       keys, ord)
-    replaceAll(cat, table, keep.unionByName(rebuilt), keys, ord)
+    replaceFrom(cat, table, d, keep.unionByName(rebuilt), keys, ord)
   }
 
   /** Stage-write `next` as the table's new single delta under the
@@ -525,9 +506,16 @@ object MinMergeStats {
   private[pipeline] def replaceAll(cat: Catalog, table: String,
                                    next: DataFrame, keys: Seq[String],
                                    ord: Seq[String]): DataFrame = {
-    repair(cat, table)
-    require(servable(cat, table),
+    val d = repair(cat, table)
+    require(servable(cat, table, d),
       s"replaceAll: registry table '$table' does not exist")
+    replaceFrom(cat, table, d, next, keys, ord)
+  }
+
+  /** [[replaceAll]] from the writer's snapshot `d`. */
+  private def replaceFrom(cat: Catalog, table: String, d: Deltas,
+                          next: DataFrame, keys: Seq[String],
+                          ord: Seq[String]): DataFrame = {
     val n = nBucketsOf(cat, table, DefaultBuckets)
     val withB = next.select((keys ++ ord).map(col): _*)
       .withColumn("__bucket", bucketCol(keys, n))
@@ -538,12 +526,12 @@ object MinMergeStats {
     if (!cat.store.exists(sf))
       cat.store.putAtomic(sf,
         next.select((keys ++ ord).map(col): _*).schema.json)
-    val id = deltaDirs(cat, table).map(deltaId).foldLeft(-1L)(math.max) + 1
+    val id = d.listing.newest + 1
     cat.store.putAtomic(rebuildMarker(cat, table), id.toString)
-    cat.store.writeParquet(withB.write.mode("overwrite").partitionBy("__bucket"),
-      s"${root(cat, table)}/__delta=$id")
-    deltaDirs(cat, table).filter(deltaId(_) < id).foreach(cat.store.delete)
+    val target = cat.writeBatch(d.listing, id,
+      withB.write.partitionBy("__bucket"))
+    d.ids.foreach(old => cat.store.delete(d.listing.dir(old)))
     cat.store.delete(rebuildMarker(cat, table))
-    view(cat, table, keys, ord)
+    viewOf(cat, table, withBuckets(cat, target.copy(ids = Seq(id))), keys, ord)
   }
 }

@@ -14,15 +14,14 @@ import graft.pipeline.IncrementalRollup
   * nightly rebuild.
   *
   * Exactly-once without a transactional sink: `foreachBatch` replays a
-  * micro-batch whose commit never reached the checkpoint, so both
-  * writes must be replay-idempotent —
-  *  - the fact write lands under `__batch_id=<id>/` with
-  *    mode(overwrite): a replayed batch overwrites its own directory
-  *    with identical content (the IncrementalIngest pattern);
-  *  - the rollup refresh recomputes touched partitions from fact state,
-  *    which [[IncrementalRollup.refresh]] already makes idempotent.
-  * Crash between the two: the replay overwrites the fact dir and
-  * re-runs the refresh — converges to the same bytes.
+  * micro-batch whose commit never reached the checkpoint, and each
+  * micro-batch is one [[IncrementalRollup.ingest]] under its stream
+  * batch id — the fact write lands under `__batch_id=<id>/` with
+  * mode(overwrite), so a replay overwrites its own directory with
+  * identical content, and the rollup refresh recomputes touched
+  * partitions from fact state. Crash between the two: the replay
+  * overwrites the fact dir and re-runs the refresh — converges to the
+  * same bytes.
   */
 object RollupStream {
 
@@ -49,18 +48,8 @@ object RollupStream {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // single evaluation of the micro-batch (same rationale as
-        // IncrementalRollup.ingest): write and touched-set scan share
-        // the persisted blocks
-        val b = batch.persist()
-        try {
-          b.write.mode("overwrite").partitionBy("day")
-            .parquet(s"${cat.warehouse}/ev_fact/__batch_id=$batchId")
-          val touched = b.select(col("day")).distinct()
-            .collect().map(_.get(0)).toSeq
-          IncrementalRollup.refresh(cat, "ev_fact", "ev_rollup", "day",
-            touched, rollup): Unit
-        } finally { b.unpersist(false); () }
+        IncrementalRollup.ingest(cat, "ev_fact", "ev_rollup", "day", batch,
+          rollup, Some(batchId)): Unit
       }
       .start()
   }

@@ -257,6 +257,36 @@ class PipelineSpec extends SparkTestBase {
     assert(after.getDouble(1) == before.getDouble(1))
   }
 
+  test("compaction leaves a directory that cannot shrink untouched, and " +
+      "writes no marker when nothing needs a rewrite") {
+    import spark.implicits._
+    val fs = new FaultStore(Int.MaxValue)
+    val cat = new graft.engine.Catalog(spark,
+      graft.queries.Scratch.fresh(spark, "compact_noop_wh"), fs)
+    try {
+      val a = (1 to 20).map(i => (i.toLong, "A")).toDF("k", "s").coalesce(1)
+      val b = (21 to 60).map(i => (i.toLong, "B")).toDF("k", "s").repartition(3)
+      cat.save("flat", a)
+      cat.save("mixed", a.union(b), partitionBy = Seq("s"))
+      def files(rel: String): Set[String] =
+        Option(new java.io.File(s"${cat.warehouse}/$rel").listFiles())
+          .toSeq.flatten.map(_.getName).filter(_.endsWith(".parquet")).toSet
+      val (flat, leafA, leafB) = (files("flat"), files("mixed/s=A"), files("mixed/s=B"))
+      assert(flat.size == 1 && leafA.size == 1 && leafB.size == 3)
+      fs.arm()
+      cat.compact("flat")
+      assert(files("flat") == flat, "a one-file table was rewritten")
+      assert(!fs.trace.exists(Set("putAtomic", "writeParquet", "rename")),
+        s"no rewrite is needed, so nothing may be written: ${fs.trace}")
+      cat.compactPartitions("mixed")
+      assert(files("mixed/s=A") == leafA, "the already-compact leaf was rewritten")
+      val rewritten = files("mixed/s=B")
+      assert(rewritten.size == 1 && rewritten.intersect(leafB).isEmpty,
+        "the fragmented leaf must still be rewritten")
+      assert(cat.table("mixed").count() == 60)
+    } finally cat.close()
+  }
+
   test("warehouse is single-writer: a second Catalog on the same root refuses") {
     val wh = graft.queries.Scratch.fresh(spark, "lock_wh")
     val cat = new graft.engine.Catalog(spark, wh)
