@@ -545,21 +545,24 @@ final class Catalog private[graft] (val spark: SparkSession,
   }
 
   /** Rewrite each of `dirs` (directories of `name`'s table) into
-    * `ceil(bytes / targetBytes)` files, all under one marker. A
+    * `ceil(data bytes / targetBytes)` files, all under one marker. A
     * directory that cannot shrink — no `sortBy`, and already no more
-    * files than that — is left alone, and when none can, no marker is
-    * written either.
+    * files than that — is left alone, counted by one store listing with
+    * no Spark reader, and when none can, no marker is written either.
     */
   private def rewriteAll(name: String, dirs: Seq[String], targetBytes: Long,
                          sortBy: Seq[String]): Unit = {
     val keys = sortBy.map(org.apache.spark.sql.functions.col)
     val todo = dirs.flatMap { rel =>
       val dir = s"$warehouse/$rel"
-      val nFiles = math.max(1, math.ceil(store.size(dir).toDouble / targetBytes).toInt)
-      val df = spark.read.parquet(dir)
-      if (keys.isEmpty && df.inputFiles.length <= nFiles) None
-      else Some(rel -> (if (keys.isEmpty) df.repartition(nFiles)
-        else df.repartition(nFiles, keys: _*).sortWithinPartitions(keys: _*)))
+      val files = store.dataFiles(dir)
+      val nFiles = math.max(1, math.ceil(files.sum.toDouble / targetBytes).toInt)
+      if (keys.isEmpty && files.size <= nFiles) None
+      else {
+        val df = spark.read.parquet(dir)
+        Some(rel -> (if (keys.isEmpty) df.repartition(nFiles)
+          else df.repartition(nFiles, keys: _*).sortWithinPartitions(keys: _*)))
+      }
     }
     if (todo.nonEmpty) marked(name)(todo.foreach { case (rel, shaped) =>
       swap(rel)(tmp => store.writeParquet(shaped.write.mode("overwrite"), tmp))

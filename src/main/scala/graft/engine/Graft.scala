@@ -17,29 +17,35 @@ object Graft {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** THE session builder — every main (Run/Verify/Bench/Golden) goes
-    * through here so the config contract can't drift between entry
-    * points (a missing `nanosAsLong` in one main once broke only the
-    * paths that read `events`). `extraConf` is for per-caller additions
-    * (the `perfbench` harness points the local and warehouse dirs into
-    * its work dir). Shuffle partitions equal the thread count.
+  /** The session config on `local[cpus]`, declared once: [[session]]
+    * and the test session both build from it. Shuffle partitions equal
+    * the thread count, and `file:` goes through [[LocalFs]], so no
+    * warehouse write, commit or streaming checkpoint starts a process.
+    */
+  private[graft] def conf(cpus: String): Map[String, String] = Map(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> cpus,
+    "spark.sql.extensions" -> "graft.engine.GraftExtensions",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    // events.parquet carries TIMESTAMP(NANOS) which the vectorized reader
+    // rejects by default; read as long and convert in events().
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true") ++ LocalFs.conf
+
+  /** THE session builder — every main (Run/Verify/Bench/Golden) and the
+    * `perfbench` harness go through here, so the config contract
+    * ([[conf]]) can't drift between entry points (a missing
+    * `nanosAsLong` in one main once broke only the paths that read
+    * `events`). `extraConf` is for per-caller additions (the
+    * `perfbench` harness points the local and warehouse dirs into its
+    * work dir).
     */
   def session(appName: String = "graft", defaultCpus: String = "32",
               extraConf: Map[String, String] = Map.empty): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.engine.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) which the vectorized reader
-      // rejects by default; read as long and convert in events().
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val spark = extraConf.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
-      .getOrCreate()
+    val spark = SparkSession.builder().appName(appName)
+      .config(conf(cpus) ++ extraConf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -19,7 +19,8 @@ import org.apache.spark.sql.{DataFrameWriter, Row}
   *                       stores; creates missing parents, as `create`
   *                       does)
   *  - [[read]]         → `open(path)` + full read
-  *  - [[size]]         → `getContentSummary(path).getLength`
+  *  - [[dataFiles]]    → `listStatus(dir).filter(_.isFile)` lengths,
+  *                       hidden names skipped
   *  - [[writeParquet]] → Spark's committer writing under `path`
   *  - [[rename]]       → `rename(from, to)` — LOCAL ONLY, see below
   *
@@ -58,8 +59,11 @@ private[graft] trait Store {
   /** Full UTF-8 content of a small file, trimmed. */
   def read(path: String): String
 
-  /** Total bytes of the files under `path`. */
-  def size(path: String): Long
+  /** Byte lengths of `dir`'s immediate child data files — the files a
+    * Spark reader of `dir` reads, so not `_`/`.`-prefixed markers and
+    * checksums; empty when `dir` is absent.
+    */
+  def dataFiles(dir: String): Seq[Long]
 
   /** Run a configured Spark parquet write into `path`. */
   def writeParquet(writer: DataFrameWriter[Row], path: String): Unit
@@ -112,11 +116,10 @@ private[graft] object LocalStore extends Store {
   override def read(path: String): String =
     new String(Files.readAllBytes(Paths.get(path)), UTF_8).trim
 
-  override def size(path: String): Long = {
-    def du(f: File): Long =
-      if (f.isDirectory) children(f).map(du).sum else f.length()
-    du(new File(path))
-  }
+  override def dataFiles(dir: String): Seq[Long] =
+    children(new File(dir)).filter { f =>
+      f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith(".")
+    }.map(_.length())
 
   override def writeParquet(writer: DataFrameWriter[Row], path: String): Unit =
     writer.parquet(path)

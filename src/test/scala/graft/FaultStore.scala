@@ -44,7 +44,7 @@ final class FaultStore(k: Int, torn: Boolean = false) extends Store {
   override def putAtomic(path: String, content: String): Unit =
     call("putAtomic")(LocalStore.putAtomic(path, content))
   override def read(path: String): String = call("read")(LocalStore.read(path))
-  override def size(path: String): Long = call("size")(LocalStore.size(path))
+  override def dataFiles(dir: String): Seq[Long] = call("dataFiles")(LocalStore.dataFiles(dir))
   override def rename(from: String, to: String): Unit =
     call("rename")(LocalStore.rename(from, to))
 

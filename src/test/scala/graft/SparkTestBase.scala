@@ -2,22 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.engine.Graft
 
 /** One shared local session for all suites (SBT runs suites in one forked
-  * JVM; getOrCreate dedups).
+  * JVM; getOrCreate dedups), on `Graft.session`'s config at `local[4]`.
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.engine.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val s = SparkSession.builder().appName("graft-test")
+      .config(Graft.conf("4")).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -22,6 +22,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * file or directory beside a reader is a text round trip between
   * formats, and a `deleteOnExit` hook grows with every load in a
   * long-lived JVM.
+  *
+  * A session lint keeps one session config: under `src/main` only
+  * `Graft.session` calls `SparkSession.builder()`, and under `src/test`
+  * only `SparkTestSession`. A session built anywhere else misses
+  * `Graft.conf`, and with it the in-process `file:` filesystem, so its
+  * writes fall back to one `chmod` launch per file.
   */
 class StoreSeamSpec extends AnyFunSuite {
 
@@ -124,6 +130,53 @@ class StoreSeamSpec extends AnyFunSuite {
     val found = hits(scalaFiles(Pipeline, Streaming), batchLayout)
     assert(found.isEmpty,
       s"per-batch layout outside Catalog:\n  ${found.mkString("\n  ")}")
+  }
+
+  private val Builder = """\bSparkSession\s*\.\s*builder\b""".r
+  private val Scope = """\b(object|class|trait|def)\s+(\w+)""".r
+
+  /** The scope of each `SparkSession.builder` call in `lines`: the
+    * enclosing object or class, then `.method` inside a def.
+    */
+  private def builderScopes(lines: Seq[String]): Seq[String] = {
+    var owner = ""
+    var method = ""
+    lines.map(code).flatMap { c =>
+      Scope.findAllMatchIn(c).foreach { m =>
+        if (m.group(1) == "def") method = m.group(2)
+        else { owner = m.group(2); method = "" }
+      }
+      Builder.findFirstIn(c).map(_ => if (method.isEmpty) owner else s"$owner.$method")
+    }
+  }
+
+  test("the session lint names the scope of each builder call, not comments") {
+    // split, so that this file's own planted lines are no call
+    val b = "SparkSession." + "builder()"
+    assert(builderScopes(Seq(
+      "object Graft {",
+      "  private[graft] def conf(cpus: String): Map[String, String] = Map(",
+      "  def session(appName: String): SparkSession = {",
+      "    val cpus = sys.env.getOrElse(\"SPARK_GRAFT_CPUS\", \"32\")",
+      s"    val spark = $b.appName(appName)",
+      "object Bench {",
+      s"  // $b here would skip Graft.conf",
+      s"  /** or $b in a doc */",
+      "  def main(args: Array[String]): Unit = {",
+      s"    val spark = $b.master(\"local[4]\").getOrCreate()",
+      "object SparkTestSession {",
+      s"  lazy val spark: SparkSession = $b",
+      "final case class Launch(command: String)",
+      s"  val s = SparkSession . ${"builder"} ()")) ===
+      Seq("Graft.session", "Bench.main", "SparkTestSession", "Launch"))
+  }
+
+  test("only Graft.session builds a session under src/main, and only " +
+      "SparkTestSession under src/test") {
+    def scopes(root: String): Set[String] = scalaFiles(Paths.get(root)).flatMap(f =>
+      builderScopes(Files.readAllLines(f).asScala.toSeq).map(s => s"${f.getFileName}: $s")).toSet
+    assert(scopes("src/main/scala") === Set("Graft.scala: Graft.session"))
+    assert(scopes("src/test/scala") === Set("SparkTestBase.scala: SparkTestSession"))
   }
 
   test("the spill lint flags temp files, temp directories and exit hooks") {
