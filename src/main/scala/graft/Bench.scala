@@ -1,6 +1,7 @@
 package graft
 
 import scala.util.control.NonFatal
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions.{broadcast, col, count, lit, row_number, sum}
 import graft.engine.Graft
@@ -25,6 +26,11 @@ object Bench {
       .write.format("noop").mode("overwrite").save()
     obs.get("n").asInstanceOf[Long]
   }
+
+  /** Generated classes this JVM has compiled so far: one Janino compile
+    * per miss of Spark's codegen class cache (sized in `Graft.conf`).
+    */
+  def codegenCompiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -80,7 +86,13 @@ object Bench {
       // each row's median across runs.
       val nRuns = sys.env.get("SPARK_GRAFT_RUNS").flatMap(_.toIntOption)
         .getOrElse(3).max(1)
-      val runs = (1 to nRuns).map(_ => oneRun())
+      // each run's codegen compiles: 0 once the class cache holds
+      // every class the rows generate
+      val (runs, compiles) = (1 to nRuns).map { _ =>
+        val c0 = codegenCompiles
+        val r = oneRun()
+        r -> (codegenCompiles - c0)
+      }.unzip
       def median(xs: Seq[Double]): Double = {
         val s = xs.sorted
         if (s.size % 2 == 1) s(s.size / 2)
@@ -103,6 +115,7 @@ object Bench {
         .mkString("{", ",", "}")
       val line = s"""{"metric":"total","value":${median(runTotals)},"unit":"sec",""" +
         s""""runs":${runTotals.mkString("[", ",", "]")},""" +
+        s""""codegen_compiles":${compiles.mkString("[", ",", "]")},""" +
         s""""queries":$qs,"failed":$failed,"flaky":$flaky,""" +
         s""""ingest_artifacts":$ingest,"sf":${js(sfDir)}}"""
       println(line)

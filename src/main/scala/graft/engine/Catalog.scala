@@ -530,9 +530,11 @@ final class Catalog private[graft] (val spark: SparkSession,
     * the post-compaction directory (see the swap notes above; every
     * crash point is enumerated by CrashPointSpec). Content-invariance
     * is the caller-visible contract — [[Checksum]] before == after.
+    * Returns whether any directory was rewritten; only then is the
+    * table read back and its view re-registered.
     */
   def compact(name: String, targetBytes: Long = 128L * 1024 * 1024,
-              sortBy: Seq[String] = Nil): DataFrame = {
+              sortBy: Seq[String] = Nil): Boolean = {
     healIfMarked(name)
     // A partition-keyed table must be compacted per partition directory
     // (pass 'table/part=value' as the name): rewriting the root would
@@ -541,17 +543,18 @@ final class Catalog private[graft] (val spark: SparkSession,
     require(!store.listDirs(s"$warehouse/$name").exists(_.contains("=")),
       s"compact($name): partitioned table — compact one partition dir at a time")
     rewriteAll(name, Seq(name), targetBytes, sortBy)
-    reread(name)
   }
 
   /** Rewrite each of `dirs` (directories of `name`'s table) into
     * `ceil(data bytes / targetBytes)` files, all under one marker. A
     * directory that cannot shrink — no `sortBy`, and already no more
     * files than that — is left alone, counted by one store listing with
-    * no Spark reader, and when none can, no marker is written either.
+    * no Spark reader, and when none can, no marker is written either
+    * and the table is not read back. Returns whether anything was
+    * rewritten.
     */
   private def rewriteAll(name: String, dirs: Seq[String], targetBytes: Long,
-                         sortBy: Seq[String]): Unit = {
+                         sortBy: Seq[String]): Boolean = {
     val keys = sortBy.map(org.apache.spark.sql.functions.col)
     val todo = dirs.flatMap { rel =>
       val dir = s"$warehouse/$rel"
@@ -564,9 +567,13 @@ final class Catalog private[graft] (val spark: SparkSession,
           else df.repartition(nFiles, keys: _*).sortWithinPartitions(keys: _*)))
       }
     }
-    if (todo.nonEmpty) marked(name)(todo.foreach { case (rel, shaped) =>
-      swap(rel)(tmp => store.writeParquet(shaped.write.mode("overwrite"), tmp))
-    })
+    if (todo.nonEmpty) {
+      marked(name)(todo.foreach { case (rel, shaped) =>
+        swap(rel)(tmp => store.writeParquet(shaped.write.mode("overwrite"), tmp))
+      })
+      reread(name): Unit
+    }
+    todo.nonEmpty
   }
 
   /** Overwrite an EXISTING table with a frame that reads it — the
@@ -596,10 +603,11 @@ final class Catalog private[graft] (val spark: SparkSession,
     * byte-for-byte in structure. Each leaf uses [[compact]]'s
     * two-rename swap, all under one marker. At cluster scale the leaf
     * compactions are independent jobs; here they run sequentially,
-    * which is the same I/O either way on one machine.
+    * which is the same I/O either way on one machine. Returns whether
+    * any leaf was rewritten, as [[compact]] does.
     */
   def compactPartitions(name: String, targetBytes: Long = 128L * 1024 * 1024,
-                        sortBy: Seq[String] = Nil): DataFrame = {
+                        sortBy: Seq[String] = Nil): Boolean = {
     healIfMarked(name)
     require(store.exists(s"$warehouse/$name"), s"compactPartitions($name): no such table")
     def leaves(rel: String): Seq[String] = {
@@ -611,7 +619,6 @@ final class Catalog private[graft] (val spark: SparkSession,
     require(leafDirs != Seq(name),
       s"compactPartitions($name): not partitioned — use compact()")
     rewriteAll(name, leafDirs, targetBytes, sortBy)
-    reread(name)
   }
 
   /** Bucketed CTAS: co-locates rows by `bucketCols` so joins and

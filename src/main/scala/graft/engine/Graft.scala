@@ -21,10 +21,25 @@ object Graft {
     * and the test session both build from it. Shuffle partitions equal
     * the thread count, and `file:` goes through [[LocalFs]], so no
     * warehouse write, commit or streaming checkpoint starts a process.
+    *
+    * Spark caches each whole-stage and expression class it compiles in
+    * an LRU of `spark.sql.codegen.cache.maxEntries` classes, 100 by
+    * default. One warm pass of the raw-file build (golden chain, view,
+    * goldens check) needs 166–167 distinct classes and one incremental
+    * ingest pass about 196, so at 100 every lookup missed and every
+    * pass recompiled every class with Janino (15–35 ms each on the
+    * driver). The first Registry run at sf0.001 compiles about 2,400,
+    * so [[CodegenCacheEntries]] holds that working set too: repeated
+    * work in one JVM (benchmark passes, Bench runs, the test JVM)
+    * compiles each class once. The cache is static: Spark sizes it
+    * once per JVM from the active session's conf the first time code
+    * is generated, so a session built outside this map leaves it at
+    * 100.
     */
   private[graft] def conf(cpus: String): Map[String, String] = Map(
     "spark.master" -> s"local[$cpus]",
     "spark.sql.shuffle.partitions" -> cpus,
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
     "spark.sql.extensions" -> "graft.engine.GraftExtensions",
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
@@ -32,6 +47,9 @@ object Graft {
     // events.parquet carries TIMESTAMP(NANOS) which the vectorized reader
     // rejects by default; read as long and convert in events().
     "spark.sql.legacy.parquet.nanosAsLong" -> "true") ++ LocalFs.conf
+
+  /** Size of the JVM's generated-class cache (see [[conf]]). */
+  private[graft] val CodegenCacheEntries = 5000
 
   /** THE session builder — every main (Run/Verify/Bench/Golden) and the
     * `perfbench` harness go through here, so the config contract

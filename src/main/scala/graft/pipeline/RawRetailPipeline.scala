@@ -3,6 +3,7 @@ package graft.pipeline
 import java.util.concurrent.{ExecutionException, ExecutorCompletionService,
   ExecutorService, Executors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.engine.{Catalog, Functions, XlsSource, XlsxSource, XmlFxSource}
@@ -170,16 +171,30 @@ object RawRetailPipeline {
         cat.save("dim_calendar", calendar, sortBy = Seq("date"))
       },
       // dim_product (dimensions.py:146-171): deterministic mode of
-      // description + first/last seen, bad codes filtered.
+      // description + first/last seen, bad codes filtered. This is
+      // [[Functions.modeDet]] and a per-code min/max in one aggregation
+      // and one window pass, not a join of two aggregates: AQE plans the
+      // two branches' final stages in the order their shuffles finish,
+      // so their generated classes' stage ids (part of the codegen cache
+      // key) swapped from build to build and were compiled again.
       () => {
         val goodCode = $"stock_code".isNotNull &&
           $"stock_code" =!= "" && $"stock_code" =!= "nan"
-        val rawGood = cat.table("raw_retail_data").filter(goodCode)
-        val product = Functions.modeDet(rawGood, Seq("stock_code"),
-            "description", "description")
-          .join(rawGood.groupBy($"stock_code")
-            .agg(min(to_date($"invoice_ts")).as("first_seen"),
-              max(to_date($"invoice_ts")).as("last_seen")), Seq("stock_code"))
+        val byCode = Window.partitionBy($"stock_code")
+        // non-null descriptions first, then count DESC, value ASC; a
+        // code with no description at all has no mode and no row
+        val mode = byCode.orderBy($"description".isNull, $"n".desc,
+          $"description".asc)
+        val product = cat.table("raw_retail_data").filter(goodCode)
+          .groupBy($"stock_code", $"description")
+          .agg(count(lit(1)).as("n"), min(to_date($"invoice_ts")).as("lo"),
+            max(to_date($"invoice_ts")).as("hi"))
+          .select($"stock_code", $"description",
+            min($"lo").over(byCode).as("first_seen"),
+            max($"hi").over(byCode).as("last_seen"),
+            row_number().over(mode).as("rn"))
+          .filter($"rn" === 1 && $"description".isNotNull)
+          .drop("rn")
         cat.save("dim_product", product, sortBy = Seq("stock_code"))
       },
       // dim_customer (dimensions.py:192-216): coalesce(-1) surrogate,

@@ -213,9 +213,9 @@ class PipelineSpec extends SparkTestBase {
       "o_orderstatus" -> Checksum.Str, "o_orderdate" -> Checksum.TsDay)
     val before = Checksum.of(cat.table("frag"), cols).head()
     assert(parquetFiles().size == 40)
-    val compacted = cat.compact("frag", targetBytes = Long.MaxValue)
+    assert(cat.compact("frag", targetBytes = Long.MaxValue))
     assert(parquetFiles().size == 1, parquetFiles().map(_.getName))
-    val after = Checksum.of(compacted, cols).head()
+    val after = Checksum.of(cat.table("frag"), cols).head()
     assert(after.getLong(0) == before.getLong(0))
     assert(after.getDouble(1) == before.getDouble(1))
     // no temp/old dirs left behind by the atomic swap
@@ -247,12 +247,12 @@ class PipelineSpec extends SparkTestBase {
     val before = Checksum.of(cat.table("pfrag"), cols).head()
     // the root-level guard still refuses; the per-partition path works
     assertThrows[IllegalArgumentException] { cat.compact("pfrag") }
-    val compacted = cat.compactPartitions("pfrag", targetBytes = Long.MaxValue)
+    assert(cat.compactPartitions("pfrag", targetBytes = Long.MaxValue))
     assert(partDirs().map(_.getName).sorted == layoutBefore,
       "partition layout must survive compaction")
     assert(partDirs().forall(filesIn(_) == 1),
       partDirs().map(d => d.getName -> filesIn(d)))
-    val after = Checksum.of(compacted, cols).head()
+    val after = Checksum.of(cat.table("pfrag"), cols).head()
     assert(after.getLong(0) == before.getLong(0))
     assert(after.getDouble(1) == before.getDouble(1))
   }
@@ -274,11 +274,16 @@ class PipelineSpec extends SparkTestBase {
       val (flat, leafA, leafB) = (files("flat"), files("mixed/s=A"), files("mixed/s=B"))
       assert(flat.size == 1 && leafA.size == 1 && leafB.size == 3)
       fs.arm()
-      cat.compact("flat")
+      def view(name: String) = spark.sessionState.catalog.getRawTempView(name)
+      val flatView = view("flat")
+      assert(flatView.isDefined)
+      assert(!cat.compact("flat"))
       assert(files("flat") == flat, "a one-file table was rewritten")
+      assert(view("flat").exists(_ eq flatView.get),
+        "a compaction that rewrote nothing re-registered the table's view")
       assert(!fs.trace.exists(Set("putAtomic", "writeParquet", "rename")),
         s"no rewrite is needed, so nothing may be written: ${fs.trace}")
-      cat.compactPartitions("mixed")
+      assert(cat.compactPartitions("mixed"))
       assert(files("mixed/s=A") == leafA, "the already-compact leaf was rewritten")
       val rewritten = files("mixed/s=B")
       assert(rewritten.size == 1 && rewritten.intersect(leafB).isEmpty,
