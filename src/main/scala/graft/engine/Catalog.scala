@@ -371,15 +371,14 @@ final class Catalog private[graft] (val spark: SparkSession,
       .option("compression", codec)
     (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
       .parquet(s"$warehouse/$name")
-    // An unpartitioned table's schema is the frame's own: passing it
-    // skips the one-task footer-inference job a bare read launches per
-    // save, and the file source makes every field nullable either way
-    // (GoldenSpec checks the two schemas are equal). Partitioned
-    // layouts keep inference: it moves the partition columns to the
-    // end and types them from the directory names.
-    val read = spark.read
-    val back = (if (partitionBy.isEmpty) read.schema(df.schema) else read)
-      .parquet(s"$warehouse/$name")
+    // An unpartitioned table's schema is the frame's own, and the file
+    // source makes every field nullable either way (GoldenSpec checks
+    // the two schemas are equal). A partitioned layout takes its data
+    // schema from a footer ([[Parquet]]); path discovery moves the
+    // partition columns to the end and types them from the directory
+    // names.
+    val back = Parquet.read(spark, Seq(s"$warehouse/$name"),
+      schema = Option.when(partitionBy.isEmpty)(df.schema))
     back.createOrReplaceTempView(name)
     back
   }
@@ -417,7 +416,7 @@ final class Catalog private[graft] (val spark: SparkSession,
     val w = df.write.mode("append")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(s"$warehouse/$name")
-    val back = spark.read.parquet(s"$warehouse/$name")
+    val back = Parquet.read(spark, s"$warehouse/$name")
     back.createOrReplaceTempView(name)
     back
   }
@@ -506,7 +505,7 @@ final class Catalog private[graft] (val spark: SparkSession,
     * ('table/part=value') are not table names and stay unregistered.
     */
   private[graft] def reread(name: String): DataFrame = {
-    val back = spark.read.parquet(s"$warehouse/$name")
+    val back = Parquet.read(spark, s"$warehouse/$name")
     if (!name.exists(c => c == '/' || c == '=')) back.createOrReplaceTempView(name)
     back
   }
@@ -562,7 +561,7 @@ final class Catalog private[graft] (val spark: SparkSession,
       val nFiles = math.max(1, math.ceil(files.sum.toDouble / targetBytes).toInt)
       if (keys.isEmpty && files.size <= nFiles) None
       else {
-        val df = spark.read.parquet(dir)
+        val df = Parquet.read(spark, dir)
         Some(rel -> (if (keys.isEmpty) df.repartition(nFiles)
           else df.repartition(nFiles, keys: _*).sortWithinPartitions(keys: _*)))
       }
@@ -703,7 +702,7 @@ final class Catalog private[graft] (val spark: SparkSession,
     */
   def readBatches(b: Catalog.Batches): DataFrame = {
     require(b.ids.nonEmpty, s"${b.root}: no committed batches")
-    spark.read.option("basePath", b.root).parquet(b.ids.map(b.dir): _*)
+    Parquet.read(spark, b.ids.map(b.dir), basePath = Some(b.root))
   }
 
   // ---- versioned tables ----------------------------------------------
@@ -755,7 +754,7 @@ final class Catalog private[graft] (val spark: SparkSession,
 
   /** Read one pinned version — the frame a training run records. */
   def tableAt(name: String, version: Int): DataFrame =
-    spark.read.parquet(versionDir(name, version))
+    Parquet.read(spark, versionDir(name, version))
 
   /** Read the latest committed version. */
   def tableLatest(name: String): DataFrame =

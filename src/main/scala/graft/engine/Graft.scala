@@ -69,10 +69,10 @@ object Graft {
   }
 
   /** Load one named table from a scale-factor directory. The analyzed
-    * frame is memoized per (session, dir, name) — r19: every
-    * `spark.read.parquet` call re-lists the path and re-reads a
-    * parquet footer for schema inference, and a 179-query bench run
-    * re-created these frames hundreds of times per run. The inputs
+    * frame is memoized per (session, dir, name) — r19: every read
+    * re-lists the path and reads a parquet footer for its schema
+    * ([[Parquet]]), and a 179-query bench run re-created these frames
+    * hundreds of times per run. The inputs
     * are the read-only testdata dirs (immutable by contract), and a
     * DataFrame is an immutable plan, so reuse is free; the events
     * normalization rides inside the memoized frame.
@@ -82,8 +82,8 @@ object Graft {
       s"${spark.sparkContext.applicationId}:$dir:$name",
       _ =>
         if (name == "events") normalizeTs(
-          spark.read.parquet(s"$dir/events.parquet"))
-        else spark.read.parquet(s"$dir/$name.parquet"))
+          Parquet.read(spark, s"$dir/events.parquet"))
+        else Parquet.read(spark, s"$dir/$name.parquet"))
 
   private val tableMemo =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()

@@ -29,7 +29,7 @@ trait Source {
 
 /** S4: plain parquet table scan. */
 final case class ParquetSource(path: String) extends Source {
-  def load(spark: SparkSession): DataFrame = spark.read.parquet(path)
+  def load(spark: SparkSession): DataFrame = Parquet.read(spark, path)
 }
 
 /** S1/S3 staging analog: one CSV per "sheet", each tagged with

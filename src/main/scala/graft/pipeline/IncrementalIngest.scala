@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.engine.Catalog
+import graft.engine.{Catalog, Parquet}
 
 /** Append-only ingestion with content dedup — the daily-batch shape of
   * a 100 TB training-data pipeline: every arriving batch is
@@ -61,7 +61,7 @@ object IncrementalIngest {
     (rows.ids ++ rows.partial).maxOption
       .filterNot(last => rows.ids.contains(last) && digs.ids.contains(last))
       .fold((rows, digs)) { last =>
-        val lb = cat.spark.read.parquet(lastBatch(cat, table))
+        val lb = Parquet.read(cat.spark, lastBatch(cat, table))
         (if (rows.ids.contains(last)) rows
          else cat.writeBatch(rows, last, lb.drop("__fp").write),
          if (digs.ids.contains(last)) digs
@@ -93,7 +93,7 @@ object IncrementalIngest {
     // empty (self-invalidation). The `<table>_last_batch` artifact
     // doubles as the recovery source and the ingest audit trail.
     cat.store.writeParquet(fresh.write.mode("overwrite"), lastBatch(cat, table))
-    val freshBack = cat.spark.read.parquet(lastBatch(cat, table))
+    val freshBack = Parquet.read(cat.spark, lastBatch(cat, table))
     val rowsNow = cat.writeBatch(rows, batchId, freshBack.drop("__fp").write)
     val digsNow = cat.writeBatch(digs, batchId,
       freshBack.select(col("__fp").as("fp")).write)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.engine.{Functions, Graft}
+import graft.engine.{Functions, Graft, Parquet}
 
 /** Deduplication operators for a training-data pipeline over the
   * `documents` / `embeddings` tables: exact (hash-groupBy), n-gram
@@ -647,7 +647,7 @@ object DedupQueries {
     // while a returned frame is still being consumed
     val pairsDir = Scratch.fresh(s, "d2_verified_pairs")
     result.write.mode("overwrite").parquet(pairsDir)
-    s.read.parquet(pairsDir)
+    Parquet.read(s, pairsDir)
   }
 
   /** Exact left-fold dot product of two float-array columns (index

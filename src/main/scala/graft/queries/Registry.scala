@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.engine.Parquet
 
 /** One oracle-checked query: a Spark implementation plus (when the
   * semantics are ANSI-SQL-expressible) an equivalent DuckDB SQL string the
@@ -53,7 +54,7 @@ object Scratch {
   def materialize(s: SparkSession, name: String, df: DataFrame): DataFrame = {
     val path = fresh(s, name)
     df.write.mode("overwrite").parquet(path)
-    s.read.parquet(path)
+    Parquet.read(s, path)
   }
 
   /** [[materialize]] for a CPU-DENSE consumer, with task count sized
@@ -83,7 +84,7 @@ object Scratch {
         && !f.getName.startsWith(".")).map(_.length).sum
     val cap = s.sessionState.conf.numShufflePartitions.toLong
     val n = math.min(cap, (bytes + targetBytes - 1) / targetBytes).toInt
-    val back = s.read.parquet(path)
+    val back = Parquet.read(s, path)
     if (n <= 1) back else back.repartition(n)
   }
 
@@ -139,7 +140,7 @@ object Scratch {
       df.write.mode("overwrite").parquet(p)
       Option(memo.putIfAbsent(fullKey, p)).getOrElse(p)
     }
-    s.read.parquet(path)
+    Parquet.read(s, path)
   }
 }
 

@@ -966,11 +966,12 @@ object SimilarityQueries {
         "lands on both manual rungs (500 rows -> 4 planes == a5; 2000 " +
         "rows -> 6 planes == a5b), and the 10x census corpus lands on " +
         "9 planes (512 buckets) untouched by any code change. The " +
-        "corpus count is a metadata-only parquet footer read; planes " +
+        "corpus count is one count job over the memoized table that " +
+        "decodes no column (parquet row-group counts); planes " +
         "share a5's seed stream so every signature is a prefix " +
         "extension of a5's. Recall tradeoff is a5b's, documented there.",
       (s, d) => {
-        val n = s.read.parquet(s"$d/embeddings.parquet").count()
+        val n = t(s, d, "embeddings").count()
         val p = adaptivePlanes(n)
         val e = withBucketN(t(s, d, "embeddings"), "embedding", p)
           .withColumn("norm", sqrt(dot("embedding", "embedding")))
@@ -1132,7 +1133,7 @@ object SimilarityQueries {
     Q("a8c_hard_negatives_adaptive",
       "The a8 hard-negative mine with the plane count SIZED BY THE " +
         "CORPUS — a5c's integer ladder (smallest p in [4,12] with " +
-        "rows <= 60*2^p, a metadata-only footer count, DuckDB twin a " +
+        "rows <= 60*2^p, a count that decodes no column, DuckDB twin a " +
         "CASE over COUNT(*)) applied to the suite's steepest census " +
         "row. a8b proved the 6-plane dial halves a8's slope by hand; " +
         "this row turns the knob automatically, so per-bucket " +
@@ -1144,7 +1145,7 @@ object SimilarityQueries {
         "before the automatic ones take over. Recall tradeoff is " +
         "a8b's, documented there.",
       (s, d) => {
-        val n = s.read.parquet(s"$d/embeddings.parquet").count()
+        val n = t(s, d, "embeddings").count()
         val p = adaptivePlanes(n)
         val e = withBucketN(t(s, d, "embeddings"), "embedding", p)
           .withColumn("norm", sqrt(dot("embedding", "embedding")))

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.engine.Parquet
 
 /** Structured Streaming over the `documents` corpus — the streaming
   * twin of the batch curation pass (c1/c2): documents arrive as files
@@ -94,7 +95,7 @@ object CorpusStream {
       StructField("doc_id", LongType), StructField("lang", StringType),
       StructField("source", StringType), StructField("ws_tokens", LongType),
       StructField("n_chars", LongType)))
-    spark.read.schema(sinkSchema).parquet(sinkDir)
+    Parquet.read(spark, Seq(sinkDir), schema = Some(sinkSchema))
       .groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("n_docs_kept"),
         sum(col("ws_tokens")).as("tokens_kept"),

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.engine.Parquet
 
 /** Structured Streaming decontamination — d16's Bloom prefilter run at
   * INGEST time over arriving train documents, the measured form of the
@@ -90,7 +91,7 @@ object DecontamStream {
     val sinkSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("kind", LongType),
       StructField("dirty", LongType)))
-    val sunk = spark.read.schema(sinkSchema).parquet(sinkDir)
+    val sunk = Parquet.read(spark, Seq(sinkDir), schema = Some(sinkSchema))
     // the d16 differential over the union of batches
     val td = sunk.filter(col("kind") === 0L).select("doc_id").distinct()
     val bloomDocs = sunk.filter(col("kind") === 1L)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import graft.engine.Parquet
 
 /** Structured Streaming over the `events` table — the streaming twins of
   * the batch queries `e1_hourly_window` (tumbling window + watermark) and
@@ -47,8 +48,8 @@ object EventsStream {
 
   /** State-partition count sized to the replay's actual state volume —
     * the production "rate × horizon / target-partition-size" sizing
-    * computed from the bounded input: source rows (a metadata-only
-    * parquet footer count) × the operator's state expansion factor
+    * computed from the bounded input: source rows (one count job that
+    * decodes no column) × the operator's state expansion factor
     * (the sliding window holds window/slide = 4 entries per event),
     * targeting ~100k state rows per partition, clamped to [4, 32].
     * A fixed 8 was measured 2× WORSE than 32 for the sliding window
@@ -79,7 +80,7 @@ object EventsStream {
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def eventRows(spark: SparkSession, dir: String): Long =
     rowsMemo.computeIfAbsent(s"${spark.sparkContext.applicationId}:$dir",
-      _ => spark.read.parquet(s"$dir/events.parquet").count()).longValue()
+      _ => Parquet.read(spark, s"$dir/events.parquet").count()).longValue()
 
   /** Streaming source over the events parquet, normalized through the
     * SAME type-tolerant reader as the batch side
@@ -87,13 +88,14 @@ object EventsStream {
     * an explicit schema, and pinning one by hand is exactly how the two
     * sides drift (a producer switching TIMESTAMP(NANOS) → timestamp[us]
     * once turned every streamed event into 1970 while batch stayed
-    * right): instead we probe the footer via a batch read — driver-side,
-    * one footer, no data scan — and feed the probed schema to the
+    * right): instead we probe the schema of a batch read, whose data
+    * schema [[graft.engine.Parquet]] takes from the file's footer on
+    * the driver (no Spark job, no data scan), and feed it to the
     * stream, so whatever physical form `ts` takes, stream and batch see
     * the identical TimestampType column.
     */
   def source(spark: SparkSession, dir: String): DataFrame = {
-    val probed: StructType = spark.read.parquet(s"$dir/events.parquet").schema
+    val probed: StructType = Parquet.read(spark, s"$dir/events.parquet").schema
     graft.engine.Graft.normalizeTs(
       spark.readStream
         .schema(probed)
@@ -150,7 +152,7 @@ object EventsStream {
         .start()
       try q.awaitTermination() finally q.stop()
     }
-    spark.read.parquet(out).orderBy(col("hour_start"), col("event_type"))
+    Parquet.read(spark, out).orderBy(col("hour_start"), col("event_type"))
   }
 
   /** Stream-STATIC broadcast-join enrichment, the most common
@@ -201,7 +203,7 @@ object EventsStream {
         .start()
       try q.awaitTermination() finally q.stop()
     }
-    spark.read.parquet(out).orderBy(col("tier"))
+    Parquet.read(spark, out).orderBy(col("tier"))
   }
 
   /** STREAM-STREAM event-time interval join — signup→purchase
@@ -250,7 +252,7 @@ object EventsStream {
         .start()
       try q.awaitTermination() finally q.stop()
     }
-    spark.read.parquet(out)
+    Parquet.read(spark, out)
       .orderBy(col("user_id"), col("signup_ts"), col("purchase_ts"))
   }
 
@@ -293,7 +295,7 @@ object EventsStream {
         .start()
       try q.awaitTermination() finally q.stop()
     }
-    spark.read.parquet(out).orderBy(col("win_start"), col("event_type"))
+    Parquet.read(spark, out).orderBy(col("win_start"), col("event_type"))
   }
 
   /** Streaming exact dedup by event_id within the watermark horizon —
@@ -345,7 +347,7 @@ object EventsStream {
         .start()
       try q.awaitTermination() finally q.stop()
     }
-    spark.read.parquet(out).orderBy(col("event_id"))
+    Parquet.read(spark, out).orderBy(col("event_id"))
   }
 
   /** Watermarked stream-stream interval join (the enrichment shape):
@@ -569,7 +571,7 @@ object EventsStream {
         .start()
       try q.awaitTermination() finally q.stop()
     }
-    spark.read.parquet(out).groupBy(col("user_id"))
+    Parquet.read(spark, out).groupBy(col("user_id"))
       .agg(max(col("n_sessions")).as("n_sessions"),
         max(col("n_events")).as("n_events"),
         max(col("max_session_us")).as("max_session_us"))

@@ -23,6 +23,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * formats, and a `deleteOnExit` hook grows with every load in a
   * long-lived JVM.
   *
+  * A read lint keeps one way to open parquet: under `src/main`, only
+  * `engine/Parquet` calls `read.parquet(` or ends a `read` chain in
+  * `.parquet(`. A bare reader infers the data schema with a Spark job
+  * of its own; the helper reads one footer on the driver.
+  *
   * A session lint keeps one session config: under `src/main` only
   * `Graft.session` calls `SparkSession.builder()`, and under `src/test`
   * only `SparkTestSession`. A session built anywhere else misses
@@ -130,6 +135,56 @@ class StoreSeamSpec extends AnyFunSuite {
     val found = hits(scalaFiles(Pipeline, Streaming), batchLayout)
     assert(found.isEmpty,
       s"per-batch layout outside Catalog:\n  ${found.mkString("\n  ")}")
+  }
+
+  /** A `DataFrameReader` chain ending in `.parquet(`: `read`, then any
+    * `.method` or `.method(args)` links (args nested up to two levels),
+    * none of them a `write`, then closing parentheses.
+    */
+  private val ParquetRead = ("""\bread(?:\s*\.\s*(?!parquet\b|write)\w+\s*""" +
+    """(?:\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*\))?)*[\s)]*\.\s*parquet\s*\(""").r
+
+  /** Each parquet read chain in `lines`, comments dropped, by the line
+    * it starts on. A chain may span lines.
+    */
+  private def parquetReads(lines: Seq[String]): Seq[(Int, String)] = {
+    val text = lines.map(code).mkString("\n")
+    ParquetRead.findAllMatchIn(text).map { m =>
+      (text.substring(0, m.start).count(_ == '\n') + 1, m.matched.replaceAll("\\s+", " "))
+    }.toSeq
+  }
+
+  test("the read lint flags reader chains ending in .parquet(, not writes, " +
+      "streams, comments or the helper") {
+    Seq(Seq("spark.read.parquet(path)"),
+      Seq("val lb = cat.spark.read.parquet(lastBatch(cat, table))"),
+      Seq("spark.read.schema(sinkSchema).parquet(sinkDir)"),
+      Seq("val back = (if (flat) read.schema(df.schema) else read)",
+        "  .parquet(s\"$warehouse/$name\")"),
+      Seq("spark.read", "  .option(\"basePath\", b.root)", "  .parquet(b.ids.map(b.dir): _*)"),
+      Seq("s.read.option(\"mergeSchema\", f(g(1))).parquet(p)"))
+      .foreach(ls => assert(parquetReads(ls).nonEmpty, ls))
+    Seq(Seq("df.write.mode(\"overwrite\").parquet(path)"),
+      Seq("spark.readStream.schema(probed)", "  .parquet(s\"$dir/events.parque[t]\")"),
+      Seq("Parquet.read(spark, path)"),
+      Seq("Parquet.read(spark, Seq(sinkDir), schema = Some(sinkSchema))"),
+      Seq("// spark.read.parquet(p) in a comment"),
+      Seq("  * then `spark.read.parquet(dir)` in a doc"),
+      Seq("if (scala.util.Try(store.read(lockFile)).toOption.contains(t))"),
+      Seq("val a = spark.read.format(\"orc\").load(p)", "b.write.parquet(q)"),
+      Seq("spark.read.format(\"orc\").load(p)", "  .write.parquet(q)"))
+      .foreach(ls => assert(parquetReads(ls).isEmpty, ls))
+    assert(parquetReads(Seq("x", "  spark.read", "    .parquet(p)")).map(_._1) === Seq(2))
+  }
+
+  test("only engine/Parquet opens parquet with a DataFrameReader under src/main") {
+    val helper = Paths.get("src/main/scala/graft/engine/Parquet.scala")
+    assert(Files.isRegularFile(helper), s"run from the repository root: $helper")
+    val found = scalaFiles(Paths.get("src/main/scala")).filterNot(_ == helper).flatMap { f =>
+      parquetReads(Files.readAllLines(f).asScala.toSeq).map { case (n, m) => s"$f:$n: $m" }
+    }
+    assert(found.isEmpty,
+      s"parquet reads outside engine/Parquet:\n  ${found.mkString("\n  ")}")
   }
 
   private val Builder = """\bSparkSession\s*\.\s*builder\b""".r
