@@ -20,7 +20,8 @@ import graft.pipeline.{Invariants, RawRetailPipeline, RetailPipeline}
   * Without `--rawdir`, the TPC-H-testdata [[RetailPipeline]] runs over
   * a positional `<sfDir>` instead (the oracle-gated operator chain —
   * same table names, same invariants). Either way: build the staged
-  * star schema, log per-stage row counts, print the catalog
+  * star schema, print each table's wait on its dependencies and its
+  * run time, and the build's critical path, print the catalog
   * (inspect_db analog), show a monthly-view sample
   * (analyze_monthly_sales analog), and abort with a nonzero exit if
   * any invariant is violated (run.py:85-87).
@@ -61,16 +62,19 @@ object Run {
                          a: Args, warehouse: String): Int = {
     if (a.rebuild) new graft.engine.Catalog(spark, warehouse).dropWarehouse()
 
-    val cat = a.rawdir match {
+    val (cat, report) = a.rawdir match {
       case Some(rd) =>
-        RawRetailPipeline.build(spark,
+        RawRetailPipeline.buildWithReport(spark,
           s"$rd/online_retail_II.xlsx", s"$rd/gbp.xml",
           s"$rd/ukbankholidays-jul19.xls", warehouse)
       case None =>
         val sfDir = a.positional.headOption
           .getOrElse("/root/testdata/sf0.001")
-        RetailPipeline.build(spark, sfDir, warehouse)
+        RetailPipeline.buildWithReport(spark, sfDir, warehouse)
     }
+
+    println("== build ==")
+    report.lines.foreach(println)
 
     println("== catalog ==")
     cat.tables().foreach { t =>

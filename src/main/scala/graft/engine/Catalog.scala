@@ -354,21 +354,18 @@ final class Catalog private[graft] (val spark: SparkSession,
   def checksum(name: String, cols: Seq[(String, Checksum.Kind)]): DataFrame =
     Checksum.of(table(name), cols)
 
-  /** S6/M2: CTAS — materialize and (re-)register. `sortBy` reproduces
-    * the reference's ORDER BY-in-CTAS clustering (O1: layout, not
-    * semantics); `partitionBy` and `codec` are the 100 TB knobs the
-    * reference lacks — zstd trades ~2x smaller cold storage (and scan
-    * I/O) for slightly more write CPU than the snappy default; sorted
-    * clustering additionally tightens parquet min/max row-group stats
-    * for scan skipping.
+  /** S6/M2: CTAS — materialize and (re-)register, snappy-compressed.
+    * `sortBy` reproduces the reference's ORDER BY-in-CTAS clustering
+    * (O1: layout, not semantics) and tightens parquet min/max row-group
+    * stats for scan skipping; `partitionBy` is the 100 TB knob the
+    * reference lacks.
     */
   def save(name: String, df: DataFrame, sortBy: Seq[String] = Nil,
-           partitionBy: Seq[String] = Nil,
-           codec: String = "snappy"): DataFrame = {
+           partitionBy: Seq[String] = Nil): DataFrame = {
     val clustered = if (sortBy.nonEmpty) df.sortWithinPartitions(
       sortBy.map(org.apache.spark.sql.functions.col): _*) else df
     val writer = clustered.write.mode("overwrite")
-      .option("compression", codec)
+      .option("compression", "snappy")
     (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
       .parquet(s"$warehouse/$name")
     // An unpartitioned table's schema is the frame's own, and the file
@@ -382,27 +379,6 @@ final class Catalog private[graft] (val spark: SparkSession,
     back.createOrReplaceTempView(name)
     back
   }
-
-  /** Columnar-format interchange. The warehouse itself is
-    * parquet-native by design — ONE storage format keeps every read
-    * path (table, compact, checksum, incremental writers) on the same
-    * code — so foreign-format data crosses the boundary through
-    * explicit import/export rather than a mixed-format warehouse.
-    * [[importTable]] stages any `spark.read`-able columnar format
-    * (orc, avro where available, parquet from elsewhere) as a
-    * first-class warehouse table; [[exportTable]] writes one for
-    * external consumers. Round-trip fidelity is checksum-proven
-    * (PipelineSpec): ORC⇄parquet carries the full type lattice this
-    * engine uses, so import(export(t)) == t bit-for-bit.
-    */
-  def importTable(name: String, path: String, format: String): DataFrame =
-    save(name, spark.read.format(format).load(path))
-
-  /** See [[importTable]]. */
-  def exportTable(name: String, path: String, format: String,
-                  codec: String = "snappy"): Unit =
-    table(name).write.mode("overwrite")
-      .option("compression", codec).format(format).save(path)
 
   /** Append rows to an existing table (creating it if absent) and
     * re-register — the incremental-ingest primitive `save`'s overwrite

@@ -1,6 +1,7 @@
 package graft.engine
 
 import java.io.FileNotFoundException
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
@@ -52,12 +53,23 @@ object Parquet {
     */
   private def dataSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] = {
     val conf = spark.sessionState.newHadoopConf()
-    paths.iterator.flatMap(p => firstDataFile(new Path(p), conf)).nextOption().map { f =>
+    paths.iterator.flatMap(p => dataFiles(new Path(p), conf)).nextOption().map { f =>
       val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
         ParquetMetadataConverter.SKIP_ROW_GROUPS)
       ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
         new ParquetToSparkSchemaConverter(spark.sessionState.conf))
     }
+  }
+
+  /** The rows of every data file under `path`, summed from their
+    * footers' row groups on the driver: a committed table's row count
+    * with no Spark job.
+    */
+  def rowCount(spark: SparkSession, path: String): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    dataFiles(new Path(path), conf).flatMap(f => ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.NO_FILTER)
+      .getBlocks.asScala.map(_.getRowCount)).sum
   }
 
   /** Names Spark's file index skips: `_`/`.` files and directories,
@@ -67,20 +79,21 @@ object Parquet {
     (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
       name.endsWith("._COPYING_")
 
-  /** `path` itself when it is a file; else, in name order, the first
-    * data file of a directory, or the first found under its
-    * subdirectories (partition directories).
+  /** `path` itself when it is a file; else, in name order, the data
+    * files of a directory, then those under its subdirectories
+    * (partition directories). Lazy: the first file lists one directory
+    * per level.
     */
-  private def firstDataFile(path: Path, conf: Configuration): Option[FileStatus] = {
+  private def dataFiles(path: Path, conf: Configuration): Iterator[FileStatus] = {
     val fs = path.getFileSystem(conf)
-    def first(st: FileStatus): Option[FileStatus] =
-      if (st.isFile) Some(st)
+    def under(st: FileStatus): Iterator[FileStatus] =
+      if (st.isFile) Iterator(st)
       else {
         val (files, dirs) = fs.listStatus(st.getPath)
           .filterNot(c => hidden(c.getPath.getName)).sortBy(_.getPath.getName)
           .partition(_.isFile)
-        files.headOption.orElse(dirs.iterator.flatMap(first).nextOption())
+        files.iterator ++ dirs.iterator.flatMap(under)
       }
-    try first(fs.getFileStatus(path)) catch { case _: FileNotFoundException => None }
+    try under(fs.getFileStatus(path)) catch { case _: FileNotFoundException => Iterator.empty }
   }
 }

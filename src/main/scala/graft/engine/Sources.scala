@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-/** Pluggable raw-data sources (SURVEY.md §2.1 S1-S5).
+/* The raw-data sources (SURVEY.md §2.1 S1-S3).
   *
   * The reference ingests three raw formats with driver-side Python
   * (multi-sheet Excel via pandas, ECB SDMX XML via ElementTree, legacy
@@ -17,61 +17,27 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *  - [[XlsSource]] (OLE2 container + BIFF8 records) and the SDMX XML
   *    path via scala-xml, both parsed on the driver: the files are
   *    tiny in the reference (about 100 holidays, 739 observations).
-  * [[MultiSheetCsvSource]] remains the CSV staging path for
-  * pre-extracted sheets.
+  * Each `load` may parse on the driver; everything after it runs in
+  * Spark. Tables the engine wrote are read back through
+  * [[Parquet.read]] and [[Graft.table]].
   */
-trait Source {
-  /** Load this source as a DataFrame (a driver-side parse is allowed
-    * for small files; everything is routed through Spark after it).
-    */
-  def load(spark: SparkSession): DataFrame
-}
-
-/** S4: plain parquet table scan. */
-final case class ParquetSource(path: String) extends Source {
-  def load(spark: SparkSession): DataFrame = Parquet.read(spark, path)
-}
-
-/** S1/S3 staging analog: one CSV per "sheet", each tagged with
-  * `source_sheet` and vertically unioned (retail_data.py:27-38 semantics
-  * incl. the U2 union and the P2 trim contract — string columns trimmed,
-  * NULLs preserved rather than the pandas `'nan'` artifact; the engine
-  * normalizes to NULL and documents it, SURVEY.md §7.4).
-  */
-final case class MultiSheetCsvSource(
-    sheets: Seq[(String, String)],
-    schema: StructType) extends Source {
-  def load(spark: SparkSession): DataFrame = {
-    val frames = sheets.map { case (sheetName, path) =>
-      val raw = spark.read.schema(schema).option("header", "true").csv(path)
-      val trimmed = raw.schema.fields.foldLeft(raw) { (df, f) =>
-        if (f.dataType == org.apache.spark.sql.types.StringType)
-          df.withColumn(f.name, trim(col(f.name)))
-        else df
-      }
-      trimmed.withColumn("source_sheet", lit(sheetName))
-    }
-    frames.reduce(_ unionByName _)
-  }
-}
 
 /** S2: ECB-SDMX-shaped XML FX rates, parsed driver-side with scala-xml.
   *
   * Mirrors `/root/reference/src/ingestion/fx_data.py:29-92` semantics:
   * requires a DataSet with at least one Series, asserts the series
-  * currency attribute, skips individually-malformed observations with a
-  * warning, and fails if no valid rate survives. Output: (date, rate).
+  * currency attribute is GBP, skips individually-malformed observations
+  * with a warning, and fails if no valid rate survives. Output: (date,
+  * rate).
   */
-final case class XmlFxSource(path: String, expectCurrency: String = "GBP")
-    extends Source {
+final case class XmlFxSource(path: String) {
   def load(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val root = scala.xml.XML.loadFile(path)
     val series = root \\ "Series"
     require(series.nonEmpty, s"no Series elements in $path")
     val cur = (series.head \@ "CURRENCY")
-    require(cur == expectCurrency,
-      s"expected CURRENCY=$expectCurrency, got $cur")
+    require(cur == "GBP", s"expected CURRENCY=GBP, got $cur")
     val obs = series.head \\ "Obs"
     require(obs.nonEmpty, s"no observations in $path")
     val parsed = obs.flatMap { o =>
@@ -89,44 +55,6 @@ final case class XmlFxSource(path: String, expectCurrency: String = "GBP")
     parsed.toDF("date", "rate")
   }
 }
-
-/** S5: an in-memory frame addressed as a table (DuckDB replacement-scan
-  * analog — SQL referencing a live driver variable).
-  */
-final case class InMemorySource(df: DataFrame, name: String) extends Source {
-  def load(spark: SparkSession): DataFrame = {
-    df.createOrReplaceTempView(name)
-    spark.table(name)
-  }
-}
-
-/** JSONL (newline-delimited JSON) document source — the raw format web
-  * corpora actually arrive in. Reads with an explicit schema (inference
-  * is a full extra pass at 100 TB) in PERMISSIVE mode: malformed lines
-  * don't kill the 10-hour ingest job; they land in the
-  * `_corrupt_record` column for quarantine, mirroring the reference's
-  * skip-and-warn XML semantics (fx_data.py:85-87) at file scale.
-  * `dropCorrupt` routes them out (count them first for observability).
-  */
-final case class JsonlSource(
-    path: String,
-    schema: StructType,
-    dropCorrupt: Boolean = false) extends Source {
-  def load(spark: SparkSession): DataFrame = {
-    val withCorrupt = StructType(schema.fields :+
-      org.apache.spark.sql.types.StructField("_corrupt_record",
-        org.apache.spark.sql.types.StringType))
-    val raw = spark.read
-      .schema(withCorrupt)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
-    if (dropCorrupt) raw.filter(col("_corrupt_record").isNull)
-      .drop("_corrupt_record")
-    else raw
-  }
-}
-
 
 /** S1 (byte-level): genuine multi-sheet `.xlsx` ingestion with NO
   * external codec. An .xlsx file is a zip of OOXML XML parts, read here
@@ -164,7 +92,7 @@ final case class JsonlSource(
   * the format has time tokens), using the 1900 date system including
   * its fictitious 1900-02-29 (serials >= 61 shift by one day).
   */
-final case class XlsxSource(path: String, schema: StructType) extends Source {
+final case class XlsxSource(path: String, schema: StructType) {
 
   def load(spark: SparkSession): DataFrame = {
     val zip = new java.util.zip.ZipFile(path)

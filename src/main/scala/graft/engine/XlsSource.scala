@@ -138,7 +138,7 @@ private[engine] object Ole2 {
   * trim, NULL for missing, schema cast by name — and date-styled
   * serials decode to ISO via the shared 1900-system conversion.
   */
-final case class XlsSource(path: String, schema: StructType) extends Source {
+final case class XlsSource(path: String, schema: StructType) {
 
   // record ids
   private val RBof = 0x0809

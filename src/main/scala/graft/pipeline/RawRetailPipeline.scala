@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import java.util.concurrent.{ExecutionException, ExecutorCompletionService,
-  ExecutorService, Executors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -59,64 +57,58 @@ object RawRetailPipeline {
     * fct_sales_eur, agg_country_day and the v_monthly_sales_summary
     * view registered.
     *
-    * The tables form a small DAG, built one dependency level at a time;
-    * the tables inside a level do not read each other and are built
-    * concurrently, so one driver keeps several independent Spark jobs
-    * in flight instead of running them one after another:
-    *  1. raw_retail_data (xlsx scan, one task per sheet), raw_fx_rates
-    *     and raw_uk_holidays (one Spark job each);
-    *  2. dim_calendar (after its bounds query), dim_product,
-    *     dim_customer;
-    *  3. fct_sales, and daily_fx_rates over the fct plan's date range;
-    *  4. fct_sales_eur; 5. agg_country_day; then the view.
-    * A failed build closes its catalog (releasing the warehouse claim)
-    * and rethrows the first failure.
+    * The tables are a [[Chain]]: each is written as soon as the tables
+    * it reads have committed, so one driver keeps several independent
+    * Spark jobs in flight. A failed build closes its catalog (releasing
+    * the warehouse claim) and rethrows the first failure.
     */
   def build(spark: SparkSession, xlsxPath: String, fxXmlPath: String,
-            holidaysXlsPath: String, warehouse: String): Catalog = {
+            holidaysXlsPath: String, warehouse: String): Catalog =
+    buildWithReport(spark, xlsxPath, fxXmlPath, holidaysXlsPath, warehouse)._1
+
+  /** [[build]], with each table's span and the build's critical path. */
+  private[graft] def buildWithReport(spark: SparkSession, xlsxPath: String,
+      fxXmlPath: String, holidaysXlsPath: String,
+      warehouse: String): (Catalog, Chain.Report) = {
     val cat = new Catalog(spark, warehouse)
-    val pool = Executors.newFixedThreadPool(LevelWidth)
-    try {
-      buildTables(spark, cat, pool, xlsxPath, fxXmlPath, holidaysXlsPath)
-      cat
-    } catch {
-      case t: Throwable =>
-        try cat.close() catch { case c: Throwable => t.addSuppressed(c) }
-        throw t
-    } finally pool.shutdownNow(): Unit
+    val report = chain(spark, xlsxPath, fxXmlPath, holidaysXlsPath).run(cat)
+    // the reference's sql/views/monthly_sales_summary.sql:5-41
+    cat.createView("v_monthly_sales_summary", monthlyView(spark, cat))
+    (cat, report)
   }
 
-  /** The widest dependency level of [[build]]. */
-  private val LevelWidth = 3
+  private val Dims = Seq("dim_calendar", "dim_product", "dim_customer")
 
-  /** Run one dependency level: every branch on its own `pool` thread,
-    * then wait for all of them. The first failure (in completion order)
-    * is rethrown as the original exception once every branch has
-    * finished, with any later failures attached as suppressed.
+  /** fct_sales (facts.py:37-57): cleaning filters + inner dim joins
+    * (all three dims broadcast — they are entity-bounded). Both
+    * fct_sales and daily_fx_rates plan it.
     */
-  private def level(pool: ExecutorService)(branches: (() => Any)*): Unit = {
-    val done = new ExecutorCompletionService[Any](pool)
-    branches.foreach(b => done.submit(() => b()))
-    val failures = branches.flatMap { _ =>
-      try { done.take().get(); None }
-      catch { case e: ExecutionException => Some(e.getCause) }
-    }
-    failures.headOption.foreach { first =>
-      failures.tail.foreach(first.addSuppressed)
-      throw first
-    }
+  private def fct(d: Deps): DataFrame = {
+    import d.spark.implicits._
+    d.table("raw_retail_data")
+      .filter($"stock_code".isNotNull && $"stock_code" =!= "" &&
+        $"stock_code" =!= "nan" &&
+        $"unit_price_gbp".isNotNull && $"qty".isNotNull)
+      .withColumn("date", to_date($"invoice_ts"))
+      .withColumn("customer_id", coalesce($"customer_id", lit(-1.0)))
+      .join(broadcast(d.table("dim_calendar").select("date")), Seq("date"))
+      .join(broadcast(d.table("dim_product").select("stock_code")),
+        Seq("stock_code"))
+      .join(broadcast(d.table("dim_customer").select("customer_id")),
+        Seq("customer_id"))
+      .withColumn("gross_amount_gbp", $"qty" * $"unit_price_gbp")
+      .select("invoice_no", "stock_code", "customer_id", "date", "qty",
+        "unit_price_gbp", "gross_amount_gbp")
   }
 
-  private def buildTables(spark: SparkSession, cat: Catalog,
-                          pool: ExecutorService, xlsxPath: String,
-                          fxXmlPath: String, holidaysXlsPath: String): Unit = {
+  private def chain(spark: SparkSession, xlsxPath: String, fxXmlPath: String,
+                    holidaysXlsPath: String): Chain = {
     import spark.implicits._
-
-    // Level 1 — ingestion (retail_data.py / fx_data.py / holidays_data.py).
-    // Column renames mirror retail_data.py:44-56; strings arrive trimmed
-    // from the readers (the P2 contract).
-    level(pool)(
-      () => cat.save("raw_retail_data",
+    Chain(
+      // Ingestion (retail_data.py / fx_data.py / holidays_data.py).
+      // Column renames mirror retail_data.py:44-56; strings arrive
+      // trimmed from the readers (the P2 contract).
+      Table("raw_retail_data")(_ =>
         XlsxSource(xlsxPath, RetailSchema).load(spark)
           .select(
             col("Invoice").as("invoice_no"),
@@ -131,31 +123,30 @@ object RawRetailPipeline {
       // The two small sources are parsed on the driver. One partition
       // already satisfies the distinct's and the sort's distribution,
       // so each table is staged in one job with no Exchange.
-      () => cat.save("raw_fx_rates",
+      Table("raw_fx_rates")(_ =>
         XmlFxSource(fxXmlPath).load(spark).coalesce(1)
           .withColumnRenamed("rate", "gbp_per_eur")
           .orderBy("date")),
-      () => cat.save("raw_uk_holidays",
+      Table("raw_uk_holidays")(_ =>
         XlsSource(holidaysXlsPath, HolidaysSchema).load(spark).coalesce(1)
           .select(col("UK BANK HOLIDAYS").as("holiday_date"))
           .filter($"holiday_date".isNotNull)
-          .distinct().orderBy("holiday_date")))
+          .distinct().orderBy("holiday_date")),
 
-    // Level 2 — the three dimensions, each over the staged raw tables.
-    level(pool)(
       // dim_calendar (dimensions.py:27-95): month-extended range of the
       // raw data, gap-free series, weekend/iso/holiday flags.
-      () => {
-        val b = cat.table("raw_retail_data")
+      Table("dim_calendar", Seq("raw_retail_data", "raw_uk_holidays"),
+          sortBy = Seq("date")) { d =>
+        val b = d.table("raw_retail_data")
           .agg(min(to_date($"invoice_ts")), max(to_date($"invoice_ts"))).head()
         val (lo, hi) = (b.getDate(0).toLocalDate, b.getDate(1).toLocalDate)
         val calStart = java.sql.Date.valueOf(lo.withDayOfMonth(1))
         val calEnd = java.sql.Date.valueOf(
           hi.withDayOfMonth(1).plusMonths(1).minusDays(1))
         val series = Functions.dateSeries(spark, calStart, calEnd)
-        val holidaysInRange = cat.table("raw_uk_holidays")
+        val holidaysInRange = d.table("raw_uk_holidays")
           .filter($"holiday_date".between(calStart, calEnd))
-        val calendar = series.select(
+        series.select(
             $"date",
             Functions.isWeekend($"date").as("is_weekend"),
             Functions.isoYear($"date").cast("long").as("iso_year"),
@@ -168,7 +159,6 @@ object RawRetailPipeline {
           .join(broadcast(holidaysInRange), $"date" === $"holiday_date", "left")
           .withColumn("is_uk_holiday", $"holiday_date".isNotNull)
           .drop("holiday_date")
-        cat.save("dim_calendar", calendar, sortBy = Seq("date"))
       },
       // dim_product (dimensions.py:146-171): deterministic mode of
       // description + first/last seen, bad codes filtered. This is
@@ -177,7 +167,7 @@ object RawRetailPipeline {
       // two branches' final stages in the order their shuffles finish,
       // so their generated classes' stage ids (part of the codegen cache
       // key) swapped from build to build and were compiled again.
-      () => {
+      Table("dim_product", Seq("raw_retail_data"), sortBy = Seq("stock_code")) { d =>
         val goodCode = $"stock_code".isNotNull &&
           $"stock_code" =!= "" && $"stock_code" =!= "nan"
         val byCode = Window.partitionBy($"stock_code")
@@ -185,7 +175,7 @@ object RawRetailPipeline {
         // code with no description at all has no mode and no row
         val mode = byCode.orderBy($"description".isNull, $"n".desc,
           $"description".asc)
-        val product = cat.table("raw_retail_data").filter(goodCode)
+        d.table("raw_retail_data").filter(goodCode)
           .groupBy($"stock_code", $"description")
           .agg(count(lit(1)).as("n"), min(to_date($"invoice_ts")).as("lo"),
             max(to_date($"invoice_ts")).as("hi"))
@@ -195,95 +185,76 @@ object RawRetailPipeline {
             row_number().over(mode).as("rn"))
           .filter($"rn" === 1 && $"description".isNotNull)
           .drop("rn")
-        cat.save("dim_product", product, sortBy = Seq("stock_code"))
       },
       // dim_customer (dimensions.py:192-216): coalesce(-1) surrogate,
       // deterministic mode of country, UNKNOWN for the surrogate row.
-      () => {
-        val withSurrogate = cat.table("raw_retail_data")
+      Table("dim_customer", Seq("raw_retail_data"), sortBy = Seq("customer_id")) { d =>
+        val withSurrogate = d.table("raw_retail_data")
           .withColumn("customer_id", coalesce($"customer_id", lit(-1.0)))
-        val customer = Functions.modeDet(withSurrogate, Seq("customer_id"),
-            "country", "country")
+        Functions.modeDet(withSurrogate, Seq("customer_id"), "country", "country")
           .withColumn("country",
             when($"customer_id" === -1.0, lit("UNKNOWN")).otherwise($"country"))
-        cat.save("dim_customer", customer, sortBy = Seq("customer_id"))
-      })
+      },
 
-    // Level 3 — fct_sales (facts.py:37-57): cleaning filters + inner
-    // dim joins (all three dims broadcast — they are entity-bounded).
-    val fct = cat.table("raw_retail_data")
-      .filter($"stock_code".isNotNull && $"stock_code" =!= "" &&
-        $"stock_code" =!= "nan" &&
-        $"unit_price_gbp".isNotNull && $"qty".isNotNull)
-      .withColumn("date", to_date($"invoice_ts"))
-      .withColumn("customer_id", coalesce($"customer_id", lit(-1.0)))
-      .join(broadcast(cat.table("dim_calendar").select("date")), Seq("date"))
-      .join(broadcast(cat.table("dim_product").select("stock_code")),
-        Seq("stock_code"))
-      .join(broadcast(cat.table("dim_customer").select("customer_id")),
-        Seq("customer_id"))
-      .withColumn("gross_amount_gbp", $"qty" * $"unit_price_gbp")
-      .select("invoice_no", "stock_code", "customer_id", "date", "qty",
-        "unit_price_gbp", "gross_amount_gbp")
-    level(pool)(
-      () => cat.save("fct_sales", fct, sortBy = Seq("date", "invoice_no")),
+      Table("fct_sales", "raw_retail_data" +: Dims,
+        sortBy = Seq("date", "invoice_no"))(fct),
       // daily_fx_rates (facts.py:153-202): gap-free series over the FCT
       // date range (taken from the fct plan, so it need not wait for the
       // fct_sales write), forward-filled, leading-null dates dropped.
-      () => {
-        val fb = fct.agg(min($"date"), max($"date")).head()
-        val rates = Functions.forwardFill(
+      Table("daily_fx_rates", "raw_retail_data" +: Dims :+ "raw_fx_rates",
+          sortBy = Seq("date")) { d =>
+        val fb = fct(d).agg(min($"date"), max($"date")).head()
+        Functions.forwardFill(
             Functions.dateSeries(spark, fb.getDate(0), fb.getDate(1))
-              .join(cat.table("raw_fx_rates")
+              .join(d.table("raw_fx_rates")
                 .withColumnRenamed("gbp_per_eur", "rate_raw"), Seq("date"), "left"),
             "date", "rate_raw", "gbp_per_eur")
           .select($"date", $"gbp_per_eur")
           .filter($"gbp_per_eur".isNotNull)
-        cat.save("daily_fx_rates", rates, sortBy = Seq("date"))
+      },
+
+      // fct_sales_eur (facts.py:258-288): GBP→EUR conversion through the
+      // daily rate (date-bounded broadcast join).
+      Table("fct_sales_eur", Seq("fct_sales", "daily_fx_rates"),
+          sortBy = Seq("date", "invoice_no")) { d =>
+        d.table("fct_sales")
+          .join(broadcast(d.table("daily_fx_rates")), Seq("date"))
+          .select($"invoice_no", $"stock_code", $"customer_id", $"date", $"qty",
+            $"unit_price_gbp",
+            ($"unit_price_gbp" / $"gbp_per_eur").as("unit_price_eur"),
+            $"gross_amount_gbp",
+            ($"gross_amount_gbp" / $"gbp_per_eur").as("gross_amount_eur"),
+            $"gbp_per_eur".as("fx_rate_used"))
+      },
+
+      // agg_country_day (facts.py:349-421): fct ⋈ fct_eur on the
+      // composite line key, dims re-attached, per-(date, country) rollup
+      // with the calendar context columns.
+      Table("agg_country_day",
+          Seq("fct_sales", "fct_sales_eur", "dim_customer", "dim_calendar"),
+          sortBy = Seq("date", "country")) { d =>
+        val fe = d.table("fct_sales_eur")
+          .select($"invoice_no", $"stock_code", $"date", $"customer_id",
+            $"gross_amount_eur")
+        d.table("fct_sales")
+          .join(fe, Seq("invoice_no", "stock_code", "date", "customer_id"))
+          .join(broadcast(d.table("dim_customer")), Seq("customer_id"))
+          .join(broadcast(d.table("dim_calendar")
+            .select($"date", $"is_weekend", $"is_uk_holiday", $"iso_week",
+              $"iso_year", $"month", $"year")), Seq("date"))
+          .groupBy($"date", $"country", $"is_weekend", $"is_uk_holiday",
+            $"iso_week", $"iso_year", $"month", $"year")
+          .agg(
+            countDistinct(when(!$"invoice_no".like("C%"), $"invoice_no"))
+              .as("orders"),
+            count(lit(1)).as("items"),
+            sum($"qty").as("net_qty"),
+            Functions.dsum($"gross_amount_gbp").as("net_revenue_gbp"),
+            Functions.dsum($"gross_amount_eur").as("net_revenue_eur"))
+          .select($"date", $"country", $"orders", $"items", $"net_qty",
+            $"net_revenue_gbp", $"net_revenue_eur", $"is_weekend",
+            $"is_uk_holiday", $"iso_week", $"iso_year", $"month", $"year")
       })
-
-    // Level 4 — fct_sales_eur (facts.py:258-288): GBP→EUR conversion
-    // through the daily rate (date-bounded broadcast join).
-    val eur = cat.table("fct_sales")
-      .join(broadcast(cat.table("daily_fx_rates")), Seq("date"))
-      .select($"invoice_no", $"stock_code", $"customer_id", $"date", $"qty",
-        $"unit_price_gbp",
-        ($"unit_price_gbp" / $"gbp_per_eur").as("unit_price_eur"),
-        $"gross_amount_gbp",
-        ($"gross_amount_gbp" / $"gbp_per_eur").as("gross_amount_eur"),
-        $"gbp_per_eur".as("fx_rate_used"))
-    cat.save("fct_sales_eur", eur, sortBy = Seq("date", "invoice_no"))
-
-    // Level 5 — agg_country_day (facts.py:349-421): fct ⋈ fct_eur on
-    // the composite line key, dims re-attached, per-(date, country)
-    // rollup with the calendar context columns.
-    val f = cat.table("fct_sales")
-    val fe = cat.table("fct_sales_eur")
-      .select($"invoice_no", $"stock_code", $"date", $"customer_id",
-        $"gross_amount_eur")
-    val agg = f
-      .join(fe, Seq("invoice_no", "stock_code", "date", "customer_id"))
-      .join(broadcast(cat.table("dim_customer")), Seq("customer_id"))
-      .join(broadcast(cat.table("dim_calendar")
-        .select($"date", $"is_weekend", $"is_uk_holiday", $"iso_week",
-          $"iso_year", $"month", $"year")), Seq("date"))
-      .groupBy($"date", $"country", $"is_weekend", $"is_uk_holiday",
-        $"iso_week", $"iso_year", $"month", $"year")
-      .agg(
-        countDistinct(when(!$"invoice_no".like("C%"), $"invoice_no"))
-          .as("orders"),
-        count(lit(1)).as("items"),
-        sum($"qty").as("net_qty"),
-        Functions.dsum($"gross_amount_gbp").as("net_revenue_gbp"),
-        Functions.dsum($"gross_amount_eur").as("net_revenue_eur"))
-      .select($"date", $"country", $"orders", $"items", $"net_qty",
-        $"net_revenue_gbp", $"net_revenue_eur", $"is_weekend",
-        $"is_uk_holiday", $"iso_week", $"iso_year", $"month", $"year")
-    cat.save("agg_country_day", agg, sortBy = Seq("date", "country"))
-
-    // The monthly view (the reference's
-    // sql/views/monthly_sales_summary.sql:5-41).
-    cat.createView("v_monthly_sales_summary", monthlyView(spark, cat)): Unit
   }
 
   /** The reference view, column-for-column (rounded ratio columns

@@ -5,14 +5,15 @@ import org.apache.spark.sql.functions._
 import graft.engine.{Catalog, Functions, Graft}
 
 /** The reference's end-to-end staged pipeline re-expressed over the
-  * testdata star schema: 8 materialization barriers (staging → dims →
-  * facts → rollup → view), mirroring `/root/reference/src/run.py:50-87`.
+  * testdata star schema: 8 tables (staging → dims → facts → rollup),
+  * then the view, mirroring the reference's `src/run.py:50-87`.
   *
-  * The reference's dataflow is preserved — each phase writes a table the
-  * next phase re-scans (deliberate staged materialization, SURVEY.md §4)
-  * — while the operators inside each phase are idiomatic Spark: broadcast
-  * dim joins, window forward-fill, fold-mutation-into-join for the
-  * holiday flag, `mode` recomputed deterministically.
+  * The reference's dataflow is preserved — each table is written and
+  * the tables that read it re-scan it (deliberate staged
+  * materialization, SURVEY.md §4) — while the operators inside each
+  * table are idiomatic Spark: broadcast dim joins, window forward-fill,
+  * fold-mutation-into-join for the holiday flag, `mode` recomputed
+  * deterministically.
   *
   * Scale notes: facts write `partitionBy("year")` so date-ranged scans
   * prune; dims are small by construction (broadcast in every join);
@@ -21,162 +22,150 @@ import graft.engine.{Catalog, Functions, Graft}
   */
 object RetailPipeline {
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Build every table; returns the catalog. Mirrors run.py's phase
-    * order, including the driver-side barriers where query results feed
-    * the next phase's plan (calendar + FX date bounds, SURVEY.md §3.1).
+  /** Build every table of the [[Chain]]; returns the catalog. Where a
+    * query result feeds a plan (the calendar and FX date bounds,
+    * SURVEY.md §3.1) it runs inside that table's plan.
     *
-    * Per-stage observability (the reference logs row counts + previews
-    * after every CTAS, retail_data.py:72-89): each barrier records
-    * (stage, rows, elapsed_ms), logged as it completes and materialized
-    * as the `pipeline_build_report` table — one row per CTAS stage.
+    * Per-table observability (the reference logs row counts + previews
+    * after every CTAS, retail_data.py:72-89): the last table,
+    * `pipeline_build_report`, holds one row per CTAS stage (stage,
+    * rows, write_ms, wait_ms), its rows read from the committed
+    * parquet footers with no Spark job.
     */
-  def build(spark: SparkSession, sfDir: String, warehouse: String): Catalog = {
-    import spark.implicits._
+  def build(spark: SparkSession, sfDir: String, warehouse: String): Catalog =
+    buildWithReport(spark, sfDir, warehouse)._1
+
+  /** [[build]], with each table's span and the build's critical path. */
+  private[graft] def buildWithReport(spark: SparkSession, sfDir: String,
+                                     warehouse: String): (Catalog, Chain.Report) = {
     val cat = new Catalog(spark, warehouse)
-
-    val report =
-      scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Long)]
-    def stage(name: String)(body: => DataFrame): DataFrame = {
-      val t0 = System.nanoTime()
-      val written = body
-      val writeMs = (System.nanoTime() - t0) / 1000000 // the CTAS itself
-      val rows = written.count()       // counts the materialized parquet
-      val countMs = (System.nanoTime() - t0) / 1000000 - writeMs
-      log.info(s"pipeline stage $name: $rows rows in $writeMs ms " +
-        s"(+$countMs ms count)")
-      report += ((name, rows, writeMs, countMs))
-      written
-    }
-
-    // Phase 1 — staging (P1 renames, D1 casts; S1-analog ingestion is
-    // exercised separately via Sources).
-    val o = Graft.table(spark, sfDir, "orders")
-    val cu = Graft.table(spark, sfDir, "customer")
-    val na = Graft.table(spark, sfDir, "nation")
-    stage("raw_sales") { cat.save("raw_sales", rawSales(spark, sfDir)) }
-
-    // Phase 2 — dimensions.
-    val b = cat.table("raw_sales")
-      .agg(min(to_date($"invoice_ts")), max(to_date($"invoice_ts"))).head()
-    val (lo, hi) = (b.getDate(0), b.getDate(1))          // driver barrier
-    val series = Functions.dateSeries(spark, lo, hi)
-    val holidays = series.select(trunc($"date", "month").as("holiday_date"))
-      .distinct()                                        // pseudo-holiday set
-    val calendar = series
-      .select($"date",
-        Functions.dowSun0($"date").cast("long").as("day_of_week"),
-        Functions.isWeekend($"date").as("is_weekend"),
-        Functions.isoYear($"date").cast("long").as("iso_year"),
-        Functions.isoWeek($"date").cast("long").as("iso_week"),
-        month($"date").cast("long").as("month"),
-        year($"date").cast("long").as("year"),
-        Functions.dayName($"date").as("day_name"),
-        Functions.monthName($"date").as("month_name"))
-      .join(broadcast(holidays), $"date" === $"holiday_date", "left")
-      .withColumn("is_holiday", $"holiday_date".isNotNull)  // M1 as join
-      .drop("holiday_date")
-    stage("dim_calendar") {
-      cat.save("dim_calendar", calendar, sortBy = Seq("date"))
-    }
-
-    val product = Functions.modeDet(
-        cat.table("raw_sales").filter($"stock_code".isNotNull),
-        Seq("stock_code"), "description", "description")
-      .join(cat.table("raw_sales").groupBy($"stock_code")
-        .agg(min(to_date($"invoice_ts")).as("first_seen"),
-          max(to_date($"invoice_ts")).as("last_seen")), Seq("stock_code"))
-    stage("dim_product") {
-      cat.save("dim_product", product, sortBy = Seq("stock_code"))
-    }
-
-    // The UNKNOWN (-1) surrogate row is always present, so facts whose
-    // customer_id coalesces to -1 survive the inner dim join instead of
-    // being silently dropped (dimensions.py:206 analog).
-    val customerReal = Functions.modeDet(
-        customerCountry(cu, na), Seq("customer_id"), "country", "country")
-    val unknownRow = Seq((-1L, "UNKNOWN")).toDF("customer_id", "country")
-      .join(customerReal.filter($"customer_id" === -1L),
-        Seq("customer_id"), "left_anti")
-    val customer = customerReal.unionByName(unknownRow)
-    stage("dim_customer") {
-      cat.save("dim_customer", customer, sortBy = Seq("customer_id"))
-    }
-
-    // Phase 3 — facts.
-    val fct = cat.table("raw_sales")
-      .withColumn("date", to_date($"invoice_ts"))
-      .filter($"stock_code".isNotNull && $"qty".isNotNull &&
-        $"unit_price".isNotNull)
-      .join(broadcast(cat.table("dim_calendar").select("date")), Seq("date"))
-      .join(broadcast(cat.table("dim_product").select("stock_code")),
-        Seq("stock_code"))
-      .withColumn("customer_id", coalesce($"customer_id", lit(-1L)))
-      .join(broadcast(cat.table("dim_customer").select("customer_id")),
-        Seq("customer_id"))
-      .withColumn("net_amount", $"qty" * $"unit_price")
-      .withColumn("year", year($"date").cast("int"))
-    stage("fct_sales") {
-      cat.save("fct_sales", fct, sortBy = Seq("date", "invoice_no"),
-        partitionBy = Seq("year"))
-    }
-
-    // daily FX-style rates: sparse per-date value forward-filled over a
-    // gap-free series (J4 + W1).
-    val fb = cat.table("fct_sales").agg(min($"date"), max($"date")).head()
-    val rateDaily = dailyRates(o).withColumnRenamed("rate", "rate_raw")
-    val rates = Functions.forwardFill(
-        Functions.dateSeries(spark, fb.getDate(0), fb.getDate(1))
-          .join(rateDaily, Seq("date"), "left"),
-        "date", "rate_raw", "rate")
-      .select($"date", $"rate")
-    stage("daily_fx_rates") {
-      cat.save("daily_fx_rates", rates, sortBy = Seq("date"))
-    }
-
-    val eur = cat.table("fct_sales")
-      .join(broadcast(cat.table("daily_fx_rates")), Seq("date"))
-      .withColumn("net_amount_eur", $"net_amount" / $"rate")
-      .drop("rate")
-    stage("fct_sales_eur") {
-      cat.save("fct_sales_eur", eur, sortBy = Seq("date", "invoice_no"),
-        partitionBy = Seq("year"))
-    }
-
-    // Phase 4 — rollup: fct ⋈ fct_eur on the composite key (J6), dims
-    // re-attached (J7), the full 8-key daily group the reference carries
-    // (facts.py:369-411: date, country + 6 calendar attrs — every attr
-    // is functionally determined by date, so the extra keys widen the
-    // table contract without changing group granularity) plus net_qty.
-    val f = cat.table("fct_sales").as("f")
-    val fe = cat.table("fct_sales_eur")
-      .select($"invoice_no", $"stock_code", $"date", $"customer_id",
-        $"net_amount_eur").as("fe")
-    val agg = f.join(fe, Seq("invoice_no", "stock_code", "date", "customer_id"))
-      .join(broadcast(cat.table("dim_customer")), Seq("customer_id"))
-      .join(broadcast(cat.table("dim_calendar")
-        .select($"date", $"is_weekend", $"is_holiday", $"iso_week",
-          $"iso_year", $"year".as("cal_year"), $"month")), Seq("date"))
-      .groupBy($"date", $"country", $"is_weekend", $"is_holiday",
-        $"iso_week", $"iso_year", $"month", $"cal_year".as("year"))
-      .agg(
-        countDistinct(when($"status" =!= "F", $"invoice_no")).as("orders"),
-        count(lit(1)).as("items"),
-        Functions.dsum($"qty").as("net_qty"),
-        Functions.dsum($"net_amount").as("net_revenue"),
-        Functions.dsum($"net_amount_eur").as("net_revenue_eur"))
-    stage("agg_country_day") {
-      cat.save("agg_country_day", agg, sortBy = Seq("date", "country"))
-    }
-
+    val report = chain(spark, sfDir).run(cat)
     // Phase 5 — the monthly view (S7; G6/P8/P14).
     cat.createView("v_monthly_sales_summary",
       monthlyFromAgg(spark, cat.table("agg_country_day")))
+    (cat, report)
+  }
 
-    cat.save("pipeline_build_report",
-      report.toSeq.toDF("stage", "rows", "write_ms", "count_ms"))
-    cat
+  private def chain(spark: SparkSession, sfDir: String): Chain = {
+    import spark.implicits._
+    val stages = Seq(
+      // Phase 1 — staging (P1 renames, D1 casts; S1-analog ingestion is
+      // exercised separately via Sources).
+      Table("raw_sales")(_ => rawSales(spark, sfDir)),
+
+      // Phase 2 — dimensions.
+      Table("dim_calendar", Seq("raw_sales"), sortBy = Seq("date")) { d =>
+        val b = d.table("raw_sales")
+          .agg(min(to_date($"invoice_ts")), max(to_date($"invoice_ts"))).head()
+        val series = Functions.dateSeries(spark, b.getDate(0), b.getDate(1))
+        val holidays = series.select(trunc($"date", "month").as("holiday_date"))
+          .distinct()                                        // pseudo-holiday set
+        series
+          .select($"date",
+            Functions.dowSun0($"date").cast("long").as("day_of_week"),
+            Functions.isWeekend($"date").as("is_weekend"),
+            Functions.isoYear($"date").cast("long").as("iso_year"),
+            Functions.isoWeek($"date").cast("long").as("iso_week"),
+            month($"date").cast("long").as("month"),
+            year($"date").cast("long").as("year"),
+            Functions.dayName($"date").as("day_name"),
+            Functions.monthName($"date").as("month_name"))
+          .join(broadcast(holidays), $"date" === $"holiday_date", "left")
+          .withColumn("is_holiday", $"holiday_date".isNotNull)  // M1 as join
+          .drop("holiday_date")
+      },
+      Table("dim_product", Seq("raw_sales"), sortBy = Seq("stock_code")) { d =>
+        Functions.modeDet(
+            d.table("raw_sales").filter($"stock_code".isNotNull),
+            Seq("stock_code"), "description", "description")
+          .join(d.table("raw_sales").groupBy($"stock_code")
+            .agg(min(to_date($"invoice_ts")).as("first_seen"),
+              max(to_date($"invoice_ts")).as("last_seen")), Seq("stock_code"))
+      },
+      // The UNKNOWN (-1) surrogate row is always present, so facts whose
+      // customer_id coalesces to -1 survive the inner dim join instead of
+      // being silently dropped (dimensions.py:206 analog).
+      Table("dim_customer", sortBy = Seq("customer_id")) { _ =>
+        val customerReal = Functions.modeDet(
+            customerCountry(Graft.table(spark, sfDir, "customer"),
+              Graft.table(spark, sfDir, "nation")),
+            Seq("customer_id"), "country", "country")
+        val unknownRow = Seq((-1L, "UNKNOWN")).toDF("customer_id", "country")
+          .join(customerReal.filter($"customer_id" === -1L),
+            Seq("customer_id"), "left_anti")
+        customerReal.unionByName(unknownRow)
+      },
+
+      // Phase 3 — facts.
+      Table("fct_sales", Seq("raw_sales", "dim_calendar", "dim_product",
+          "dim_customer"), sortBy = Seq("date", "invoice_no"),
+          partitionBy = Seq("year")) { d =>
+        d.table("raw_sales")
+          .withColumn("date", to_date($"invoice_ts"))
+          .filter($"stock_code".isNotNull && $"qty".isNotNull &&
+            $"unit_price".isNotNull)
+          .join(broadcast(d.table("dim_calendar").select("date")), Seq("date"))
+          .join(broadcast(d.table("dim_product").select("stock_code")),
+            Seq("stock_code"))
+          .withColumn("customer_id", coalesce($"customer_id", lit(-1L)))
+          .join(broadcast(d.table("dim_customer").select("customer_id")),
+            Seq("customer_id"))
+          .withColumn("net_amount", $"qty" * $"unit_price")
+          .withColumn("year", year($"date").cast("int"))
+      },
+      // daily FX-style rates: sparse per-date value forward-filled over a
+      // gap-free series (J4 + W1).
+      Table("daily_fx_rates", Seq("fct_sales"), sortBy = Seq("date")) { d =>
+        val fb = d.table("fct_sales").agg(min($"date"), max($"date")).head()
+        val rateDaily = dailyRates(Graft.table(spark, sfDir, "orders"))
+          .withColumnRenamed("rate", "rate_raw")
+        Functions.forwardFill(
+            Functions.dateSeries(spark, fb.getDate(0), fb.getDate(1))
+              .join(rateDaily, Seq("date"), "left"),
+            "date", "rate_raw", "rate")
+          .select($"date", $"rate")
+      },
+      Table("fct_sales_eur", Seq("fct_sales", "daily_fx_rates"),
+          sortBy = Seq("date", "invoice_no"), partitionBy = Seq("year")) { d =>
+        d.table("fct_sales")
+          .join(broadcast(d.table("daily_fx_rates")), Seq("date"))
+          .withColumn("net_amount_eur", $"net_amount" / $"rate")
+          .drop("rate")
+      },
+
+      // Phase 4 — rollup: fct ⋈ fct_eur on the composite key (J6), dims
+      // re-attached (J7), the full 8-key daily group the reference
+      // carries (facts.py:369-411: date, country + 6 calendar attrs —
+      // every attr is functionally determined by date, so the extra keys
+      // widen the table contract without changing group granularity)
+      // plus net_qty.
+      Table("agg_country_day", Seq("fct_sales", "fct_sales_eur",
+          "dim_customer", "dim_calendar"), sortBy = Seq("date", "country")) { d =>
+        val f = d.table("fct_sales").as("f")
+        val fe = d.table("fct_sales_eur")
+          .select($"invoice_no", $"stock_code", $"date", $"customer_id",
+            $"net_amount_eur").as("fe")
+        f.join(fe, Seq("invoice_no", "stock_code", "date", "customer_id"))
+          .join(broadcast(d.table("dim_customer")), Seq("customer_id"))
+          .join(broadcast(d.table("dim_calendar")
+            .select($"date", $"is_weekend", $"is_holiday", $"iso_week",
+              $"iso_year", $"year".as("cal_year"), $"month")), Seq("date"))
+          .groupBy($"date", $"country", $"is_weekend", $"is_holiday",
+            $"iso_week", $"iso_year", $"month", $"cal_year".as("year"))
+          .agg(
+            countDistinct(when($"status" =!= "F", $"invoice_no")).as("orders"),
+            count(lit(1)).as("items"),
+            Functions.dsum($"qty").as("net_qty"),
+            Functions.dsum($"net_amount").as("net_revenue"),
+            Functions.dsum($"net_amount_eur").as("net_revenue_eur"))
+      })
+    // one row per CTAS stage: its committed rows, its write and its wait
+    // on dependencies
+    val names = stages.map(_.name)
+    new Chain(stages :+ Table("pipeline_build_report", names) { d =>
+      names.map(n => (n, d.rows(n), d.span(n).runMs, d.span(n).waitMs))
+        .toDF("stage", "rows", "write_ms", "wait_ms")
+    })
   }
 
   /** The reference view's full column contract

@@ -70,17 +70,12 @@ object EventsStream {
     math.min(32L, math.max(4L, rows * stateFactor / 100000L)).toInt
   }
 
-  /** Source row count for the state sizing above, memoized per
-    * (session, dir): it is a constant of the corpus, and un-memoized
-    * every one-shot replay paid a count job for it before its stream
-    * even started (r19 — the streaming rows are fixed-overhead-bound
-    * at bench scale, measured flat from sf0.001 to sf0.1).
+  /** Source row count for the state sizing above, summed from the
+    * parquet footers on the driver: no Spark job, so a one-shot replay
+    * pays none before its stream starts.
     */
-  private val rowsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def eventRows(spark: SparkSession, dir: String): Long =
-    rowsMemo.computeIfAbsent(s"${spark.sparkContext.applicationId}:$dir",
-      _ => Parquet.read(spark, s"$dir/events.parquet").count()).longValue()
+    Parquet.rowCount(spark, s"$dir/events.parquet")
 
   /** Streaming source over the events parquet, normalized through the
     * SAME type-tolerant reader as the batch side

@@ -28,6 +28,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * `.parquet(`. A bare reader infers the data schema with a Spark job
   * of its own; the helper reads one footer on the driver.
   *
+  * A build lint keeps one runner for the declared chains: under
+  * `pipeline/`, only `Chain` creates a thread pool, and the two retail
+  * builders neither save a table nor run a `count()` themselves, so
+  * every table they write is a declared `Table` of their chain.
+  *
   * A session lint keeps one session config: under `src/main` only
   * `Graft.session` calls `SparkSession.builder()`, and under `src/test`
   * only `SparkTestSession`. A session built anywhere else misses
@@ -185,6 +190,51 @@ class StoreSeamSpec extends AnyFunSuite {
     }
     assert(found.isEmpty,
       s"parquet reads outside engine/Parquet:\n  ${found.mkString("\n  ")}")
+  }
+
+  private val Pool = Seq(
+    """\bExecutors\s*\.\s*new\w+""".r,
+    """\bnew\s+(?:ThreadPoolExecutor|ScheduledThreadPoolExecutor|ForkJoinPool)\b""".r)
+
+  private val BuilderStep = Seq(
+    """\.\s*save\w*\s*\(""".r,
+    """\.\s*count\s*\(\s*\)""".r)
+
+  private def flags(ops: Seq[scala.util.matching.Regex])(line: String): Boolean =
+    ops.exists(_.findFirstIn(code(line)).isDefined)
+
+  test("the build lint flags pools, saves and count() jobs, not comments " +
+      "or aggregate functions") {
+    Seq("val pool = Executors.newFixedThreadPool(LevelWidth)",
+      "java.util.concurrent.Executors . newCachedThreadPool()",
+      "val ex = new ThreadPoolExecutor(2, 2, 0L, TimeUnit.SECONDS, q)",
+      "new ForkJoinPool(4)").foreach(l => assert(flags(Pool)(l), l))
+    Seq("// Executors.newFixedThreadPool in a comment",
+      "import java.util.concurrent.{CompletableFuture, Executors}",
+      "  * one Executors.newFixedThreadPool thread per table")
+      .foreach(l => assert(!flags(Pool)(l), l))
+    Seq("() => cat.save(\"raw_fx_rates\",",
+      "stage(\"dim_calendar\") { cat.save(\"dim_calendar\", calendar, sortBy = Seq(\"date\")) }",
+      "cat.saveStaged(name, df)",
+      "val rows = written.count()",
+      "cat.table(\"x\").count ( )").foreach(l => assert(flags(BuilderStep)(l), l))
+    Seq(".agg(count(lit(1)).as(\"n\"), min(to_date($\"invoice_ts\")).as(\"lo\"),",
+      "countDistinct(when(!$\"invoice_no\".like(\"C%\"), $\"invoice_no\"))",
+      "// each table is written by cat.save( in the runner, not here",
+      "Table(\"fct_sales\", \"raw_retail_data\" +: Dims)(fct),")
+      .foreach(l => assert(!flags(BuilderStep)(l), l))
+  }
+
+  test("only the Chain runner creates a thread pool under pipeline/, and the " +
+      "retail builders neither save tables nor count rows themselves") {
+    val runner = Pipeline.resolve("Chain.scala")
+    assert(Files.isRegularFile(runner), s"run from the repository root: $runner")
+    val pools = hits(scalaFiles(Pipeline).filterNot(_ == runner), flags(Pool))
+    assert(pools.isEmpty, s"thread pools outside the runner:\n  ${pools.mkString("\n  ")}")
+    val builders = Seq("RawRetailPipeline.scala", "RetailPipeline.scala").map(Pipeline.resolve)
+    val steps = hits(builders, flags(BuilderStep))
+    assert(steps.isEmpty,
+      s"tables written or counted outside the chain:\n  ${steps.mkString("\n  ")}")
   }
 
   private val Builder = """\bSparkSession\s*\.\s*builder\b""".r
